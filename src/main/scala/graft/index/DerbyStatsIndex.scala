@@ -1426,7 +1426,29 @@ object DerbyStatsIndex {
   // SCHEMA only — the template holds zero data rows, so no result or
   // statistic is carried across runs; every catalog's content still comes
   // entirely from the run's own ingest.
-  private val templates = scala.collection.mutable.HashMap.empty[String, String]
+  private val templates = scala.collection.mutable.HashMap.empty[String, java.nio.file.Path]
+
+  /** Copy the per-JVM template database for `key` to `dst` (which must
+    * not exist yet), creating the template first with `create` (given
+    * the template's path) if this JVM has none. The template is shut down
+    * before it is copied, and a shutdown hook deletes it with the JVM.
+    * Shared by the stats catalog and the posting catalog. */
+  private[index] def fromTemplate(key: String, dst: java.nio.file.Path)(
+      create: String => Unit): Unit = {
+    val tmpl = templates.synchronized {
+      templates.getOrElseUpdate(key, {
+        ensureDriver()
+        val root = java.nio.file.Files.createTempDirectory("graft-derby-tmpl")
+        Runtime.getRuntime.addShutdownHook(new Thread(() =>
+          org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)))
+        val t = root.resolve("db")
+        create(t.toString)
+        shutdownDatabase(t.toString) // a booted source dir must not be copied live
+        t
+      })
+    }
+    copyTree(tmpl, dst)
+  }
 
   /** A fresh, EMPTY, fully-initialized catalog at `dbPath` (equivalent to
     * `new DerbyStatsIndex(...)` + `initialize(schema)`), served from the
@@ -1435,20 +1457,13 @@ object DerbyStatsIndex {
       bloomCols: Set[String] = Set.empty,
       plannerSideBloomProbe: Boolean = false,
       maxPlannerProbeRowGroups: Int = 16384): DerbyStatsIndex = {
-    val key = schema.json + "|" + bloomCols.toSeq.sorted.mkString(",") +
+    val key = "stats|" + schema.json + "|" + bloomCols.toSeq.sorted.mkString(",") +
       "|" + plannerSideBloomProbe
-    val tmpl = templates.synchronized {
-      templates.getOrElseUpdate(key, {
-        val t = java.nio.file.Files.createTempDirectory("graft-derby-tmpl")
-          .resolve("db").toString
-        val ix = new DerbyStatsIndex(t, schema, bloomCols, plannerSideBloomProbe)
-        ix.initialize(schema)
-        ix.close()
-        shutdownDatabase(t) // a booted source dir must not be copied live
-        t
-      })
+    fromTemplate(key, java.nio.file.Paths.get(dbPath)) { t =>
+      val ix = new DerbyStatsIndex(t, schema, bloomCols, plannerSideBloomProbe)
+      ix.initialize(schema)
+      ix.close()
     }
-    copyTree(java.nio.file.Paths.get(tmpl), java.nio.file.Paths.get(dbPath))
     new DerbyStatsIndex(dbPath, schema, bloomCols, plannerSideBloomProbe,
       maxPlannerProbeRowGroups)
   }
@@ -1487,8 +1502,10 @@ object DerbyStatsIndex {
     * collation. Prefixes stay sound: Derby pads the shorter operand with
     * spaces (0x20), which sort below every hex digit, so a prefix orders
     * before its extensions — exactly byte-lexicographic order. */
-  private[graft] def hex(s: String): String = {
-    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private[graft] def hex(s: String): String =
+    hex(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  private[graft] def hex(bytes: Array[Byte]): String = {
     val sb = new java.lang.StringBuilder(bytes.length * 2)
     bytes.foreach { b =>
       sb.append("0123456789ABCDEF".charAt((b >> 4) & 0xF))

@@ -1,9 +1,9 @@
 package graft.index
 
 import graft.sources.RowGroupSkipScan
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.collection.immutable.SortedSet
 
@@ -11,7 +11,8 @@ import scala.collection.immutable.SortedSet
   * (/root/reference/sqlx-sqlite/src/index.rs:30-35: a precise key ->
   * (file, row_group) index instead of min/max ranges): for a chosen key
   * column, the exact posting list of row groups containing each distinct
-  * key, stored as a lake-native parquet table sorted by key.
+  * key, held in a relational catalog ([[PostingCatalog]]: an embedded
+  * Derby database at the index directory, B-tree on the key).
   *
   * Min/max pruning keeps a row group whenever the key falls inside its
   * range; the row-level index keeps it only if the key actually OCCURS —
@@ -19,24 +20,28 @@ import scala.collection.immutable.SortedSet
   * scanning many row groups and scanning one.
   *
   * Scale notes: the index is built in one distributed pass (each row-group
-  * split scans its own keys), is O(distinct keys x row groups containing
-  * them), and lookups are a pushdown-filtered read of the (small, sorted)
-  * index table — O(index), never O(data).
+  * split scans its own keys and executors insert their postings over
+  * their own JDBC connections), is O(distinct keys x row groups containing
+  * them), and every lookup is one prepared catalog query down the key
+  * B-tree — O(postings returned), never O(data), and no Spark job.
   */
 object RowLevelIndex {
 
   /** Build the index for `keyCol` over the files in `plans` (one entry per
-    * row group, from the stats index), writing to `indexDir`.
+    * row group, from the stats index) into a fresh catalog at `indexDir`,
+    * replacing whatever the directory held.
     *
-    * ONE distributed job whose plan is O(1) in row-group count: a single
-    * scan with one partition per row group (`mergeRuns=false`, pruned to
-    * the key column), per-partition-distinct (key, partition-id) pairs, a
-    * broadcast join against the tiny partition-id → (file, row_group)
-    * mapping, and a range-partitioned sorted write (so point lookups
-    * pushdown-prune index files by key min/max). A 100 TB table's ~10⁶ row
-    * groups are just 10⁶ partitions of the one scan — no per-row-group
-    * plan nodes, no single-task write.
-    */
+    * ONE distributed job of one stage, whose plan is O(1) in row-group
+    * count: a single scan with one partition per row group
+    * (`mergeRuns=false`, pruned to the key column), a broadcast join
+    * against the tiny partition-id → (file, row_group) mapping, a sort
+    * within each partition, and an executor-side insert of each
+    * partition's distinct postings — no shuffle. The key B-tree is
+    * built once after the bulk load; the catalog's completion marker is
+    * written last. A 100 TB table's ~10⁶ row groups are just 10⁶
+    * partitions of the one scan — no per-row-group plan nodes, no
+    * single-task write. A key type the catalog cannot store is refused
+    * before any job runs. */
   def build(
       spark: SparkSession,
       dir: String,
@@ -45,68 +50,79 @@ object RowLevelIndex {
       keyCol: String,
       indexDir: String,
       withRowNumbers: Boolean = false): Unit = {
-    buildPlan(spark, dir, plans, dataSchema, keyCol, withRowNumbers)
-      .write.mode("overwrite").parquet(indexDir)
-    writeCoverage(spark, indexDir, plans.map(_.fileName))
-  }
-
-  /** Coverage manifest: the DATA files this posting index was built over,
-    * one name per line in `<indexDir>/_covered` (underscore-prefixed ⇒
-    * invisible to parquet readers). Routing consults it so a STALE index
-    * — built before an append or compaction changed the file set — can
-    * only degrade to over-scan, never silently prune files it has no
-    * postings for. Deriving coverage from the posting table itself would
-    * be wrong: a file absent from the postings is indistinguishable from
-    * a covered file whose keys are all null. */
-  private def writeCoverage(
-      spark: SparkSession, indexDir: String, fileNames: Seq[String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir, "_covered")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(fileNames.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    PostingCatalog.create(indexDir, keyCol, dataSchema(keyCol).dataType, withRowNumbers)
+    load(spark, dir, plans, dataSchema, keyCol, indexDir, withRowNumbers)
+    PostingCatalog.seal(indexDir, plans.map(_.fileName))
   }
 
   /** Incremental build: postings for `newPlans` (files NOT yet covered)
-    * appended to an existing posting table, manifest updated to the
-    * union — O(new files) work, the streaming-sink maintenance path.
-    * Appending doesn't preserve the table's global key sort, but lookups
-    * are pushdown-filtered reads (sortedness only sharpens file pruning
-    * within the index itself); a periodic [[build]] re-sorts. Replay-safe:
-    * duplicate postings collapse in the lookup's per-file set union, and
-    * postings for since-deleted files are never consulted (intersection
-    * is keyed by the LIVE stats-plan file names). */
+    * inserted into the existing catalog, then the files added to its
+    * covered set — O(new files) work, the streaming-sink, compaction and
+    * MERGE maintenance path. The postings take the catalog's own shape:
+    * a catalog built with row numbers gets row numbers for the new files
+    * too. Postings land before coverage, so a crash in between leaves the
+    * new files uncovered (routing degrades, never prunes them). With no
+    * complete catalog at `indexDir` yet, this is a compact [[build]] over
+    * `newPlans`. Replay-safe: a replayed batch inserts its postings again
+    * and every read dedupes, and postings for since-deleted files are
+    * never consulted (intersection is keyed by the LIVE stats-plan file
+    * names); a periodic [[build]] compacts both away. */
   def append(
       spark: SparkSession,
       dir: String,
       newPlans: Seq[FileScanPlan],
       dataSchema: StructType,
       keyCol: String,
-      indexDir: String,
-      withRowNumbers: Boolean = false): Unit = {
+      indexDir: String): Unit = {
     if (newPlans.isEmpty) return
-    buildPlan(spark, dir, newPlans, dataSchema, keyCol, withRowNumbers)
-      .write.mode("append").parquet(indexDir)
-    val prev = coveredFiles(spark, indexDir).getOrElse(Set.empty)
-    writeCoverage(spark, indexDir,
-      (prev ++ newPlans.map(_.fileName)).toSeq)
+    if (!PostingCatalog.isComplete(indexDir))
+      build(spark, dir, newPlans, dataSchema, keyCol, indexDir)
+    else {
+      val rowNumbers =
+        PostingCatalog.withConnection(indexDir)(PostingCatalog.meta).rowNumbers
+      load(spark, dir, newPlans, dataSchema, keyCol, indexDir, rowNumbers)
+      PostingCatalog.cover(indexDir, newPlans.map(_.fileName))
+    }
   }
 
-  /** The coverage manifest's file-name set; None when the index predates
-    * manifests (or it is unreadable) — callers must then treat coverage
-    * as unknown and degrade. Read fresh each call: it is one tiny driver
-    * read per planning pass (same order as the posting lookup itself) and
-    * caching would miss a same-path rebuild. */
-  def coveredFiles(spark: SparkSession, indexDir: String): Option[Set[String]] =
+  /** The distributed insert of `plans`' postings. */
+  private def load(
+      spark: SparkSession,
+      dir: String,
+      plans: Seq[FileScanPlan],
+      dataSchema: StructType,
+      keyCol: String,
+      indexDir: String,
+      withRowNumbers: Boolean): Unit =
+    if (plans.exists(_.scanRowGroups.nonEmpty)) {
+      val url = PostingCatalog.url(indexDir)
+      buildPlan(spark, dir, plans, dataSchema, keyCol, withRowNumbers)
+        .rdd.foreachPartition((rows: Iterator[Row]) =>
+          PostingCatalog.insert(url, withRowNumbers, rows))
+    }
+
+  /** True once a build at `indexDir` finished: the catalog's completion
+    * marker exists. A directory without it is never opened as a catalog. */
+  def isComplete(indexDir: String): Boolean = PostingCatalog.isComplete(indexDir)
+
+  /** The DATA files this posting index covers; None when the catalog is
+    * missing, incomplete or unreadable — callers must then treat coverage
+    * as unknown and degrade. Routing consults it so a STALE index — built
+    * before an append or compaction changed the file set — can only
+    * degrade to over-scan, never silently prune files it has no postings
+    * for. Deriving coverage from the postings themselves would be wrong:
+    * a file absent from the postings is indistinguishable from a covered
+    * file whose keys are all null. Read fresh each call (one catalog
+    * query) so a same-path rebuild is seen at once. */
+  def coveredFiles(indexDir: String): Option[Set[String]] =
+    read(indexDir)(PostingCatalog.covered)
+
+  /** One read of a complete catalog; None when it is not complete or the
+    * read fails. */
+  private def read[T](indexDir: String)(f: java.sql.Connection => T): Option[T] =
     try {
-      val p = new org.apache.hadoop.fs.Path(indexDir, "_covered")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        Some(new String(bytes, "UTF-8").split("\n").filter(_.nonEmpty).toSet)
-      }
+      if (!PostingCatalog.isComplete(indexDir)) None
+      else Some(PostingCatalog.withConnection(indexDir)(f))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The build dataflow, exposed for plan-shape assertions.
@@ -130,7 +146,11 @@ object RowLevelIndex {
     * partition) gives the position inside the group — added to the
     * group's first-row offset (cumulated from the catalog's per-group
     * row counts; no footer read). The scan pushes NO filters, so no
-    * page is skipped and the ordinal is exact. */
+    * page is skipped and the ordinal is exact.
+    *
+    * No shuffle: the catalog's key B-tree orders lookups, and the compact
+    * shape's per-partition sort only groups a row group's repeats of a
+    * key for the insert to drop. */
   def buildPlan(
       spark: SparkSession,
       dir: String,
@@ -140,7 +160,6 @@ object RowLevelIndex {
       withRowNumbers: Boolean = false): DataFrame = {
     import spark.implicits._
     val rgMeta = graft.plans.RowGroupScan.perRowGroupMeta(plans)
-    val indexFiles = math.max(1, rgMeta.size / 64)
     val scan = RowGroupSkipScan.scan(spark, dir, plans, dataSchema,
       mergeRuns = false, requiredCols = Seq(keyCol))
     if (withRowNumbers) {
@@ -158,18 +177,17 @@ object RowLevelIndex {
         .join(broadcast(meta), "pid")
         .select(col("key"), col("file_name"), col("row_group"),
           (col("first_row") + col("pos")).as("row_number"))
-        .repartitionByRange(indexFiles, col("key"))
-        .sortWithinPartitions("key")
     } else {
       val meta = rgMeta.zipWithIndex
         .map { case ((f, rg), pid) => (pid, f, rg) }
         .toDF("pid", "file_name", "row_group")
+      // a partition is one row group, so sorting it puts that group's
+      // repeats of a key side by side: the insert keeps the first of each
+      // run — distinct (key, rg) pairs with no shuffle, in bounded memory
       scan
         .select(col(keyCol).as("key"), spark_partition_id().as("pid"))
-        .distinct() // partial agg first: only distinct (key, rg) pairs shuffle
         .join(broadcast(meta), "pid")
         .select("key", "file_name", "row_group")
-        .repartitionByRange(indexFiles, col("key"))
         .sortWithinPartitions("key")
     }
   }
@@ -204,65 +222,46 @@ object RowLevelIndex {
     * 100k postings ≈ a few MB of (file, row_group) rows — safe. */
   val MaxPostings = 100000
 
-  /** Raw posting sets for `keys` (OR-semantics: a row group survives if it
-    * contains ANY of the keys — the IN-list shape). Pushdown-filtered read
-    * of the index table; the driver collect is bounded by `maxPostings`.
+  /** Posting sets for `keys` (OR-semantics: a row group survives if it
+    * contains ANY of the keys — the IN-list shape): one catalog query per
+    * chunk of keys down the key B-tree, streamed and deduplicated, so the
+    * driver holds at most `maxPostings` distinct (file, row_group) pairs.
     * None = overflow (some key is too hot for precise postings to pay off)
     * — callers must degrade to their stats-pruned plans. */
   def postings(
-      spark: SparkSession,
       indexDir: String,
       keys: Seq[Any],
-      maxPostings: Int = MaxPostings): Option[Map[String, SortedSet[Int]]] = {
-    val rows = spark.read.parquet(indexDir)
-      .filter(col("key").isin(keys: _*))
-      .select("file_name", "row_group")
-      .limit(maxPostings + 1) // +1: detect overflow without counting all
-      .collect()
-    if (rows.length > maxPostings) None
-    else Some(rows
-      .groupBy(_.getString(0))
-      .view.mapValues(_.map(_.getInt(1)).to(SortedSet)).toMap)
-  }
+      maxPostings: Int = MaxPostings): Option[Map[String, SortedSet[Int]]] =
+    PostingCatalog.withConnection(indexDir) { c =>
+      PostingCatalog.rowGroups(maxPostings)(
+        PostingCatalog.forKeys(c, "SELECT file_name, row_group FROM postings", keys))
+    }
 
   /** Posting sets for a BOUNDED key range [lower, upper] (inclusiveness
-    * per flag) — the `k BETWEEN a AND b` routing shape. The posting table
-    * is key-sorted parquet, so the range predicate pushes down to its
-    * scan (only index files whose key min/max overlap the range are
-    * read); (file, row_group) pairs are deduplicated BEFORE the cap so
+    * per flag) — the `k BETWEEN a AND b` routing shape: one B-tree range
+    * read; (file, row_group) pairs are deduplicated as they stream, so
     * `maxPostings` bounds distinct row groups, not per-key postings.
     * None = overflow (the range covers too much for precise postings to
     * pay off) — callers degrade to their stats-pruned plans. */
   def postingsRange(
-      spark: SparkSession,
       indexDir: String,
       lower: Any, lowerInclusive: Boolean,
       upper: Any, upperInclusive: Boolean,
-      maxPostings: Int = MaxPostings): Option[Map[String, SortedSet[Int]]] = {
-    val lo = if (lowerInclusive) col("key") >= lit(lower) else col("key") > lit(lower)
-    val hi = if (upperInclusive) col("key") <= lit(upper) else col("key") < lit(upper)
-    val rows = spark.read.parquet(indexDir)
-      .filter(lo && hi)
-      .select("file_name", "row_group")
-      .distinct() // many range keys share a row group — cap counts row groups
-      .limit(maxPostings + 1) // +1: detect overflow without counting all
-      .collect()
-    if (rows.length > maxPostings) None
-    else Some(rows
-      .groupBy(_.getString(0))
-      .view.mapValues(_.map(_.getInt(1)).to(SortedSet)).toMap)
-  }
+      maxPostings: Int = MaxPostings): Option[Map[String, SortedSet[Int]]] =
+    PostingCatalog.withConnection(indexDir) { c =>
+      PostingCatalog.rowGroups(maxPostings)(
+        PostingCatalog.range(c, lower, lowerInclusive, upper, upperInclusive))
+    }
 
   /** Posting lookup: which row groups contain `key`. The driver collect is
     * bounded by `maxPostings` with a full-plan fallback (over-scan, never
     * wrong). */
   def lookup(
-      spark: SparkSession,
       indexDir: String,
       key: Any,
       statsPlans: Seq[FileScanPlan],
       maxPostings: Int = MaxPostings): Seq[FileScanPlan] =
-    postings(spark, indexDir, Seq(key), maxPostings) match {
+    postings(indexDir, Seq(key), maxPostings) match {
       case None => statsPlans
       case Some(hits) =>
         val byFile = statsPlans.map(p => p.fileName -> p).toMap
@@ -270,6 +269,28 @@ object RowLevelIndex {
           byFile.get(f).map(p => p.copy(scanRowGroups = rgs))
         }
     }
+
+  /** COUNT(DISTINCT key) over every posting, for a key of Spark type
+    * `keyType` — None when the catalog is incomplete or unreadable, was
+    * built for another key type, or holds a truncated string key (distinct
+    * long keys sharing a prefix collapse). Coverage is the caller's to
+    * certify. */
+  def distinctKeys(indexDir: String, keyType: DataType): Option[Long] =
+    read(indexDir) { c =>
+      val meta = PostingCatalog.meta(c)
+      if (meta.keyType != keyType.catalogString || meta.truncated) None
+      else Some(PostingCatalog.distinctKeys(c))
+    }.flatten
+
+  /** Data files holding any key of `keys` (a one-column DataFrame): each
+    * partition of the key set queries the catalog over its own
+    * connection, so only file names reach the driver, never the keys. */
+  def filesContaining(indexDir: String, keys: DataFrame): Seq[String] = {
+    val url = PostingCatalog.url(indexDir)
+    keys.rdd
+      .mapPartitions(rows => PostingCatalog.filesFor(url, rows.map(_.get(0))))
+      .collect().toSeq.distinct
+  }
 
   /** Point query through the row-level index: scan exactly the posting
     * row groups, re-apply the predicate. */
@@ -292,7 +313,7 @@ object RowLevelIndex {
       key: Any,
       requiredCols: Seq[String] = Nil): DataFrame = {
     val required = requiredSchema(dataSchema, keyCol, requiredCols)
-    val plans = lookup(spark, indexDir, key, statsPlans)
+    val plans = lookup(indexDir, key, statsPlans)
     if (plans.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), required)
     else
@@ -302,27 +323,29 @@ object RowLevelIndex {
   }
 
   /** Raw ROW-precision postings for `keys` (OR-semantics) from a
-    * `withRowNumbers=true` index: per file, the (row_group, within-file
-    * row_number) pairs where ANY of the keys occurs. None = the index
-    * has no row_number column (built compact), or the key set is too hot
-    * for the driver-side cap — callers degrade to [[pointQuery]]/rg-level
-    * routing. */
+    * `withRowNumbers=true` index: per file, the distinct (row_group,
+    * within-file row_number) pairs where ANY of the keys occurs. None =
+    * the index was built compact (no row numbers), or the key set is too
+    * hot for the driver-side cap — callers degrade to
+    * [[pointQuery]]/rg-level routing. */
   def postingsRows(
-      spark: SparkSession,
       indexDir: String,
       keys: Seq[Any],
-      maxPostings: Int = MaxPostings): Option[Map[String, Seq[(Int, Long)]]] = {
-    val pq = spark.read.parquet(indexDir)
-    if (!pq.schema.fieldNames.contains("row_number")) return None
-    val rows = pq.filter(col("key").isin(keys: _*))
-      .select("file_name", "row_group", "row_number")
-      .limit(maxPostings + 1)
-      .collect()
-    if (rows.length > maxPostings) None
-    else Some(rows
-      .groupBy(_.getString(0))
-      .view.mapValues(_.map(r => (r.getInt(1), r.getLong(2))).toSeq).toMap)
-  }
+      maxPostings: Int = MaxPostings): Option[Map[String, Seq[(Int, Long)]]] =
+    PostingCatalog.withConnection(indexDir) { c =>
+      if (!PostingCatalog.meta(c).rowNumbers) None
+      else {
+        val seen = scala.collection.mutable.LinkedHashSet.empty[(String, Int, Long)]
+        val complete = PostingCatalog.forKeys(c,
+            "SELECT file_name, row_group, row_num FROM postings", keys) { rs =>
+          seen += ((rs.getString(1), rs.getInt(2), rs.getLong(3)))
+          seen.size <= maxPostings
+        }
+        if (!complete) None
+        else Some(seen.toSeq.groupBy(_._1)
+          .view.mapValues(_.map(p => (p._2, p._3))).toMap)
+      }
+    }
 
   /** Point query at the reference sketch's ROW-NUMBER precision
     * (/root/reference/sqlx-sqlite/src/index.rs:30-35): the posting rows
@@ -380,7 +403,7 @@ object RowLevelIndex {
       new java.util.ArrayList[org.apache.spark.sql.Row](), required)
     val byFile = statsPlans.map(p => p.fileName -> p).toMap
     def fallback(): DataFrame = {
-      val plans = postings(spark, indexDir, keys, maxPostings) match {
+      val plans = postings(indexDir, keys, maxPostings) match {
         case None => statsPlans // over-scan, never wrong
         case Some(hits) => hits.toSeq.sortBy(_._1).flatMap { case (f, rgs) =>
           byFile.get(f).map(p => p.copy(scanRowGroups = rgs))
@@ -391,7 +414,7 @@ object RowLevelIndex {
           requiredCols = required.fieldNames.toSeq)
         .filter(col(keyCol).isin(keys: _*))
     }
-    postingsRows(spark, indexDir, keys, maxPostings) match {
+    postingsRows(indexDir, keys, maxPostings) match {
       case None => fallback()
       case Some(hits) if hits.isEmpty => empty()
       case Some(hits) =>

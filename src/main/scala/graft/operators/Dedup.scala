@@ -293,11 +293,10 @@ object Dedup {
     if (pairs0.schema("a").dataType != LongType ||
         pairs0.schema("b").dataType != LongType)
       return connectedComponentsWithRounds(pairs0, maxRounds)._1
-    // same first materialization as the loop path; the count reads the
-    // checkpointed blocks
+    // the one materialization of the pair set: the count reads the
+    // checkpointed blocks, and either path below reuses them
     val pairs = pairs0.localCheckpoint()
-    if (pairs.count() > driverMaxEdges)
-      connectedComponentsWithRounds(pairs, maxRounds)._1
+    if (pairs.count() > driverMaxEdges) propagate(pairs, maxRounds)._1
     else driverCc(pairs)
   }
 
@@ -315,8 +314,9 @@ object Dedup {
       while (c != r) { val nxt = parent.get(c); parent.put(c, r); c = nxt }
       r
     }
-    pairs.select(col("a"), col("b")).collect().foreach { row =>
-      val a = row.getLong(0); val b = row.getLong(1)
+    import spark.implicits._
+    // primitive pairs, not boxed Rows: the driver holds the edge set once
+    pairs.select(col("a"), col("b")).as[(Long, Long)].collect().foreach { case (a, b) =>
       if (!parent.containsKey(a)) parent.put(a, a)
       if (!parent.containsKey(b)) parent.put(b, b)
       val ra = find(a); val rb = find(b)
@@ -327,15 +327,19 @@ object Dedup {
     }
     import scala.jdk.CollectionConverters._
     val labels = parent.keySet().asScala.toSeq.map(v => (v, find(v)))
-    import spark.implicits._
     labels.toDF("v", "l")
   }
 
   /** As [[connectedComponents]], also returning the rounds used —
     * DedupBoundsSpec pins the O(log diameter) bound with it. */
   private[graft] def connectedComponentsWithRounds(
-      pairs0: DataFrame, maxRounds: Int = 25): (DataFrame, Int) = {
-    val pairs = pairs0.localCheckpoint()
+      pairs0: DataFrame, maxRounds: Int = 25): (DataFrame, Int) =
+    propagate(pairs0.localCheckpoint(), maxRounds)
+
+  /** The distributed min-label loop over an already-checkpointed pair set
+    * (the caller materialized it once; a second checkpoint would copy
+    * every edge block again). */
+  private def propagate(pairs: DataFrame, maxRounds: Int): (DataFrame, Int) = {
     val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
     var labels = sym.select(col("src").as("v")).distinct()
@@ -349,7 +353,7 @@ object Dedup {
       val self = labels.select(col("v"), col("l"), col("l").as("l0"))
       val prop = sym.join(labels, sym("src") === labels("v"))
         .select(col("dst").as("v"), col("l"),
-          lit(null).cast(pairs0.schema("a").dataType).as("l0"))
+          lit(null).cast(pairs.schema("a").dataType).as("l0"))
       val stepped = self.union(prop).groupBy("v")
         .agg(min(col("l")).as("l"), min(col("l0")).as("l0"))
         .withColumn("chg", col("l") < col("l0"))

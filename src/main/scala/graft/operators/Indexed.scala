@@ -328,7 +328,7 @@ object Indexed {
 
     // RANGE routing through the row-level index (extends idx13's seam):
     // a bounded range conjunct (BETWEEN) on a posting-indexed column is
-    // answered by a pushdown RANGE read of the key-sorted posting table —
+    // answered by a B-tree RANGE read of the posting catalog —
     // row groups where in-range keys actually OCCUR, not merely where
     // min/max overlap. Same cap/degrade contract as point routing
     // (RoutingSpec pins route tags, narrowing, and half-open fallback).
@@ -714,13 +714,13 @@ object Indexed {
              |GROUP BY l_returnflag""".stripMargin)),
 
     // COUNT(DISTINCT key) pushdown to the row-level POSTING index
-    // (plans/StatsAggPushdown.distinctRewrite): the posting table's
-    // distinct keys ARE the data's distinct keys, so the aggregate scans
-    // the small key-pruned posting parquet instead of the table — the
-    // NDV query a 100 TB catalog answers from its key directory, not a
-    // full-table distinct. Certified only when the index's coverage
-    // manifest equals the live file set (DistinctPushdownSpec pins the
-    // rewrite, the staleness fallback, and the kill switch).
+    // (plans/StatsAggPushdown.distinctRewrite): the posting catalog's
+    // distinct keys ARE the data's distinct keys, so the aggregate is one
+    // catalog COUNT(DISTINCT) down the key B-tree instead of a table scan
+    // — the NDV query a 100 TB catalog answers from its key directory,
+    // not a full-table distinct. Certified only when the catalog's
+    // covered files equal the live file set (DistinctPushdownSpec pins
+    // the rewrite, the staleness fallback, and the kill switch).
     QueryDef(
       "idx18_distinct",
       (s, dir) => lineitemRouted(s, dir)
@@ -2053,13 +2053,16 @@ object Indexed {
     ()
   }
 
+  // Posting catalogs are cached on disk beside the fixture and rebuilt
+  // only when their completion marker is missing. The marker's name
+  // carries the catalog's format version, so a catalog an older format
+  // left behind is rebuilt, never opened; the suffixes differ from those
+  // of the Parquet posting tables the catalogs replaced.
   private val rowLevelCache = TrieMap.empty[String, String]
   private def rowLevelDir(spark: SparkSession, sfDir: String, e: Entry): String =
     rowLevelCache.getOrElseUpdate(sfDir + "@" + spark.hashCode(), {
-      // -v2: posting indexes now carry the _covered staleness manifest —
-      // a pre-manifest index on a stale working tree would degrade routing
-      val dir = e.dataDir + "-rowidx-v2"
-      if (!Files.exists(Paths.get(dir, "_SUCCESS")))
+      val dir = e.dataDir + "-rowidx-v3"
+      if (!graft.index.RowLevelIndex.isComplete(dir))
         graft.index.RowLevelIndex.build(
           spark, e.dataDir, e.index.allFiles(), e.dataSchema, "l_orderkey", dir)
       dir
@@ -2068,8 +2071,8 @@ object Indexed {
   private val rowLevelRowsCache = TrieMap.empty[String, String]
   private def rowLevelRowsDir(spark: SparkSession, sfDir: String, e: Entry): String =
     rowLevelRowsCache.getOrElseUpdate(sfDir + "@" + spark.hashCode(), {
-      val dir = e.dataDir + "-rowidx-rows-v1"
-      if (!Files.exists(Paths.get(dir, "_SUCCESS")))
+      val dir = e.dataDir + "-rowidx-rows-v2"
+      if (!graft.index.RowLevelIndex.isComplete(dir))
         graft.index.RowLevelIndex.build(
           spark, e.dataDir, e.index.allFiles(), e.dataSchema, "l_orderkey", dir,
           withRowNumbers = true)
@@ -2679,9 +2682,9 @@ object Indexed {
     graft.sources.IndexedParquetFileIndex)]
 
   /** The SAME indexed relation, with automatic index routing on: l_ukey
-    * and l_orderkey each carry a row-level posting index (built lazily,
-    * one distributed pass each), so equality/IN — and bounded ranges,
-    * which push down into the key-sorted posting table — on either column
+    * and l_orderkey each carry a row-level posting catalog (built lazily,
+    * one distributed pass each), so equality/IN — and, on l_orderkey,
+    * bounded ranges, one B-tree range read of the catalog — on either column
     * resolve to posting-exact row groups; everything else falls back to
     * the bloom/min-max catalog path. */
   def lineitemRouted(spark: SparkSession, sfDir: String): DataFrame =
@@ -2693,8 +2696,8 @@ object Indexed {
   private def routedEntry(spark: SparkSession, sfDir: String) =
     routedCache.getOrElseUpdate(sfDir + "@" + spark.hashCode(), {
       val e = cached(spark, sfDir)
-      val ukeyIdx = e.dataDir + "-rowidx-ukey-v2" // -v2: _covered manifest
-      if (!Files.exists(Paths.get(ukeyIdx, "_SUCCESS")))
+      val ukeyIdx = e.dataDir + "-rowidx-ukey-v3"
+      if (!graft.index.RowLevelIndex.isComplete(ukeyIdx))
         graft.index.RowLevelIndex.build(
           spark, e.dataDir, e.index.allFiles(), e.dataSchema, "l_ukey", ukeyIdx)
       graft.sources.IndexedParquet.read(

@@ -736,26 +736,27 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     Some(LocalRelation(agg.output, rows))
   }
 
-  /** COUNT(DISTINCT key) answered from the row-level POSTING index: the
-    * posting table holds one row per distinct (key, row group) pair over
-    * the files it covers, so its distinct keys ARE the data's distinct
-    * keys — the aggregate is rewritten to scan the (small, key-column-
-    * pruned) posting parquet instead of the data. O(index) where the
-    * declarative plan is a full-table distinct: at 100 TB the posting
-    * table is the ~GB key directory vs the table's TBs, and NULL
-    * semantics carry over verbatim (COUNT DISTINCT ignores the posting
-    * table's null-key rows exactly as it ignores the data's null rows;
-    * replayed-append duplicate postings collapse in the same distinct).
+  /** COUNT(DISTINCT key) answered from the row-level POSTING catalog:
+    * the catalog holds one posting per distinct (key, row group) pair
+    * over the files it covers, so its distinct keys ARE the data's
+    * distinct non-null keys — the aggregate becomes a LocalRelation
+    * holding one catalog `COUNT(DISTINCT)` down the key B-tree, computed
+    * at rule time. O(index) where the declarative plan is a full-table
+    * distinct: at 100 TB the posting catalog is the ~GB key directory vs
+    * the table's TBs. NULL semantics carry over (the catalog stores no
+    * null keys, as COUNT DISTINCT ignores the data's null rows), and
+    * replayed-append duplicate postings collapse in the same distinct.
     *
     * Certification — all must hold, or the declarative plan stands:
     *  - every output column is a filterless `COUNT(DISTINCT key)` over
     *    the SAME single row-level-indexed column (any other aggregate,
     *    multi-column distinct, or agg-filter disqualifies);
-    *  - the index's coverage manifest EQUALS the live file set: a missing
-    *    file would undercount, a since-removed file could contribute keys
-    *    no longer present (strictly stronger than routing's superset
-    *    check, where over-approximation is harmless);
-    *  - the posting key column's type matches the data column's.
+    *  - the catalog's covered-files set EQUALS the live file set: a
+    *    missing file would undercount, a since-removed file could
+    *    contribute keys no longer present (strictly stronger than
+    *    routing's superset check, where over-approximation is harmless);
+    *  - the catalog was built for the data column's type and holds no
+    *    truncated string key (see [[graft.index.RowLevelIndex.distinctKeys]]).
     * Kill switch: `spark.graft.distinctAggPushdown=false`. */
   private def distinctRewrite(
       agg: Aggregate, idx: IndexedParquetFileIndex): Option[LogicalPlan] = {
@@ -781,21 +782,15 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     // O(1) file COUNT gates first (any mismatch declines before any name
     // transfer), then the O(#files) names-only stream confirms set
     // equality — count equal + one-sided containment ⟺ equal sets
-    val covered = graft.index.RowLevelIndex.coveredFiles(session, indexDir)
+    val covered = graft.index.RowLevelIndex.coveredFiles(indexDir)
       .getOrElse(return None)
     val liveCount = idx.statsIndex.catalogCounts().map(_._1).getOrElse(return None)
     if (liveCount != covered.size.toLong) return None
     val liveNames = idx.statsIndex.fileNames().getOrElse(return None)
     if (!liveNames.forall(covered.contains)) return None
-    val posting =
-      try session.read.parquet(indexDir).select("key").queryExecution.analyzed
-      catch { case scala.util.control.NonFatal(_) => return None }
-    val postingKey = posting.output.head
-    if (postingKey.dataType != keyAttr.dataType) return None
-    val rebound = agg.aggregateExpressions.map(_.transform {
-      case a: AttributeReference if a.exprId == keyAttr.exprId => postingKey
-    }.asInstanceOf[NamedExpression])
-    Some(Aggregate(Nil, rebound, posting))
+    val n = graft.index.RowLevelIndex.distinctKeys(indexDir, keyAttr.dataType)
+      .getOrElse(return None)
+    Some(LocalRelation(agg.output, Seq(InternalRow.fromSeq(agg.output.map(_ => n)))))
   }
 
   /** The child must be the index-backed relation, optionally under an

@@ -150,12 +150,12 @@ object Compaction {
     * footer-ingest job for the files it wrote, one bloom-build job per
     * bloom column over just those files (via the index's own
     * `rebuildBlooms` hook), and for each entry in `rowLevel` (key column →
-    * posting-table dir) an incremental posting append that also extends
-    * the coverage manifest — so automatic routing stays PRECISE instead of
+    * posting-catalog dir) an incremental posting append that also extends
+    * the covered-files set — so automatic routing stays PRECISE instead of
     * tripping the staleness guard. The untouched bulk of a 100 TB table
     * never re-ingests; the indexed relation serves exact, fully-pruned
     * reads again the moment this returns. Postings for the removed
-    * originals linger in the posting table but are never consulted
+    * originals linger in the posting catalog but are never consulted
     * (lookups intersect with the LIVE stats plans); a periodic full
     * `RowLevelIndex.build` compacts them away. */
   def compactIndexed(

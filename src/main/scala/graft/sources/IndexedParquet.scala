@@ -76,7 +76,7 @@ object IndexedParquet {
 
   /** Read a directory through the index-backed FileIndex. Returns the
     * DataFrame plus the FileIndex for `lastExecution` observability.
-    * `rowLevelIndexes` (column → posting-table dir) turns on automatic
+    * `rowLevelIndexes` (column → posting-catalog dir) turns on automatic
     * routing: equality/IN on those columns consult the precise row-level
     * postings with bloom/min-max as the fallback (the reference's
     * one-scan-seam design, main.rs:256-305). */

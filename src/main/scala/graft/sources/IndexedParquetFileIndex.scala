@@ -18,12 +18,14 @@ import scala.collection.immutable.SortedSet
   *
   * `route` records which index kinds the provider consulted beyond the
   * stats catalog: `rowlevel(col)` = precise point/IN postings intersected
-  * in; `rowlevel-range(col)` = bounded-range postings (pushdown range read
-  * of the key-sorted posting table); `rowlevel-degraded(col)` = postings
-  * overflowed the driver cap (hot key / too-wide range) and the
-  * stats-pruned plans stand alone; `rowlevel-stale(col)` = the posting
-  * index's coverage manifest doesn't cover every live file (built before
-  * an append/compaction) — catalog path only. Empty = stats(+bloom) only.
+  * in; `rowlevel-range(col)` = bounded-range postings (one B-tree range
+  * read of the posting catalog); `rowlevel-degraded(col)` = postings
+  * overflowed the driver cap (hot key / too-wide range), the range has
+  * string bounds, or the lookup failed, and the stats-pruned plans stand
+  * alone; `rowlevel-stale(col)` = the posting catalog's covered-files
+  * table doesn't cover every live file (built before an
+  * append/compaction), or the catalog is incomplete — catalog path only.
+  * Empty = stats(+bloom) only.
   */
 final case class PruneExecution(
     dataFilters: Seq[Expression],
@@ -54,11 +56,13 @@ final case class PruneExecution(
   * Automatic index routing (the reference's design seam — ONE `scan()`
   * call consults "the index", main.rs:256-305, with the row-level index
   * named as the precise extension, index.rs:30-35): when `rowLevelIndexes`
-  * maps a column to a posting-table directory, equality/IN conjuncts on
+  * maps a column to a posting-catalog directory, equality/IN conjuncts on
   * that column are answered by the PRECISE postings (row groups where the
   * key actually occurs) intersected with the stats-pruned plans, so plain
   * `df.filter(col === k)` syntax gets the best index available with zero
-  * caller involvement. Fallback order per conjunct:
+  * caller involvement. Each posting question is one JDBC query against
+  * the embedded catalog, so routing launches no Spark job while the
+  * query is planned. Fallback order per conjunct:
   *  1. row-level postings (capped driver lookup; hot key ⇒ degrade),
   *  2. per-row-group bloom probe (equality on a bloom column, in-catalog),
   *  3. min/max range overlap — 2 and 3 both live inside `index.getFiles`.
@@ -75,7 +79,7 @@ final class IndexedParquetFileIndex(
   /** The backing stats index (for scans that consult it directly). */
   def statsIndex: StatsIndex = index
 
-  /** Column → posting-table directory for the row-level indexes this
+  /** Column → posting-catalog directory for the row-level indexes this
     * relation routes through (plans/StatsAggPushdown's COUNT DISTINCT
     * rewrite consults the same registry the filter router uses). */
   def rowLevelIndexDirs: Map[String, String] = rowLevelIndexes
@@ -131,18 +135,17 @@ final class IndexedParquetFileIndex(
       }
     // Staleness guard: a posting index built before an append/compaction
     // changed the file set has NO postings for the new files — intersecting
-    // would silently prune them (rows lost). The build-time coverage
-    // manifest must cover every live stats-plan file or the column
-    // degrades to the catalog path (over-scan, never wrong). Checked
-    // against the FULL stats plan set: the fold only narrows, and a
-    // superset check covers every subset. One tiny driver read per column
-    // per planning pass, cached across this call's point+range conjuncts.
+    // would silently prune them (rows lost). The catalog's covered-files
+    // table must cover every live stats-plan file or the column degrades
+    // to the catalog path (over-scan, never wrong). Checked against the
+    // FULL stats plan set: the fold only narrows, and a superset check
+    // covers every subset. One catalog query per column per planning
+    // pass, cached across this call's point+range conjuncts.
     val coverageOk = scala.collection.mutable.Map.empty[String, Boolean]
     def covered(colName: String): Boolean =
       coverageOk.getOrElseUpdate(colName,
-        try RowLevelIndex.coveredFiles(SparkSession.active, rowLevelIndexes(colName))
-          .exists(cov => statsPlans.forall(p => cov.contains(p.fileName)))
-        catch { case scala.util.control.NonFatal(_) => false })
+        RowLevelIndex.coveredFiles(rowLevelIndexes(colName))
+          .exists(cov => statsPlans.forall(p => cov.contains(p.fileName))))
     val afterPoints = points.foldLeft((statsPlans, Seq.empty[String])) {
       case ((plans, route), (colName, keys)) =>
         if (!covered(colName)) (plans, route :+ s"rowlevel-stale($colName)")
@@ -168,8 +171,8 @@ final class IndexedParquetFileIndex(
 
   /** A conjunct the row-level index can answer exactly: equality or IN
     * between a row-level-indexed column and non-null literals. NULL keys
-    * never match (`= NULL` is never TRUE; the posting table holds no null
-    * keys), and an all-null key list keeps nothing. */
+    * never match (`= NULL` is never TRUE; the posting catalog holds no
+    * null keys), and an all-null key list keeps nothing. */
   private def pointKeys(e: Expression): Option[(String, Seq[Any])] = {
     def indexed(a: Attribute): Boolean = rowLevelIndexes.contains(a.name)
     def v(l: Literal): Any = CatalystTypeConverters.convertToScala(l.value, l.dataType)
@@ -233,18 +236,17 @@ final class IndexedParquetFileIndex(
       colName: String, lo: Any, loInc: Boolean,
       hi: Any, hiInc: Boolean): Option[Map[String, SortedSet[Int]]] =
     try RowLevelIndex.postingsRange(
-      SparkSession.active, rowLevelIndexes(colName), lo, loInc, hi, hiInc, maxPostings)
+      rowLevelIndexes(colName), lo, loInc, hi, hiInc, maxPostings)
     catch { case scala.util.control.NonFatal(_) => None }
 
   /** Bounded posting lookup; None on overflow (hot key), empty map when no
-    * row group contains any key. Any failure — including no usable Spark
-    * session at planning time — degrades to "no routing" (over-scan). */
+    * row group contains any key. Any catalog failure degrades to "no
+    * routing" (over-scan). */
   private def lookupPostings(
       colName: String, keys: Seq[Any]): Option[Map[String, SortedSet[Int]]] =
     if (keys.isEmpty) Some(Map.empty)
     else
-      try RowLevelIndex.postings(
-        SparkSession.active, rowLevelIndexes(colName), keys, maxPostings)
+      try RowLevelIndex.postings(rowLevelIndexes(colName), keys, maxPostings)
       catch { case scala.util.control.NonFatal(_) => None }
 
   // ---------------------------------------------------------------------------

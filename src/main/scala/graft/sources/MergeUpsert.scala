@@ -21,11 +21,11 @@ import scala.jdk.CollectionConverters._
   * key has no well-defined "the" replacement row).
   *
   * Scale notes (the reason this exists):
-  *  - Locating the files to rewrite is a DISTRIBUTED join of the source's
-  *    distinct keys against the row-level posting table — O(|source| +
-  *    |postings|) shuffle of key scalars, never a data scan. On a 100 TB
-  *    table where a batch touches 0.1% of files, everything else stays
-  *    on disk untouched. When no posting index covers the live file set
+  *  - Locating the files to rewrite is a DISTRIBUTED lookup of the
+  *    source's distinct keys in the row-level posting catalog — each key
+  *    partition probes the key B-tree over its own connection, O(|source|)
+  *    index probes, never a data scan. On a 100 TB table where a batch
+  *    touches 0.1% of files, everything else stays on disk untouched. When no posting index covers the live file set
   *    the locator degrades (soundly) to a key-column-only scan tagged
   *    with `_metadata.file_name` — one pruned-projection pass, still
   *    never a full-width read.
@@ -54,10 +54,10 @@ object MergeUpsert {
   /** Data files containing at least one `srcKeys` key. `srcKeys` must be a
     * single-column DataFrame named `key`, typed like the data's key column.
     *
-    * Uses the posting table when it covers every live file (a live file
-    * missing from the coverage manifest could hold matched keys the
-    * postings cannot see — silently skipping its rewrite would corrupt
-    * the merge, so staleness forces the scan fallback instead). */
+    * Uses the posting catalog when it covers every live file (a live file
+    * missing from the covered set could hold matched keys the postings
+    * cannot see — silently skipping its rewrite would corrupt the merge,
+    * so staleness forces the scan fallback instead). */
   def locateMatchedFiles(
       spark: SparkSession,
       dir: String,
@@ -66,15 +66,11 @@ object MergeUpsert {
       postingDir: Option[String],
       liveFiles: Set[String]): Seq[String] = {
     val viaPostings = postingDir.filter { pd =>
-      RowLevelIndex.coveredFiles(spark, pd).exists(cov => liveFiles.subsetOf(cov))
+      RowLevelIndex.coveredFiles(pd).exists(cov => liveFiles.subsetOf(cov))
     }
     viaPostings match {
       case Some(pd) =>
-        spark.read.parquet(pd)
-          .join(srcKeys, "key")
-          .select("file_name").distinct()
-          .collect().map(_.getString(0)).toSeq
-          .filter(liveFiles).sorted
+        RowLevelIndex.filesContaining(pd, srcKeys).filter(liveFiles).sorted
       case None =>
         spark.read.parquet(dir)
           .select(col(keyCol), col("_metadata.file_name").as("__merge_fn"))
@@ -88,7 +84,7 @@ object MergeUpsert {
 
   /** Execute the merge. `source` must have the target's schema. When
     * `index` is given, `indexedCols` are the catalog's stats columns and
-    * the catalog (plus blooms, plus the `postingDir` posting table) is
+    * the catalog (plus blooms, plus the `postingDir` posting catalog) is
     * brought back in step with O(changed files) work. */
   def merge(
       spark: SparkSession,

@@ -32,7 +32,7 @@ object IndexedSink {
 
   /** Start the maintaining stream: rows from `source` append to `dataDir`
     * as parquet, and `index` ingests each batch's new files. `rowLevel`
-    * (key column → posting-table dir) additionally keeps those row-level
+    * (key column → posting-catalog dir) additionally keeps those row-level
     * posting indexes fresh — an incremental [[graft.index.RowLevelIndex.append]]
     * per batch, so automatic routing on the growing table stays PRECISE
     * instead of degrading on the staleness guard. An index with bloom
@@ -83,7 +83,9 @@ object IndexedSink {
       freqShadowCols: Seq[String] = Nil,
       sumShadowCols: Seq[String] = Nil,
       /** Maintain the rowLevel postings at ROW-NUMBER precision (r14):
-        * each batch's postings carry the within-file ordinal so
+        * the batch that creates a posting catalog builds it with row
+        * numbers, and every later append keeps the catalog's shape, so
+        * each batch's postings carry the within-file ordinal and
         * [[graft.index.RowLevelIndex.fetchRows]] serves id->row fetches
         * on the growing table. Replay leaves only harmless stale
         * postings for same-name rewritten files — they ADD candidate
@@ -183,9 +185,13 @@ object IndexedSink {
           hllCols = hllShadowCols, quantileCols = quantileShadowCols,
           cmsCols = cmsShadowCols, blooms = true)
         rowLevel.foreach { case (colName, idxDir) =>
-          graft.index.RowLevelIndex.append(
-            spark, dataDir, newPlans, batch.schema, colName, idxDir,
-            withRowNumbers = rowLevelRowNumbers)
+          // the first batch picks the catalog's shape; appends keep it
+          if (rowLevelRowNumbers && !graft.index.RowLevelIndex.isComplete(idxDir))
+            graft.index.RowLevelIndex.build(
+              spark, dataDir, newPlans, batch.schema, colName, idxDir,
+              withRowNumbers = true)
+          else graft.index.RowLevelIndex.append(
+            spark, dataDir, newPlans, batch.schema, colName, idxDir)
         }
       }
     }

@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** COUNT(DISTINCT key) pushdown to the row-level posting index
-  * (plans/StatsAggPushdown.distinctRewrite): the aggregate must scan the
-  * posting parquet, not the data — and must NOT when certification fails
-  * (stale coverage, unindexed column, mixed aggregates, kill switch),
-  * with identical results either way.
+/** COUNT(DISTINCT key) pushdown to the row-level posting catalog
+  * (plans/StatsAggPushdown.distinctRewrite): the aggregate must be
+  * answered from the posting catalog (a LocalRelation, no scan at all),
+  * not from the data — and must NOT when certification fails (stale
+  * coverage, unindexed column, mixed aggregates, kill switch), with
+  * identical results either way.
   */
 class DistinctPushdownSpec extends SparkSpec {
 
@@ -55,28 +56,39 @@ class DistinctPushdownSpec extends SparkSpec {
     r.head.getLong(0)
   }
 
+  /** True when the optimized plan is answered by a catalog LocalRelation. */
+  private def answeredFromCatalog(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.nonEmpty
+
   test("countDistinct over the routed relation scans the posting index") {
     val q = routed.agg(count_distinct(col("k")).as("n"))
     val scans = scansOf(q)
-    assert(scans.exists(_.contains("rowidx")), scans.mkString("; "))
-    assert(!scans.exists(_.contains("/data")), scans.mkString("; "))
+    assert(scans.isEmpty && answeredFromCatalog(q), q.queryExecution.optimizedPlan)
     assert(q.collect().head.getLong(0) === expected)
     assert(expected === 1000L) // nulls excluded, k = i/2
   }
 
   test("stale coverage keeps the declarative scan, result unchanged") {
-    val covered = new java.io.File(idxDir, "_covered")
-    val orig = new String(
-      java.nio.file.Files.readAllBytes(covered.toPath), "UTF-8")
+    routed // build the fixture
+    val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$idxDir")
+    val st = c.createStatement()
+    val rs = st.executeQuery("SELECT MIN(file_name) FROM covered")
+    rs.next()
+    val dropped = rs.getString(1)
+    rs.close()
     try {
-      // drop one covered file name -> manifest no longer equals live set
-      java.nio.file.Files.write(
-        covered.toPath, orig.split("\n").drop(1).mkString("\n").getBytes("UTF-8"))
+      // drop one covered file name -> covered set no longer equals live set
+      assert(st.executeUpdate(s"DELETE FROM covered WHERE file_name = '$dropped'") == 1)
       val q = routed.agg(count_distinct(col("k")).as("n"))
       val scans = scansOf(q)
       assert(scans.exists(_.contains("/data")), scans.mkString("; "))
       assert(q.collect().head.getLong(0) === expected)
-    } finally java.nio.file.Files.write(covered.toPath, orig.getBytes("UTF-8"))
+    } finally {
+      st.executeUpdate(s"INSERT INTO covered (file_name) VALUES ('$dropped')")
+      c.close()
+    }
   }
 
   test("disqualifiers: unindexed column, mixed aggregates, kill switch") {
@@ -102,9 +114,7 @@ class DistinctPushdownSpec extends SparkSpec {
   test("two countDistinct over the same key both answer from postings") {
     val q = routed.agg(
       count_distinct(col("k")).as("a"), count_distinct(col("k")).as("b"))
-    val scans = scansOf(q)
-    assert(scans.exists(_.contains("rowidx")) && !scans.exists(_.contains("/data")),
-      scans.mkString("; "))
+    assert(scansOf(q).isEmpty && answeredFromCatalog(q), q.queryExecution.optimizedPlan)
     val r = q.collect().head
     assert(r.getLong(0) === expected && r.getLong(1) === expected)
   }

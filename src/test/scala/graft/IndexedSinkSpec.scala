@@ -263,7 +263,7 @@ class IndexedSinkSpec extends SparkSpec {
       .view.mapValues(_.map(r => (r.getString(1), r.getLong(2))).toSet).toMap
     Seq(0L, 50L, 1050L, 1099L).foreach { k =>
       val got = graft.index.RowLevelIndex
-        .postingsRows(spark, rowIdx, Seq(Long.box(k))).get
+        .postingsRows(rowIdx, Seq(Long.box(k))).get
         .toSeq.flatMap { case (f, prs) => prs.map { case (_, rn) => (f, rn) } }
         .toSet
       assert(got == truth(k), s"key $k")

@@ -63,10 +63,10 @@ class MergeUpsertSpec extends SparkSpec {
       // catalog tracks exactly the live file set; pruned point read is exact
       assert(index.allFiles().map(_.fileName).toSet == names(dir))
       // posting coverage still spans every live file → routing stays certified
-      val cov = RowLevelIndex.coveredFiles(spark, s"$base/pk").get
+      val cov = RowLevelIndex.coveredFiles(s"$base/pk").get
       assert(names(dir).subsetOf(cov))
       // the posting index resolves a merged-in key to its new file
-      val hit = RowLevelIndex.lookup(spark, s"$base/pk", 1002L, index.allFiles())
+      val hit = RowLevelIndex.lookup(s"$base/pk", 1002L, index.allFiles())
       assert(hit.map(_.fileName).forall(r.newFiles.contains), hit.map(_.fileName))
     } finally index.close()
   }

@@ -169,7 +169,7 @@ class RoutingSpec extends SparkSpec {
   test("point and range conjuncts on different columns both route") {
     // second routed column via a second posting index on seq
     val seqIdx = s"${fx.base}/rowidx-seq"
-    if (!Files.exists(java.nio.file.Paths.get(seqIdx, "_SUCCESS")))
+    if (!RowLevelIndex.isComplete(seqIdx))
       RowLevelIndex.build(spark, fx.dir, fx.index.allFiles(), fx.schema, "seq", seqIdx)
     val (df, fi) = IndexedParquet.read(spark, fx.dir, fx.index, fx.schema,
       rowLevelIndexes = Map("key" -> fx.rowIdx, "seq" -> seqIdx))

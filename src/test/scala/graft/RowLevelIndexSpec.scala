@@ -11,6 +11,23 @@ import java.nio.file.{Files, Path, Paths}
   */
 class RowLevelIndexSpec extends SparkSpec {
 
+  /** Rows of one query against a posting catalog, read over JDBC. */
+  private def catalogRows[T](indexDir: String, sql: String)(
+      f: java.sql.ResultSet => T): Seq[T] = {
+    val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$indexDir")
+    try {
+      val rs = c.createStatement().executeQuery(sql)
+      val out = Seq.newBuilder[T]
+      while (rs.next()) out += f(rs)
+      out.result()
+    } finally c.close()
+  }
+
+  private def catalogUpdate(indexDir: String, sql: String): Unit = {
+    val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$indexDir")
+    try c.createStatement().executeUpdate(sql) finally c.close()
+  }
+
   // keys deliberately interleaved so every file's min/max range covers
   // every key, defeating min/max pruning — only exact postings help:
   // file i holds keys { i, 100+i, 200+i } spread over 2 row groups,
@@ -43,7 +60,7 @@ class RowLevelIndexSpec extends SparkSpec {
   test("postings are exact: a sparse key maps to exactly its row group") {
     val (_, idxDir, plans, _, _) = env
     // key 102 lives only in file 2, row group 1 (j=50)
-    val hit = RowLevelIndex.lookup(spark, idxDir, 102, plans)
+    val hit = RowLevelIndex.lookup(idxDir, 102, plans)
     assert(hit.map(p => (p.fileName, p.scanRowGroups.toSeq)) ==
       Seq(("f2.parquet", Seq(1))))
   }
@@ -55,7 +72,7 @@ class RowLevelIndexSpec extends SparkSpec {
     val pred = graft.sources.RowGroupSkipScan.resolvePredicate(
       spark, schema, col("k") === 3)
     val minMaxKept = stats.getFiles(pred).map(_.scanRowGroups.size).sum
-    val exactKept = RowLevelIndex.lookup(spark, idxDir, 3, plans)
+    val exactKept = RowLevelIndex.lookup(idxDir, 3, plans)
       .map(_.scanRowGroups.size).sum
     assert(exactKept == 1)
     assert(minMaxKept > exactKept,
@@ -67,10 +84,10 @@ class RowLevelIndexSpec extends SparkSpec {
     // key 1000 occurs in every row group (8 postings) — past the cap the
     // lookup must NOT materialize the postings on the driver; it returns
     // the caller's full plans instead (over-scan, never wrong)
-    val capped = RowLevelIndex.lookup(spark, idxDir, 1000, plans, maxPostings = 3)
+    val capped = RowLevelIndex.lookup(idxDir, 1000, plans, maxPostings = 3)
     assert(capped == plans, "capped hot-key lookup should fall back to all plans")
     // under the cap the postings stay exact
-    val exact = RowLevelIndex.lookup(spark, idxDir, 1000, plans)
+    val exact = RowLevelIndex.lookup(idxDir, 1000, plans)
     assert(exact.map(_.scanRowGroups.size).sum == 8)
     // correctness through the capped (fallback) path
     val got = graft.sources.RowGroupSkipScan.scan(spark, dir, capped, schema)
@@ -81,13 +98,23 @@ class RowLevelIndexSpec extends SparkSpec {
 
   test("build plan is O(1) in row-group count (one scan, no per-RG unions)") {
     val (dir, _, plans, schema, _) = env
-    val plan = RowLevelIndex.buildPlan(spark, dir, plans, schema, "k")
-      .queryExecution.optimizedPlan
-    val nodes = plan.collect { case n => n }.size
-    // 8 row groups in the fixture; the old per-row-group unionAll plan had
-    // >5 nodes per row group — the single-job plan stays under a constant
-    assert(nodes <= 12, s"expected a constant-size plan, got $nodes nodes:\n$plan")
-    assert(!plan.toString.contains("Union"), "per-row-group unions crept back in")
+    Seq(false, true).foreach { rows =>
+      val plan = RowLevelIndex.buildPlan(spark, dir, plans, schema, "k",
+        withRowNumbers = rows).queryExecution.optimizedPlan
+      val nodes = plan.collect { case n => n }.size
+      // 8 row groups in the fixture; the old per-row-group unionAll plan had
+      // >5 nodes per row group — the single-job plan stays under a constant
+      assert(nodes <= 12, s"expected a constant-size plan, got $nodes nodes:\n$plan")
+      assert(!plan.toString.contains("Union"), "per-row-group unions crept back in")
+      // one stage: the catalog's key B-tree orders lookups, so nothing
+      // shuffles — no range repartition, aggregate or global sort
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, RepartitionByExpression, Sort}
+      assert(plan.collect {
+        case n: RepartitionByExpression => n
+        case n: Aggregate => n
+        case n: Sort if n.global => n
+      }.isEmpty, s"build plan shuffles:\n$plan")
+    }
   }
 
   test("point query through the row-level index matches a plain scan") {
@@ -125,7 +152,7 @@ class RowLevelIndexSpec extends SparkSpec {
       .groupBy(_.getInt(0))
       .view.mapValues(_.map(r => (r.getString(1), r.getLong(2))).toSet).toMap
     Seq(0, 3, 102, 201, 1000, 1003).foreach { k =>
-      val got = RowLevelIndex.postingsRows(spark, rowsIdxDir, Seq(k)).get
+      val got = RowLevelIndex.postingsRows(rowsIdxDir, Seq(k)).get
         .toSeq.flatMap { case (f, prs) => prs.map { case (_, rn) => (f, rn) } }
         .toSet
       assert(got == truth.getOrElse(k, Set.empty), s"key $k")
@@ -136,12 +163,12 @@ class RowLevelIndexSpec extends SparkSpec {
     val (_, _, plans, _, _) = env
     // fixture files have 2 row groups of 50 rows each: the group of a
     // row number is its ordinal / 50
-    val all = spark.read.parquet(rowsIdxDir)
-      .select("file_name", "row_group", "row_number").collect()
+    val all = catalogRows(rowsIdxDir,
+      "SELECT file_name, row_group, row_num FROM postings")(
+      rs => (rs.getString(1), rs.getInt(2), rs.getLong(3)))
     assert(all.nonEmpty)
-    all.foreach { r =>
-      assert(r.getInt(1) == (r.getLong(2) / 50).toInt,
-        s"${r.getString(0)} rn=${r.getLong(2)} rg=${r.getInt(1)}")
+    all.foreach { case (f, rg, rn) =>
+      assert(rg == (rn / 50).toInt, s"$f rn=$rn rg=$rg")
     }
     // and the posting count is O(rows): one per data row
     assert(all.length == plans.map(_.rowGroupRows.values.sum).sum)
@@ -164,7 +191,7 @@ class RowLevelIndexSpec extends SparkSpec {
     val (dir, idxDir, plans, schema, _) = env
     // a compact (no row_number column) index: postingsRows declines,
     // pointQueryRows falls back to the rg-level path — still correct
-    assert(RowLevelIndex.postingsRows(spark, idxDir, Seq(3)).isEmpty)
+    assert(RowLevelIndex.postingsRows(idxDir, Seq(3)).isEmpty)
     val viaFallback = RowLevelIndex.pointQueryRows(
       spark, dir, idxDir, plans, schema, "k", 3)
       .select("payload").collect().map(_.getString(0)).sorted.toSeq
@@ -174,7 +201,7 @@ class RowLevelIndexSpec extends SparkSpec {
     // a hot key past the cap: postingsRows declines instead of
     // materializing every row position on the driver
     assert(RowLevelIndex.postingsRows(
-      spark, rowsIdxDir, Seq(1000), maxPostings = 3).isEmpty)
+      rowsIdxDir, Seq(1000), maxPostings = 3).isEmpty)
     val hot = RowLevelIndex.pointQueryRows(
       spark, dir, rowsIdxDir, plans, schema, "k", 1000, maxPostings = 3)
       .select("payload").collect().map(_.getString(0)).sorted.toSeq
@@ -205,19 +232,19 @@ class RowLevelIndexSpec extends SparkSpec {
 
   test("stale postings beyond a file's current group count degrade, not throw") {
     val (dir, _, plans, schema, _) = env
-    import spark.implicits._
     val staleDir = rowsIdxDir + "-stale"
-    // copy the live index, then append stale postings claiming key 3 lives
+    // rebuild the live index, then insert stale postings claiming key 3 lives
     // in row groups the (same-name, rewritten-smaller) files no longer
     // have: one in a file with NO live posting for the key (its plan must
     // drop entirely) and one in the file that DOES hold the key (its plan
     // must keep only the live group). Before the planning-side defense,
     // firstRowOffsets missed (f, 99) and fetchRows threw
     // NoSuchElementException instead of degrading.
-    spark.read.parquet(rowsIdxDir).write.mode("overwrite").parquet(staleDir)
-    Seq((3, "f0.parquet", 99, 4950L), (3, "f3.parquet", 99, 4951L))
-      .toDF("key", "file_name", "row_group", "row_number")
-      .write.mode("append").parquet(staleDir)
+    RowLevelIndex.build(spark, dir, plans, schema, "k", staleDir,
+      withRowNumbers = true)
+    catalogUpdate(staleDir,
+      "INSERT INTO postings (pkey, file_name, row_group, row_num) VALUES " +
+        "(3, 'f0.parquet', 99, 4950), (3, 'f3.parquet', 99, 4951)")
     val got = RowLevelIndex.fetchRows(spark, dir, staleDir, plans, schema,
         "k", Seq(Int.box(3)))
       .select("payload").collect().map(_.getString(0)).sorted.toSeq
