@@ -1,13 +1,12 @@
 package graft.index
 
-import graft.sources.RowGroupSkipScan
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, spark_partition_id}
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.sql.DriverManager
+import java.sql.PreparedStatement
 
 /** Per-row-group bloom filters in the external catalog — the reference's
   * third named index extension (/root/reference/sqlx-sqlite/src/main.rs:34-37,
@@ -22,18 +21,15 @@ import java.sql.DriverManager
   * "might match" fallback).
   *
   * Scale notes (100 TB):
-  *  - build is ONE distributed job, one task per row group (the same
-  *    partition-per-row-group scan the row-level index build uses); each
-  *    task streams its own column chunk, builds a bloom sized from the
-  *    DISTINCT count it saw (capped at `maxBloomBytes`), and writes it
-  *    over its own JDBC connection — the driver never sees a bloom;
-  *  - the catalog grows by ≤ `maxBloomBytes` (default 4 KB) per row group —
-  *    ~4 GB for a 100 TB table at 128 MB row groups, fine for a catalog DB;
+  *  - [[LedgerBuild]] fills the blooms in its one distributed scan, one
+  *    task per row group, each task streaming its own column chunk into a
+  *    bloom sized from the group's row count (capped at
+  *    [[BloomProbe.MaxBloomBytes]]) — the driver never sees a bloom;
   *  - probing happens INSIDE the catalog's SQL (a registered Java function
   *    over the bloom bytes), so the pruning query stays one round trip and
   *    bloom bytes never ship to the planner.
   */
-object BloomIndex {
+object BloomIndex extends LedgerFamily {
 
   /** Types a bloom column may have: exact-equality-probe-able types whose
     * values hash identically at ingest and probe time (integrals widen to
@@ -43,48 +39,20 @@ object BloomIndex {
     case _ => false
   }
 
-  /** Build + attach blooms for `bloomCol` over the row groups in `plans`.
-    * Idempotent: re-running overwrites each row group's bloom. Must run
-    * AFTER the footer-stats ingest (it updates existing catalog rows). */
-  def build(
-      spark: SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      bloomCol: String,
-      dbPath: String,
-      fpp: Double = 0.01,
-      maxBloomBytes: Int = 4096): Unit = {
-    require(supported(dataSchema(bloomCol).dataType),
-      s"bloom column $bloomCol has unsupported type ${dataSchema(bloomCol).dataType}")
-    // (file, row group, catalog row count) per scan partition: the row
-    // count pre-sizes each bloom so values STREAM into it — per-task
-    // memory is the bloom's byte cap, independent of row-group size
-    // (a distinct-set would be O(row group) heap at 1M-row groups)
-    val rowsByFile = plans.map(p => p.fileName -> p.rowGroupRows).toMap
-    val rgMeta = spark.sparkContext.broadcast(
-      graft.plans.RowGroupScan.perRowGroupMeta(plans).toArray.map { case (f, rg) =>
-        (f, rg, rowsByFile.getOrElse(f, Map.empty).getOrElse(rg, 65536L))
-      })
-    val url = s"jdbc:derby:$dbPath"
-    // one partition per selected row group; pid ↔ row-group identity is the
-    // same contract RowLevelIndex.buildPlan relies on
-    RowGroupSkipScan.scan(spark, dir, plans, dataSchema,
-        mergeRuns = false, requiredCols = Seq(bloomCol))
-      .select(col(bloomCol).as("v"), spark_partition_id().as("pid"))
-      .rdd.foreachPartition { it =>
-        if (it.hasNext) {
-          val first = it.next()
-          val pid = first.getInt(1)
-          val (fileName, rowGroup, rowCount) = rgMeta.value(pid)
-          val bloom = BloomProbe.create(rowCount, fpp, maxBloomBytes)
-          def add(r: org.apache.spark.sql.Row): Unit =
-            if (!r.isNullAt(0)) BloomProbe.put(bloom, r.get(0))
-          add(first); it.foreach(add)
-          BloomProbe.attachViaJdbc(url, fileName, rowGroup, bloomCol,
-            BloomProbe.serialize(bloom))
-        }
-      }
+  def columns(c: String): Seq[(String, String)] = Seq(s"${c}_bloom" -> LedgerBuild.Sketch)
+
+  def derive(c: String, dt: DataType): Column = col(c)
+
+  /** Sized from the catalog's row count, so values stream into the bloom:
+    * per-task memory is the bloom's byte cap, independent of row-group
+    * size (a distinct-set would be O(row group) heap at 1M-row groups). */
+  def accumulator(dt: DataType, rowCount: Long): LedgerAcc = new LedgerAcc {
+    private val bloom = BloomProbe.create(rowCount)
+    def add(r: Row, slot: Int): Unit = BloomProbe.put(bloom, r.get(slot))
+    def bind(ps: PreparedStatement): Boolean = {
+      ps.setBytes(1, BloomProbe.serialize(bloom))
+      true
+    }
   }
 }
 
@@ -95,15 +63,23 @@ object BloomIndex {
   * the pruning query never ships bloom bytes out of the store. */
 object BloomProbe {
 
+  /** Target false-positive rate of a bloom sized for its row group. */
+  val Fpp = 0.01
+
+  /** Byte cap of one bloom: the catalog grows by at most this per row
+    * group (~4 GB for a 100 TB table at 128 MB row groups). */
+  val MaxBloomBytes = 4096
+
   /** Empty bloom sized for `expectedItems` (an upper bound — the catalog's
-    * row count stands in for the distinct count) at `fpp`, bit-capped so
-    * the catalog row stays small; at the cap the filter degrades
-    * gracefully to a higher fpp (over-scan, never under-scan). */
-  def create(expectedItems: Long, fpp: Double, maxBloomBytes: Int): BloomFilter = {
+    * row count stands in for the distinct count) at [[Fpp]], capped at
+    * [[MaxBloomBytes]] so the catalog row stays small; at the cap the
+    * filter degrades gracefully to a higher fpp (over-scan, never
+    * under-scan). */
+  def create(expectedItems: Long): BloomFilter = {
     val n = math.max(1L, expectedItems)
     val optimalBits =
-      math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val bits = math.max(64L, math.min(optimalBits, maxBloomBytes.toLong * 8L))
+      math.ceil(-n * math.log(Fpp) / (math.log(2) * math.log(2))).toLong
+    val bits = math.max(64L, math.min(optimalBits, MaxBloomBytes.toLong * 8L))
     BloomFilter.create(n, bits)
   }
 
@@ -119,27 +95,6 @@ object BloomProbe {
     val out = new ByteArrayOutputStream()
     bloom.writeTo(out)
     out.toByteArray
-  }
-
-  /** Executor-side attach over the caller's own catalog connection —
-    * same per-task JDBC shape as DerbyStatsIndex.ingestAll. */
-  def attachViaJdbc(
-      url: String, fileName: String, rowGroup: Int,
-      colName: String, bytes: Array[Byte]): Unit = {
-    DerbyStatsIndex.ensureDriver()
-    val conn = DriverManager.getConnection(url)
-    try {
-      val ps = conn.prepareStatement(
-        s"""UPDATE row_group_statistics SET ${colName}_bloom = ?
-           |WHERE row_group = ?
-           |  AND file_id = (SELECT file_id FROM file_statistics WHERE file_name = ?)"""
-          .stripMargin)
-      ps.setBytes(1, bytes)
-      ps.setInt(2, rowGroup)
-      ps.setString(3, fileName)
-      ps.executeUpdate()
-      ps.close()
-    } finally conn.close()
   }
 
   // ---- Derby-callable probes ----------------------------------------------

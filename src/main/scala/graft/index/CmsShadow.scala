@@ -1,12 +1,10 @@
 package graft.index
 
-import graft.sources.RowGroupSkipScan
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, spark_partition_id, when, xxhash64}
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.types._
 
 import java.nio.ByteBuffer
-import java.sql.DriverManager
+import java.sql.PreparedStatement
 
 /** Per-row-group COUNT-MIN ledger (r15) — the point-frequency member of
   * the shadow family, completing the sketch quartet the catalog serves:
@@ -40,7 +38,7 @@ import java.sql.DriverManager
   * never replaces an exact aggregate in a plan rewrite — explicit API
   * capability ([[StatsIndex.approxFrequency]]), fail-closed coverage.
   */
-object CmsShadow {
+object CmsShadow extends LedgerFamily {
 
   val Depth = 4
   val Width = 1024
@@ -111,53 +109,13 @@ object CmsShadow {
     Array.fill(Depth * Width)(buf.getInt)
   }
 
-  /** One pass over the given plans' row groups for `cmsCol`: per task,
-    * fold the column's xxhash64 values into a counter table, attach the
-    * bytes — the same executor-side JDBC shape as every shadow build. */
-  def build(
-      spark: SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      cmsCol: String,
-      dbPath: String): Unit = {
-    require(supported(dataSchema(cmsCol).dataType),
-      s"cms column $cmsCol has unsupported type ${dataSchema(cmsCol).dataType}")
-    val rgMeta = spark.sparkContext.broadcast(
-      graft.plans.RowGroupScan.perRowGroupMeta(plans).toArray)
-    val url = s"jdbc:derby:$dbPath"
-    RowGroupSkipScan.scan(spark, dir, plans, dataSchema,
-        mergeRuns = false, requiredCols = Seq(cmsCol))
-      .select(
-        when(col(cmsCol).isNotNull, xxhash64(col(cmsCol))).as("h"),
-        spark_partition_id().as("pid"))
-      .rdd.foreachPartition { it =>
-        var pid = -1
-        val counts = new Array[Int](Depth * Width)
-        var any = false
-        it.foreach { r =>
-          pid = r.getInt(1)
-          any = true
-          if (!r.isNullAt(0)) add(counts, r.getLong(0))
-        }
-        if (any && pid >= 0) {
-          val (fileName, rowGroup) = rgMeta.value(pid)
-          DerbyStatsIndex.ensureDriver()
-          val conn = DriverManager.getConnection(url)
-          try {
-            val up = conn.prepareStatement(
-              s"""UPDATE row_group_statistics
-                 |SET ${cmsCol}_cms = ?
-                 |WHERE row_group = ? AND file_id =
-                 |  (SELECT file_id FROM file_statistics WHERE file_name = ?)"""
-                .stripMargin)
-            up.setBytes(1, serialize(counts))
-            up.setInt(2, rowGroup)
-            up.setString(3, fileName)
-            up.executeUpdate()
-            up.close()
-          } finally conn.close()
-        }
-      }
+  def columns(c: String): Seq[(String, String)] = Seq(s"${c}_cms" -> LedgerBuild.Sketch)
+
+  def derive(c: String, dt: DataType): Column = HllShadow.derive(c, dt)
+
+  def accumulator(dt: DataType, rowCount: Long): LedgerAcc = new LedgerAcc {
+    private val counts = new Array[Int](Depth * Width)
+    def add(r: Row, slot: Int): Unit = CmsShadow.add(counts, r.getLong(slot))
+    def bind(ps: PreparedStatement): Boolean = { ps.setBytes(1, serialize(counts)); true }
   }
 }

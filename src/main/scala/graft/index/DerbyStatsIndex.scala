@@ -104,31 +104,7 @@ final class DerbyStatsIndex(
              // frequency certificate pair a count with the stored min on
              // exactly the groups where that is sound.
              s"${f.name}_min_exact SMALLINT") else Nil) ++
-        // per-row-group bloom, attached post-ingest by BloomIndex.build;
-        // NULL until then ("unknown ⇒ might match" like every other stat)
-        (if (bloomCols.contains(f.name))
-           Seq(s"${f.name}_bloom VARCHAR(32672) FOR BIT DATA") else Nil) ++
-        // value-frequency shadow (rows at the real min / max), attached
-        // post-ingest by FreqShadow.build; NULL until then
-        (if (FreqShadow.supported(f.dataType))
-           Seq(s"${f.name}_min_freq BIGINT", s"${f.name}_max_freq BIGINT")
-         else Nil) ++
-        // per-row-group sum shadow, attached post-ingest by
-        // SumShadow.build; NULL until then
-        (if (SumShadow.supported(f.dataType))
-           Seq(s"${f.name}_sum BIGINT") else Nil) ++
-        // per-row-group HLL register ledger (r15), attached post-ingest
-        // by HllShadow.build; NULL until then ("no sketch ⇒ no estimate")
-        (if (HllShadow.supported(f.dataType))
-           Seq(s"${f.name}_hll VARCHAR(32672) FOR BIT DATA") else Nil) ++
-        // per-row-group quantile summary (r15), attached post-ingest by
-        // QuantileShadow.build; NULL until then (fail-closed estimate)
-        (if (QuantileShadow.supported(f.dataType))
-           Seq(s"${f.name}_qsk VARCHAR(32672) FOR BIT DATA") else Nil) ++
-        // per-row-group count-min table (r15), attached post-ingest by
-        // CmsShadow.build; NULL until then (fail-closed estimate)
-        (if (CmsShadow.supported(f.dataType))
-           Seq(s"${f.name}_cms VARCHAR(32672) FOR BIT DATA") else Nil)
+        ledgerColumns(f)
     }
     createIfMissing(
       s"""CREATE TABLE row_group_statistics (
@@ -156,31 +132,29 @@ final class DerbyStatsIndex(
           |RETURNS NULL ON NULL INPUT
           |EXTERNAL NAME 'graft.index.BloomProbe.mightContainString'""".stripMargin)
     }
-    // upgrade path: freq shadow / min-exact columns on a catalog created
+    // upgrade path: ledger / min-exact columns on a catalog created
     // before they existed (X0Y32 = column already there — the normal
     // case). A pre-upgrade catalog's NULL markers read as "unknown ⇒
     // unusable", which is the sound default for rows ingested before the
     // marker was recorded.
     indexedCols.foreach { f =>
-      ((if (FreqShadow.supported(f.dataType))
-          Seq(s"${f.name}_min_freq BIGINT", s"${f.name}_max_freq BIGINT")
-        else Nil) ++
-        (if (f.dataType == StringType)
-          Seq(s"${f.name}_min_exact SMALLINT") else Nil) ++
-        (if (SumShadow.supported(f.dataType))
-          Seq(s"${f.name}_sum BIGINT") else Nil) ++
-        (if (HllShadow.supported(f.dataType))
-          Seq(s"${f.name}_hll VARCHAR(32672) FOR BIT DATA") else Nil) ++
-        (if (QuantileShadow.supported(f.dataType))
-          Seq(s"${f.name}_qsk VARCHAR(32672) FOR BIT DATA") else Nil) ++
-        (if (CmsShadow.supported(f.dataType))
-          Seq(s"${f.name}_cms VARCHAR(32672) FOR BIT DATA") else Nil)).foreach { c =>
+      ((if (f.dataType == StringType) Seq(s"${f.name}_min_exact SMALLINT") else Nil) ++
+        ledgerColumns(f)).foreach { c =>
         try st.execute(s"ALTER TABLE row_group_statistics ADD COLUMN $c")
         catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
       }
     }
     st.close()
   }
+
+  /** DDL of `f`'s ledger columns: blooms on the columns this catalog was
+    * built with them for, every other family on the columns whose type it
+    * supports. Each ledger column is NULL until [[rebuildLedgers]] fills
+    * it ("unknown" to every reader). */
+  private def ledgerColumns(f: StructField): Seq[String] =
+    LedgerBuild.Families
+      .filter(l => if (l eq BloomIndex) bloomCols.contains(f.name) else l.supported(f.dataType))
+      .flatMap(_.columns(f.name)).map { case (c, t) => s"$c $t" }
 
   // ---- ingest (I3, index.rs:242-329) ---------------------------------------
 
@@ -1027,82 +1001,12 @@ final class DerbyStatsIndex(
       }
     }
 
-  /** Per-file bloom maintenance: one [[BloomIndex.build]] job per bloom
-    * column over JUST the given plans — the hook compaction and the
-    * streaming sink use to keep probe precision on a changing file set.
-    * Columns absent from `dataSchema` (schema evolution: files written
-    * before the column existed) are skipped — their blooms stay NULL,
-    * which probes as "might match" (sound). */
-  override def rebuildBlooms(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType): Unit =
-    if (plans.nonEmpty)
-      bloomCols.toSeq.sorted
-        .filter(c => dataSchema.fieldNames.contains(c))
-        .foreach(c => BloomIndex.build(spark, dir, plans, dataSchema, c, dbPath))
-
-  override def rebuildShadows(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      freqCols: Seq[String],
-      sumCols: Seq[String]): Unit =
-    if (plans.nonEmpty) {
-      freqCols.distinct.sorted
-        .filter(c => dataSchema.fieldNames.contains(c) &&
-          indexedCols.exists(f => f.name == c && FreqShadow.supported(f.dataType)))
-        .foreach(c => FreqShadow.build(spark, dir, plans, dataSchema, c, dbPath))
-      sumCols.distinct.sorted
-        .filter(c => dataSchema.fieldNames.contains(c) &&
-          indexedCols.exists(f => f.name == c && SumShadow.supported(f.dataType)))
-        .foreach(c => SumShadow.build(spark, dir, plans, dataSchema, c, dbPath))
-    }
-
-  override def rebuildHll(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      hllCols: Seq[String]): Unit =
-    if (plans.nonEmpty)
-      hllCols.distinct.sorted
-        .filter(c => dataSchema.fieldNames.contains(c) &&
-          indexedCols.exists(f => f.name == c && HllShadow.supported(f.dataType)))
-        .foreach(c => HllShadow.build(spark, dir, plans, dataSchema, c, dbPath))
-
-  override def rebuildQuantiles(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      quantileCols: Seq[String]): Unit =
-    if (plans.nonEmpty)
-      quantileCols.distinct.sorted
-        .filter(c => dataSchema.fieldNames.contains(c) &&
-          indexedCols.exists(f => f.name == c && QuantileShadow.supported(f.dataType)))
-        .foreach(c => QuantileShadow.build(spark, dir, plans, dataSchema, c, dbPath))
-
-  override def rebuildCms(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      cmsCols: Seq[String]): Unit =
-    if (plans.nonEmpty)
-      cmsCols.distinct.sorted
-        .filter(c => dataSchema.fieldNames.contains(c) &&
-          indexedCols.exists(f => f.name == c && CmsShadow.supported(f.dataType)))
-        .foreach(c => CmsShadow.build(spark, dir, plans, dataSchema, c, dbPath))
-
-  /** FUSED ledger maintenance (r16): validate each family's columns
-    * exactly as the individual hooks do, then build every surviving
-    * (family, column) in ONE [[LedgerBuild]] scan of the plans — the
-    * per-batch/per-compaction maintenance path reads the new files once
-    * instead of once per family. A single surviving family still goes
-    * through the fused pass (same scan count as the standalone build). */
+  /** Ledger maintenance for JUST the given plans' files: every requested
+    * (family, column) ledger in ONE [[LedgerBuild]] scan. Columns absent
+    * from `dataSchema` (schema evolution: files written before the column
+    * existed), not indexed, or of a type the family does not support are
+    * skipped — their ledgers stay NULL, which only declines the readers
+    * (sound). `blooms` rebuilds every [[bloomCols]] column's blooms. */
   override def rebuildLedgers(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -1114,19 +1018,17 @@ final class DerbyStatsIndex(
       quantileCols: Seq[String],
       cmsCols: Seq[String],
       blooms: Boolean): Unit = {
-    if (plans.isEmpty) return
-    def valid(cols: Seq[String], ok: DataType => Boolean): Seq[String] =
-      cols.distinct.sorted.filter(c => dataSchema.fieldNames.contains(c) &&
-        indexedCols.exists(f => f.name == c && ok(f.dataType)))
-    val b = if (blooms) bloomCols.toSeq.sorted
-      .filter(c => dataSchema.fieldNames.contains(c)) else Nil
-    LedgerBuild.buildAll(spark, dir, plans, dataSchema, dbPath,
-      bloomCols = b,
-      freqCols = valid(freqCols, FreqShadow.supported),
-      sumCols = valid(sumCols, SumShadow.supported),
-      hllCols = valid(hllCols, HllShadow.supported),
-      quantileCols = valid(quantileCols, QuantileShadow.supported),
-      cmsCols = valid(cmsCols, CmsShadow.supported))
+    val requested = Seq(
+      BloomIndex -> (if (blooms) bloomCols.toSeq else Nil), FreqShadow -> freqCols,
+      SumShadow -> sumCols, HllShadow -> hllCols, QuantileShadow -> quantileCols,
+      CmsShadow -> cmsCols)
+    val ledgers = for {
+      (family, cols) <- requested
+      c <- cols.distinct.sorted
+      f <- indexedCols.find(_.name == c)
+      if dataSchema.fieldNames.contains(c) && family.supported(f.dataType)
+    } yield (family: LedgerFamily, c)
+    LedgerBuild.buildAll(spark, dir, plans, dataSchema, dbPath, ledgers)
   }
 
   override def approxFrequency(

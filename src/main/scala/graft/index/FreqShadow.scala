@@ -1,11 +1,10 @@
 package graft.index
 
-import graft.sources.RowGroupSkipScan
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, spark_partition_id}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import java.sql.DriverManager
+import java.sql.PreparedStatement
 
 /** VALUE-FREQUENCY shadow build — the optional data-scan ingest step the
   * lexicographic top-k certificate uses to handle DOMINANT-value groups
@@ -17,14 +16,10 @@ import java.sql.DriverManager
   * take) can then certify its dominant slice AT the extreme instead of
   * the whole group at its weaker guarantee bound.
   *
-  * Footer stats cannot know frequencies, so this is a separate build
-  * step like [[BloomIndex.build]] and [[RowLevelIndex]]: one distributed
-  * job, one task per row group (the `spark_partition_id` ↔ row-group
-  * contract RowGroupSkipScan's unmerged scan provides), O(1) state per
-  * task (running extremes + two counters — a value histogram would be
-  * O(distinct)), executor-side JDBC attach. Re-indexing a file deletes
-  * its row-group rows, so stale frequencies cannot survive a data
-  * change; rebuild after re-index like blooms.
+  * Footer stats cannot know frequencies, so [[LedgerBuild]] fills them
+  * from a data scan, like blooms. Re-indexing a file deletes its
+  * row-group rows, so stale frequencies cannot survive a data change;
+  * rebuild after re-index like blooms.
   *
   * Supported types are the ones whose STORED extremes are verbatim-exact
   * so a frequency can be soundly paired with them: integrals (and
@@ -38,7 +33,7 @@ import java.sql.DriverManager
   * excluded like everywhere else in the ordering-certified family (NaN
   * comparator hazards).
   */
-object FreqShadow {
+object FreqShadow extends LedgerFamily {
 
   def supported(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | DateType |
@@ -81,67 +76,37 @@ object FreqShadow {
       throw new IllegalArgumentException(s"unsupported freq value $other")
   }
 
-  /** One pass over the given plans' row groups for `freqCol`: per task,
-    * stream the column tracking (min, minCount, max, maxCount), then
-    * attach the two counters to the catalog row. All-null groups leave
-    * the shadow NULL (no certificate). */
-  def build(
-      spark: SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      freqCol: String,
-      dbPath: String): Unit = {
-    require(supported(dataSchema(freqCol).dataType),
-      s"freq column $freqCol has unsupported type ${dataSchema(freqCol).dataType}")
-    val rgMeta = spark.sparkContext.broadcast(
-      graft.plans.RowGroupScan.perRowGroupMeta(plans).toArray)
-    val url = s"jdbc:derby:$dbPath"
-    RowGroupSkipScan.scan(spark, dir, plans, dataSchema,
-        mergeRuns = false, requiredCols = Seq(freqCol))
-      .select(col(freqCol).as("v"), spark_partition_id().as("pid"))
-      .rdd.foreachPartition { it =>
-        var pid = -1
-        var mn: Any = null
-        var mx: Any = null
-        var cmn = 0L
-        var cmx = 0L
-        it.foreach { r =>
-          pid = r.getInt(1)
-          if (!r.isNullAt(0)) {
-            val v = r.get(0)
-            if (mn == null) { mn = v; mx = v; cmn = 1L; cmx = 1L }
-            else {
-              val cLo = compareValues(v, mn)
-              if (cLo < 0) { mn = v; cmn = 1L }
-              else if (cLo == 0) cmn += 1L
-              // not an else-branch of the min test: a constant group's
-              // value ties BOTH extremes and must count in both
-              val cHi = compareValues(v, mx)
-              if (cHi > 0) { mx = v; cmx = 1L }
-              else if (cHi == 0) cmx += 1L
-            }
-          }
-        }
-        if (pid >= 0 && mn != null) {
-          val (fileName, rowGroup) = rgMeta.value(pid)
-          DerbyStatsIndex.ensureDriver()
-          val conn = DriverManager.getConnection(url)
-          try {
-            val up = conn.prepareStatement(
-              s"""UPDATE row_group_statistics
-                 |SET ${freqCol}_min_freq = ?, ${freqCol}_max_freq = ?
-                 |WHERE row_group = ? AND file_id =
-                 |  (SELECT file_id FROM file_statistics WHERE file_name = ?)"""
-                .stripMargin)
-            up.setLong(1, cmn)
-            up.setLong(2, cmx)
-            up.setInt(3, rowGroup)
-            up.setString(4, fileName)
-            up.executeUpdate()
-            up.close()
-          } finally conn.close()
-        }
+  def columns(c: String): Seq[(String, String)] =
+    Seq(s"${c}_min_freq" -> "BIGINT", s"${c}_max_freq" -> "BIGINT")
+
+  def derive(c: String, dt: DataType): Column = col(c)
+
+  /** Running extremes and two counters — O(1) state, where a value
+    * histogram would be O(distinct). All-null groups leave the shadow
+    * NULL (no certificate). */
+  def accumulator(dt: DataType, rowCount: Long): LedgerAcc = new LedgerAcc {
+    private var mn: Any = null
+    private var mx: Any = null
+    private var cmn = 0L
+    private var cmx = 0L
+    def add(r: Row, slot: Int): Unit = {
+      val v = r.get(slot)
+      if (mn == null) { mn = v; mx = v; cmn = 1L; cmx = 1L }
+      else {
+        val cLo = compareValues(v, mn)
+        if (cLo < 0) { mn = v; cmn = 1L }
+        else if (cLo == 0) cmn += 1L
+        // not an else-branch of the min test: a constant group's value
+        // ties BOTH extremes and must count in both
+        val cHi = compareValues(v, mx)
+        if (cHi > 0) { mx = v; cmx = 1L }
+        else if (cHi == 0) cmx += 1L
       }
+    }
+    def bind(ps: PreparedStatement): Boolean = mn != null && {
+      ps.setLong(1, cmn)
+      ps.setLong(2, cmx)
+      true
+    }
   }
 }

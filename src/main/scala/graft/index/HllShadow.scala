@@ -1,20 +1,18 @@
 package graft.index
 
-import graft.sources.RowGroupSkipScan
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, spark_partition_id, when, xxhash64}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.{col, when, xxhash64}
 import org.apache.spark.sql.types._
 
-import java.sql.DriverManager
+import java.sql.PreparedStatement
 
 /** Per-row-group HYPERLOGLOG ledger (r15) — the distinct-count member of
   * the optional shadow family ([[BloomIndex]] answers "is THIS value
   * here?", [[FreqShadow]] "how many rows at the extreme?", [[SumShadow]]
   * "what do the values add to?"; this one answers "how many DISTINCT
   * values?"). One dense HLL register array per (row group, column),
-  * attached as a `{col}_hll` binary catalog column by a build pass shaped
-  * exactly like the other shadows: one distributed job, one task per row
-  * group, O(m) state per task, executor-side JDBC attach.
+  * attached as a `{col}_hll` binary catalog column by [[LedgerBuild]]
+  * with O(m) state per task.
   *
   * Why per ROW GROUP and not one table sketch: registers merge by
   * byte-wise max (union semantics, associative/commutative/idempotent),
@@ -42,7 +40,7 @@ import java.sql.DriverManager
   * explicit index-API capability — `StatsIndex.approxDistinct` — the
   * same opt-in posture as the row-level index's point lookups.
   */
-object HllShadow {
+object HllShadow extends LedgerFamily {
 
   /** log2(register count): m = 2048 ⇒ rse ≈ 2.3%, 2 KB per sketch. */
   val P = 11
@@ -95,58 +93,18 @@ object HllShadow {
     math.rint(est).toLong
   }
 
-  /** One pass over the given plans' row groups for `hllCol`: per task,
-    * fold the column's xxhash64 values into a register array, then attach
-    * the bytes to the catalog row. An all-null (or empty) group stores
-    * the ZERO sketch — the merge identity, estimating 0 — so coverage
-    * certification ("every selected group has a sketch") stays a simple
-    * non-NULL test. */
-  def build(
-      spark: SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      hllCol: String,
-      dbPath: String): Unit = {
-    require(supported(dataSchema(hllCol).dataType),
-      s"hll column $hllCol has unsupported type ${dataSchema(hllCol).dataType}")
-    val rgMeta = spark.sparkContext.broadcast(
-      graft.plans.RowGroupScan.perRowGroupMeta(plans).toArray)
-    val url = s"jdbc:derby:$dbPath"
-    RowGroupSkipScan.scan(spark, dir, plans, dataSchema,
-        mergeRuns = false, requiredCols = Seq(hllCol))
-      .select(
-        // null guard BEFORE the hash: xxhash64(NULL) yields the seed,
-        // which would register a phantom distinct value
-        when(col(hllCol).isNotNull, xxhash64(col(hllCol))).as("h"),
-        spark_partition_id().as("pid"))
-      .rdd.foreachPartition { it =>
-        var pid = -1
-        val regs = new Array[Byte](M)
-        var any = false
-        it.foreach { r =>
-          pid = r.getInt(1)
-          any = true
-          if (!r.isNullAt(0)) add(regs, r.getLong(0))
-        }
-        if (any && pid >= 0) {
-          val (fileName, rowGroup) = rgMeta.value(pid)
-          DerbyStatsIndex.ensureDriver()
-          val conn = DriverManager.getConnection(url)
-          try {
-            val up = conn.prepareStatement(
-              s"""UPDATE row_group_statistics
-                 |SET ${hllCol}_hll = ?
-                 |WHERE row_group = ? AND file_id =
-                 |  (SELECT file_id FROM file_statistics WHERE file_name = ?)"""
-                .stripMargin)
-            up.setBytes(1, regs)
-            up.setInt(2, rowGroup)
-            up.setString(3, fileName)
-            up.executeUpdate()
-            up.close()
-          } finally conn.close()
-        }
-      }
+  def columns(c: String): Seq[(String, String)] = Seq(s"${c}_hll" -> LedgerBuild.Sketch)
+
+  /** Null guard BEFORE the hash: xxhash64(NULL) yields the seed, which
+    * would register a phantom distinct value. */
+  def derive(c: String, dt: DataType): Column = when(col(c).isNotNull, xxhash64(col(c)))
+
+  /** An all-null group stores the ZERO sketch — the merge identity,
+    * estimating 0 — so coverage certification ("every selected group has
+    * a sketch") stays a simple non-NULL test. */
+  def accumulator(dt: DataType, rowCount: Long): LedgerAcc = new LedgerAcc {
+    private val regs = new Array[Byte](M)
+    def add(r: Row, slot: Int): Unit = HllShadow.add(regs, r.getLong(slot))
+    def bind(ps: PreparedStatement): Boolean = { ps.setBytes(1, regs); true }
   }
 }

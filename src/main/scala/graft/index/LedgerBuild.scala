@@ -1,115 +1,94 @@
 package graft.index
 
 import graft.sources.RowGroupSkipScan
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{col, spark_partition_id, when, xxhash64}
-import org.apache.spark.sql.types._
-import org.apache.spark.util.sketch.BloomFilter
+import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.functions.spark_partition_id
+import org.apache.spark.sql.types.{DataType, StructType}
 
-import java.sql.DriverManager
+import java.sql.{DriverManager, PreparedStatement}
 
-/** FUSED per-row-group ledger build (r16, optimization round) — every
-  * requested shadow family (bloom, value-frequency, sum, HLL, quantile,
-  * count-min) built in ONE distributed scan of the given plans instead of
-  * one scan per family.
-  *
-  * Why: the maintenance paths that keep ledgers fresh on a CHANGING file
-  * set — the streaming sink's per-micro-batch commit, compaction's
-  * re-attach, merge-upsert — previously launched one `RowGroupSkipScan`
-  * job per (family), i.e. up to five reads of the same new files per
-  * commit (guide §1.2 step 1: remove unnecessary passes). At 100 TB the
-  * batch data is the dominant byte count; reading it once and folding all
-  * accumulators in the same task is strictly less I/O and fewer job
-  * rounds, with per-task state unchanged (each family's accumulator is
-  * exactly what its standalone build held).
-  *
-  * Semantics are IDENTICAL to running the standalone builds in sequence
-  * ([[BloomIndex.build]], [[FreqShadow.build]], [[SumShadow.build]],
-  * [[HllShadow.build]], [[QuantileShadow.build]], [[CmsShadow.build]] —
-  * which remain the single-family entry points and the reference
-  * implementations; LedgerFusionSpec pins byte-equality of the attached
-  * ledgers): same per-family skip conditions (freq leaves all-null groups
-  * NULL; sum/hll/quantile/cms attach on any non-empty group; empty
-  * partitions attach nothing), same accumulation arithmetic, same
-  * catalog UPDATE statements.
+/** One family of per-row-group ledgers (bloom, value-frequency, sum, HLL,
+  * quantile, count-min): which column types it serves, the catalog
+  * columns it owns, the value it reads from the data and how one row
+  * group's values fold into those columns. Each family object sits next
+  * to its sketch code; [[LedgerBuild]] is the only code that scans data
+  * to fill them.
+  */
+trait LedgerFamily extends Serializable {
+  /** Column types this family can build a ledger for. */
+  def supported(dt: DataType): Boolean
+
+  /** Catalog columns of `c`'s ledger with their Derby types, in the order
+    * [[LedgerAcc.bind]] sets them. */
+  def columns(c: String): Seq[(String, String)]
+
+  /** The value the build reads for column `c` of type `dt`. */
+  def derive(c: String, dt: DataType): Column
+
+  /** A fresh accumulator for one row group of `rowCount` rows. */
+  def accumulator(dt: DataType, rowCount: Long): LedgerAcc
+}
+
+/** One row group's state for one (family, column) ledger. */
+trait LedgerAcc {
+  /** Folds the non-null derived value at `slot` of `r`. */
+  def add(r: Row, slot: Int): Unit
+
+  /** Sets this ledger's columns as parameters 1..n of the UPDATE; false
+    * leaves the stored values as they are. */
+  def bind(ps: PreparedStatement): Boolean
+}
+
+/** The per-row-group ledger build: every requested (family, column)
+  * ledger filled in ONE distributed scan of the given plans, one task per
+  * row group (the `spark_partition_id` ↔ row-group contract of
+  * RowGroupSkipScan's unmerged scan), each task folding its group's rows
+  * into one accumulator per ledger and writing them over its own JDBC
+  * connection — the driver never sees a ledger. The streaming sink,
+  * compaction and every `rebuild*` hook of [[DerbyStatsIndex]] build
+  * through here, so a maintenance pass reads new files once whatever it
+  * rebuilds. An empty partition attaches nothing; which groups a family
+  * leaves untouched otherwise is its accumulator's `bind` (freq skips
+  * all-null groups).
   */
 object LedgerBuild {
 
-  /** One scan over `plans`' row groups building every requested ledger.
-    * Callers pass PRE-VALIDATED column lists (schema membership +
-    * per-family `supported` already applied — [[DerbyStatsIndex
-    * .rebuildLedgers]] does this exactly as the individual rebuild hooks
-    * did); this object only fuses the pass. */
+  /** Derby type of a serialized sketch column. */
+  val Sketch = "VARCHAR(32672) FOR BIT DATA"
+
+  /** Every ledger family, in catalog column order. */
+  val Families: Seq[LedgerFamily] =
+    Seq(BloomIndex, FreqShadow, SumShadow, HllShadow, QuantileShadow, CmsShadow)
+
+  /** One scan over `plans`' row groups building every ledger in `ledgers`.
+    * Callers pass validated pairs: the column is in `dataSchema`, its type
+    * is one the family supports and the catalog has the family's columns
+    * for it ([[DerbyStatsIndex.rebuildLedgers]]). */
   def buildAll(
       spark: SparkSession,
       dir: String,
       plans: Seq[FileScanPlan],
       dataSchema: StructType,
       dbPath: String,
-      bloomCols: Seq[String],
-      freqCols: Seq[String],
-      sumCols: Seq[String],
-      hllCols: Seq[String],
-      quantileCols: Seq[String],
-      cmsCols: Seq[String],
-      bloomFpp: Double = 0.01,
-      maxBloomBytes: Int = 4096): Unit = {
-    val families =
-      bloomCols.size + freqCols.size + sumCols.size + hllCols.size +
-        quantileCols.size + cmsCols.size
-    if (plans.isEmpty || families == 0) return
-
-    // ---- shared projection: each (kind, col) derived column exactly once.
-    // RAW serves bloom+freq (external value), HASH serves hll+cms
-    // (null-guarded xxhash64 — the guard is each standalone build's),
-    // SUM is the cast/decimal value, DBL the double cast.
-    sealed trait Kind
-    case object Raw extends Kind
-    case object SumV extends Kind
-    case object Hash extends Kind
-    case object Dbl extends Kind
-    val wanted: Seq[(Kind, String)] =
-      ((bloomCols ++ freqCols).map(c => (Raw: Kind, c)) ++
-        sumCols.map(c => (SumV: Kind, c)) ++
-        (hllCols ++ cmsCols).map(c => (Hash: Kind, c)) ++
-        quantileCols.map(c => (Dbl: Kind, c))).distinct
-    def derive(kind: Kind, c: String): Column = kind match {
-      case Raw => col(c)
-      case SumV => dataSchema(c).dataType match {
-        case _: DecimalType => col(c)
-        case _ => col(c).cast(LongType)
-      }
-      case Hash => when(col(c).isNotNull, xxhash64(col(c)))
-      case Dbl => col(c).cast(DoubleType)
-    }
-    val slot: Map[(Kind, String), Int] = wanted.zipWithIndex.toMap
-    val projection = wanted.map { case (k, c) => derive(k, c).as(s"v${slot((k, c))}") } :+
-      spark_partition_id().as("pid")
-    val pidIdx = wanted.size
-
-    // decimal-sum metadata resolved on the driver (schema is not
-    // serializable-cheap inside the closure)
-    val sumMeta: Array[(String, Boolean, Int)] = sumCols.map { c =>
-      dataSchema(c).dataType match {
-        case d: DecimalType => (c, true, d.scale)
-        case _ => (c, false, 0)
-      }
+      ledgers: Seq[(LedgerFamily, String)]): Unit = {
+    if (plans.isEmpty || ledgers.isEmpty) return
+    val families = ledgers.map(_._1).toArray
+    val types = ledgers.map { case (_, c) => dataSchema(c).dataType }.toArray
+    // a value two families read (bloom and freq the raw column, HLL and
+    // count-min its hash) is projected once
+    val derived = ledgers.zip(types).map { case ((l, c), dt) => l.derive(c, dt) }
+    val projected = derived.distinctBy(_.toString)
+    val slots = derived.map(d => projected.indexWhere(_.toString == d.toString)).toArray
+    val pidIdx = projected.size
+    val updates = ledgers.map { case (l, c) =>
+      s"""UPDATE row_group_statistics SET ${l.columns(c).map(_._1 + " = ?").mkString(", ")}
+         |WHERE row_group = ? AND file_id =
+         |  (SELECT file_id FROM file_statistics WHERE file_name = ?)""".stripMargin
     }.toArray
-    val bloomColsArr = bloomCols.toArray
-    val freqColsArr = freqCols.toArray
-    val hllColsArr = hllCols.toArray
-    val qColsArr = quantileCols.toArray
-    val cmsColsArr = cmsCols.toArray
-    // per-family slot arrays resolved ON THE DRIVER — the per-row loop
-    // below indexes a flat Int array instead of allocating a tuple and
-    // hashing a Map per (row × family-column)
-    val bloomSlots = bloomColsArr.map(c => slot((Raw, c)))
-    val freqSlots = freqColsArr.map(c => slot((Raw, c)))
-    val sumSlots = sumMeta.map { case (c, _, _) => slot((SumV, c)) }
-    val hllSlots = hllColsArr.map(c => slot((Hash, c)))
-    val qSlots = qColsArr.map(c => slot((Dbl, c)))
-    val cmsSlots = cmsColsArr.map(c => slot((Hash, c)))
+    val arity = ledgers.map { case (l, c) => l.columns(c).size }.toArray
 
+    // (file, row group, catalog row count) per scan partition: the row
+    // count sizes each bloom up front, so values stream into it
     val rowsByFile = plans.map(p => p.fileName -> p.rowGroupRows).toMap
     val rgMeta = spark.sparkContext.broadcast(
       graft.plans.RowGroupScan.perRowGroupMeta(plans).toArray.map {
@@ -117,170 +96,36 @@ object LedgerBuild {
           (f, rg, rowsByFile.getOrElse(f, Map.empty).getOrElse(rg, 65536L))
       })
     val url = s"jdbc:derby:$dbPath"
-    val requiredCols = wanted.map(_._2).distinct
 
     RowGroupSkipScan.scan(spark, dir, plans, dataSchema,
-        mergeRuns = false, requiredCols = requiredCols)
-      .select(projection: _*)
+        mergeRuns = false, requiredCols = ledgers.map(_._2).distinct)
+      .select(projected.zipWithIndex.map { case (d, i) => d.as(s"v$i") } :+
+        spark_partition_id().as("pid"): _*)
       .rdd.foreachPartition { it =>
-        var pid = -1
-        var any = false
-        // per-family accumulators, indexed like their cols arrays
-        val blooms = new Array[BloomFilter](bloomColsArr.length)
-        val fMn = new Array[Any](freqColsArr.length)
-        val fMx = new Array[Any](freqColsArr.length)
-        val fCmn = new Array[Long](freqColsArr.length)
-        val fCmx = new Array[Long](freqColsArr.length)
-        val sums = new Array[Long](sumMeta.length)
-        val sumOverflow = new Array[Boolean](sumMeta.length)
-        val hlls = hllColsArr.map(_ => new Array[Byte](HllShadow.M))
-        val qVals = qColsArr.map(_ =>
-          scala.collection.mutable.ArrayBuilder.make[Double])
-        val cmss = cmsColsArr.map(_ => new Array[Int](CmsShadow.Depth * CmsShadow.Width))
-        var bloomsReady = bloomColsArr.isEmpty
-        it.foreach { r =>
-          pid = r.getInt(pidIdx)
-          any = true
-          if (!bloomsReady) {
-            // sized from the catalog's row count, like the standalone build
-            val rowCount = rgMeta.value(pid)._3
+        if (it.hasNext) {
+          val first = it.next()
+          val (fileName, rowGroup, rowCount) = rgMeta.value(first.getInt(pidIdx))
+          val accs = Array.tabulate(families.length)(i =>
+            families(i).accumulator(types(i), rowCount))
+          def fold(r: Row): Unit = {
             var i = 0
-            while (i < blooms.length) {
-              blooms(i) = BloomProbe.create(rowCount, bloomFpp, maxBloomBytes)
+            while (i < accs.length) {
+              val s = slots(i)
+              if (!r.isNullAt(s)) accs(i).add(r, s)
               i += 1
             }
-            bloomsReady = true
           }
-          var i = 0
-          while (i < bloomColsArr.length) {
-            val s = bloomSlots(i)
-            if (!r.isNullAt(s)) BloomProbe.put(blooms(i), r.get(s))
-            i += 1
-          }
-          i = 0
-          while (i < freqColsArr.length) {
-            val s = freqSlots(i)
-            if (!r.isNullAt(s)) {
-              val v = r.get(s)
-              if (fMn(i) == null) {
-                fMn(i) = v; fMx(i) = v; fCmn(i) = 1L; fCmx(i) = 1L
-              } else {
-                val cLo = FreqShadow.compareValues(v, fMn(i))
-                if (cLo < 0) { fMn(i) = v; fCmn(i) = 1L }
-                else if (cLo == 0) fCmn(i) += 1L
-                val cHi = FreqShadow.compareValues(v, fMx(i))
-                if (cHi > 0) { fMx(i) = v; fCmx(i) = 1L }
-                else if (cHi == 0) fCmx(i) += 1L
-              }
-            }
-            i += 1
-          }
-          i = 0
-          while (i < sumMeta.length) {
-            val (_, isDec, scale) = sumMeta(i)
-            val s = sumSlots(i)
-            if (!r.isNullAt(s) && !sumOverflow(i)) {
-              try {
-                val v =
-                  if (isDec)
-                    r.getDecimal(s).setScale(scale).unscaledValue().longValueExact()
-                  else r.getLong(s)
-                sums(i) = Math.addExact(sums(i), v)
-              } catch { case _: ArithmeticException => sumOverflow(i) = true }
-            }
-            i += 1
-          }
-          i = 0
-          while (i < hllColsArr.length) {
-            val s = hllSlots(i)
-            if (!r.isNullAt(s)) HllShadow.add(hlls(i), r.getLong(s))
-            i += 1
-          }
-          i = 0
-          while (i < qColsArr.length) {
-            val s = qSlots(i)
-            if (!r.isNullAt(s)) {
-              val v = r.getDouble(s)
-              if (!v.isNaN) qVals(i) += v
-            }
-            i += 1
-          }
-          i = 0
-          while (i < cmsColsArr.length) {
-            val s = cmsSlots(i)
-            if (!r.isNullAt(s)) CmsShadow.add(cmss(i), r.getLong(s))
-            i += 1
-          }
-        }
-        if (any && pid >= 0) {
-          val (fileName, rowGroup, _) = rgMeta.value(pid)
+          fold(first)
+          it.foreach(fold)
           DerbyStatsIndex.ensureDriver()
           val conn = DriverManager.getConnection(url)
-          try {
-            // one UPDATE per firing family-column, identical statements to
-            // the standalone builds (freq skips all-null groups — leaving
-            // any pre-existing value exactly like the standalone build)
-            def update(set: String)(bind: java.sql.PreparedStatement => Unit): Unit = {
-              val up = conn.prepareStatement(
-                s"""UPDATE row_group_statistics SET $set
-                   |WHERE row_group = ? AND file_id =
-                   |  (SELECT file_id FROM file_statistics WHERE file_name = ?)"""
-                  .stripMargin)
-              try { bind(up); up.executeUpdate(); () } finally up.close()
-            }
-            var i = 0
-            while (i < bloomColsArr.length) {
-              update(s"${bloomColsArr(i)}_bloom = ?") { up =>
-                up.setBytes(1, BloomProbe.serialize(blooms(i)))
-                up.setInt(2, rowGroup); up.setString(3, fileName)
-              }
-              i += 1
-            }
-            i = 0
-            while (i < freqColsArr.length) {
-              if (fMn(i) != null)
-                update(s"${freqColsArr(i)}_min_freq = ?, ${freqColsArr(i)}_max_freq = ?") { up =>
-                  up.setLong(1, fCmn(i)); up.setLong(2, fCmx(i))
-                  up.setInt(3, rowGroup); up.setString(4, fileName)
-                }
-              i += 1
-            }
-            i = 0
-            while (i < sumMeta.length) {
-              update(s"${sumMeta(i)._1}_sum = ?") { up =>
-                if (sumOverflow(i)) up.setNull(1, java.sql.Types.BIGINT)
-                else up.setLong(1, sums(i))
-                up.setInt(2, rowGroup); up.setString(3, fileName)
-              }
-              i += 1
-            }
-            i = 0
-            while (i < hllColsArr.length) {
-              update(s"${hllColsArr(i)}_hll = ?") { up =>
-                up.setBytes(1, hlls(i))
-                up.setInt(2, rowGroup); up.setString(3, fileName)
-              }
-              i += 1
-            }
-            i = 0
-            while (i < qColsArr.length) {
-              val arr = qVals(i).result()
-              java.util.Arrays.sort(arr)
-              val (pts, count) = QuantileShadow.summarize(arr)
-              update(s"${qColsArr(i)}_qsk = ?") { up =>
-                up.setBytes(1, QuantileShadow.serialize(pts, count))
-                up.setInt(2, rowGroup); up.setString(3, fileName)
-              }
-              i += 1
-            }
-            i = 0
-            while (i < cmsColsArr.length) {
-              update(s"${cmsColsArr(i)}_cms = ?") { up =>
-                up.setBytes(1, CmsShadow.serialize(cmss(i)))
-                up.setInt(2, rowGroup); up.setString(3, fileName)
-              }
-              i += 1
-            }
+          try accs.indices.foreach { i =>
+            val up = conn.prepareStatement(updates(i))
+            try if (accs(i).bind(up)) {
+              up.setInt(arity(i) + 1, rowGroup)
+              up.setString(arity(i) + 2, fileName)
+              up.executeUpdate()
+            } finally up.close()
           } finally conn.close()
         }
       }

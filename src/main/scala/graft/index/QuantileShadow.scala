@@ -1,12 +1,11 @@
 package graft.index
 
-import graft.sources.RowGroupSkipScan
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, spark_partition_id}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import java.nio.ByteBuffer
-import java.sql.DriverManager
+import java.sql.PreparedStatement
 
 /** Per-row-group QUANTILE ledger (r15) — the order-statistics member of
   * the optional shadow family ([[HllShadow]] answers "how many DISTINCT
@@ -14,8 +13,7 @@ import java.sql.DriverManager
   * equi-depth summary per (row group, column): the group's non-null
   * values sorted once at build time, K = 64 evenly-spaced order
   * statistics kept (≤ 520 bytes), attached as a `{col}_qsk` binary
-  * catalog column by the same build shape as every other shadow — one
-  * distributed job, one task per row group, executor-side JDBC attach.
+  * catalog column by [[LedgerBuild]].
   *
   * Why per ROW GROUP: equi-depth summaries MERGE by weighted union (each
   * point of group i carries weight count_i / k_i), so the quantile of ANY
@@ -40,7 +38,7 @@ import java.sql.DriverManager
   * stays the certificate family's invariant). It is an explicit index-API
   * capability — [[StatsIndex.approxQuantiles]].
   */
-object QuantileShadow {
+object QuantileShadow extends LedgerFamily {
 
   /** Summary points per row group: rank error ≤ N/(2K) ≈ 0.78 %. */
   val K = 64
@@ -109,59 +107,24 @@ object QuantileShadow {
     Some(pairs(i)._1)
   }
 
-  /** One pass over the given plans' row groups for `qCol`: per task,
-    * sort the group's non-null non-NaN values, keep the K-point summary,
-    * attach the bytes to the catalog row. Same executor-side JDBC shape
-    * as [[HllShadow.build]]. */
-  def build(
-      spark: SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      qCol: String,
-      dbPath: String): Unit = {
-    require(supported(dataSchema(qCol).dataType),
-      s"quantile column $qCol has unsupported type ${dataSchema(qCol).dataType}")
-    val rgMeta = spark.sparkContext.broadcast(
-      graft.plans.RowGroupScan.perRowGroupMeta(plans).toArray)
-    val url = s"jdbc:derby:$dbPath"
-    RowGroupSkipScan.scan(spark, dir, plans, dataSchema,
-        mergeRuns = false, requiredCols = Seq(qCol))
-      .select(col(qCol).cast(DoubleType).as("v"),
-        spark_partition_id().as("pid"))
-      .rdd.foreachPartition { it =>
-        var pid = -1
-        val vals = scala.collection.mutable.ArrayBuilder.make[Double]
-        var any = false
-        it.foreach { r =>
-          pid = r.getInt(1)
-          any = true
-          if (!r.isNullAt(0)) {
-            val v = r.getDouble(0)
-            if (!v.isNaN) vals += v
-          }
-        }
-        if (any && pid >= 0) {
-          val arr = vals.result()
-          java.util.Arrays.sort(arr)
-          val (pts, count) = summarize(arr)
-          val (fileName, rowGroup) = rgMeta.value(pid)
-          DerbyStatsIndex.ensureDriver()
-          val conn = DriverManager.getConnection(url)
-          try {
-            val up = conn.prepareStatement(
-              s"""UPDATE row_group_statistics
-                 |SET ${qCol}_qsk = ?
-                 |WHERE row_group = ? AND file_id =
-                 |  (SELECT file_id FROM file_statistics WHERE file_name = ?)"""
-                .stripMargin)
-            up.setBytes(1, serialize(pts, count))
-            up.setInt(2, rowGroup)
-            up.setString(3, fileName)
-            up.executeUpdate()
-            up.close()
-          } finally conn.close()
-        }
-      }
+  def columns(c: String): Seq[(String, String)] = Seq(s"${c}_qsk" -> LedgerBuild.Sketch)
+
+  def derive(c: String, dt: DataType): Column = col(c).cast(DoubleType)
+
+  /** The group's non-null non-NaN values, sorted once into the K-point
+    * summary. */
+  def accumulator(dt: DataType, rowCount: Long): LedgerAcc = new LedgerAcc {
+    private val vals = scala.collection.mutable.ArrayBuilder.make[Double]
+    def add(r: Row, slot: Int): Unit = {
+      val v = r.getDouble(slot)
+      if (!v.isNaN) vals += v
+    }
+    def bind(ps: PreparedStatement): Boolean = {
+      val arr = vals.result()
+      java.util.Arrays.sort(arr)
+      val (pts, count) = summarize(arr)
+      ps.setBytes(1, serialize(pts, count))
+      true
+    }
   }
 }

@@ -38,7 +38,7 @@ final case class RowGroupStat(
     rowCount: Long,
     nullCount: Option[Long],
     // VALUE-FREQUENCY shadow (optional, data-scan ingest via
-    // [[FreqShadow.build]]): count of rows equal to the column's real
+    // [[StatsIndex.rebuildShadows]]): count of rows equal to the column's real
     // minimum / maximum in this row group. NULL until built. Lets the
     // lexicographic top-k walk certify a DOMINANT-value group's best
     // slice at the extreme itself instead of the whole group at its
@@ -58,7 +58,7 @@ final case class RowGroupStat(
     // ingest, so any stored max is verbatim by construction.
     minExact: Option[Boolean] = None,
     // per-row-group SUM shadow (r11, integral columns only, data-scan
-    // ingest via [[SumShadow.build]]): the exact sum of the column's
+    // ingest via [[StatsIndex.rebuildShadows]]): the exact sum of the column's
     // non-null values in this row group — 0 for an all-null group (the
     // additive identity; SUM's NULL-on-empty is decided from the null
     // counts), None until built or when the group's sum overflows Long.
@@ -257,13 +257,14 @@ trait StatsIndex extends AutoCloseable {
     * O(changed files) maintenance hook: compaction and the streaming sink
     * call it after ingesting new files' footer stats, so bloom pruning
     * stays effective on a table whose file set changes instead of
-    * degrading to "might match" on every new file. One distributed job per
-    * bloom column, one task per row group. Default: no-op (no blooms). */
+    * degrading to "might match" on every new file. [[rebuildLedgers]]
+    * with `blooms` set. */
   def rebuildBlooms(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       plans: Seq[FileScanPlan],
-      dataSchema: StructType): Unit = ()
+      dataSchema: StructType): Unit =
+    rebuildLedgers(spark, dir, plans, dataSchema, blooms = true)
 
   /** Rebuild the optional value-frequency / sum shadow ledgers for JUST
     * the given plans' files — the O(changed files) counterpart of
@@ -273,14 +274,15 @@ trait StatsIndex extends AutoCloseable {
     * SERVED on a growing table instead of declining on the unshadowed
     * tail. Columns absent from `dataSchema` or of unsupported types are
     * skipped — their shadows stay NULL, which only declines the
-    * certificates (sound). Default: no-op. */
+    * certificates (sound). [[rebuildLedgers]] for the two families. */
   def rebuildShadows(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       plans: Seq[FileScanPlan],
       dataSchema: StructType,
       freqCols: Seq[String],
-      sumCols: Seq[String]): Unit = ()
+      sumCols: Seq[String]): Unit =
+    rebuildLedgers(spark, dir, plans, dataSchema, freqCols = freqCols, sumCols = sumCols)
 
   /** Rebuild the per-row-group HYPERLOGLOG ledgers for JUST the given
     * plans' files — the distinct-count member of the shadow family
@@ -289,13 +291,14 @@ trait StatsIndex extends AutoCloseable {
     * files) maintenance contract as [[rebuildBlooms]]/[[rebuildShadows]];
     * columns absent from `dataSchema` or unsupported are skipped (their
     * sketches stay NULL, which only declines the estimate — sound).
-    * Default: no-op. */
+    * [[rebuildLedgers]] for the one family. */
   def rebuildHll(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       plans: Seq[FileScanPlan],
       dataSchema: StructType,
-      hllCols: Seq[String]): Unit = ()
+      hllCols: Seq[String]): Unit =
+    rebuildLedgers(spark, dir, plans, dataSchema, hllCols = hllCols)
 
   /** Rebuild the per-row-group QUANTILE ledgers for JUST the given
     * plans' files — the order-statistics member of the shadow family
@@ -304,13 +307,14 @@ trait StatsIndex extends AutoCloseable {
     * [[approxQuantiles]]. Same O(changed files) maintenance contract as
     * the other shadows; unsupported/absent columns are skipped (their
     * summaries stay NULL, which only declines the estimate — sound).
-    * Default: no-op. */
+    * [[rebuildLedgers]] for the one family. */
   def rebuildQuantiles(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       plans: Seq[FileScanPlan],
       dataSchema: StructType,
-      quantileCols: Seq[String]): Unit = ()
+      quantileCols: Seq[String]): Unit =
+    rebuildLedgers(spark, dir, plans, dataSchema, quantileCols = quantileCols)
 
   /** Catalog-side APPROXIMATE quantiles of an indexed numeric column
     * (non-null, non-NaN values) from the [[QuantileShadow]] ledger —
@@ -332,24 +336,22 @@ trait StatsIndex extends AutoCloseable {
   /** Rebuild the per-row-group COUNT-MIN ledgers for JUST the given
     * plans' files — the point-frequency member of the shadow family
     * (r15, [[CmsShadow]]). Same O(changed files) maintenance contract;
-    * unsupported/absent columns are skipped (sound decline). Default:
-    * no-op. */
+    * unsupported/absent columns are skipped (sound decline).
+    * [[rebuildLedgers]] for the one family. */
   def rebuildCms(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       plans: Seq[FileScanPlan],
       dataSchema: StructType,
-      cmsCols: Seq[String]): Unit = ()
+      cmsCols: Seq[String]): Unit =
+    rebuildLedgers(spark, dir, plans, dataSchema, cmsCols = cmsCols)
 
   /** Rebuild EVERY requested per-row-group ledger for JUST the given
-    * plans' files in as FEW data passes as the implementation manages
-    * (r16): the maintenance callers — the streaming sink's per-batch
-    * commit, compaction's re-attach — previously launched one scan per
-    * family over the same new files; implementations should fuse them
-    * into one ([[graft.index.LedgerBuild]]). Semantics are EXACTLY the
-    * individual hooks run in sequence, which is also the default. `blooms`
-    * additionally rebuilds every [[bloomCols]] column's blooms in the
-    * same pass. */
+    * plans' files in one data pass ([[graft.index.LedgerBuild]]) — the
+    * hook every per-family `rebuild*` above calls, and the one the
+    * streaming sink's per-batch commit and compaction's re-attach use.
+    * `blooms` additionally rebuilds every [[bloomCols]] column's blooms
+    * in the same pass. Default: no-op (no ledgers). */
   def rebuildLedgers(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -360,13 +362,7 @@ trait StatsIndex extends AutoCloseable {
       hllCols: Seq[String] = Nil,
       quantileCols: Seq[String] = Nil,
       cmsCols: Seq[String] = Nil,
-      blooms: Boolean = false): Unit = {
-    if (blooms) rebuildBlooms(spark, dir, plans, dataSchema)
-    rebuildShadows(spark, dir, plans, dataSchema, freqCols, sumCols)
-    rebuildHll(spark, dir, plans, dataSchema, hllCols)
-    rebuildQuantiles(spark, dir, plans, dataSchema, quantileCols)
-    rebuildCms(spark, dir, plans, dataSchema, cmsCols)
-  }
+      blooms: Boolean = false): Unit = ()
 
   /** Catalog-side APPROXIMATE frequency of ONE value of an indexed
     * column — "how many rows equal v" — from the [[CmsShadow]] ledger:

@@ -1,11 +1,10 @@
 package graft.index
 
-import graft.sources.RowGroupSkipScan
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, spark_partition_id}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import java.sql.DriverManager
+import java.sql.PreparedStatement
 
 /** Per-row-group SUM shadow build (r11) — the data-scan ingest step that
   * lets catalog-answered GROUP BY ([[graft.plans.StatsAggPushdown]])
@@ -14,13 +13,10 @@ import java.sql.DriverManager
   * value-aligned layout the per-group answer is then the sum of its row
   * groups' sums — one O(index) fetch, zero data scanned.
   *
-  * Footer stats carry no sums, so this is a separate build step exactly
-  * like [[BloomIndex.build]] and [[FreqShadow.build]]: one distributed
-  * job, one task per row group (the `spark_partition_id` ↔ row-group
-  * contract of RowGroupSkipScan's unmerged scan), O(1) state per task,
-  * executor-side JDBC attach. Re-indexing a file deletes its row-group
-  * rows, so stale sums cannot survive a data change; rebuild after
-  * re-index like blooms.
+  * Footer stats carry no sums, so [[LedgerBuild]] fills them from a data
+  * scan with O(1) state per task. Re-indexing a file deletes its
+  * row-group rows, so stale sums cannot survive a data change; rebuild
+  * after re-index like blooms.
   *
   * Supported types are the integrals whose exact sum fits the catalog's
   * BIGINT ledger; a row group whose sum overflows Long stores NULL
@@ -31,7 +27,7 @@ import java.sql.DriverManager
   * order-dependent, so a stored sum could differ from what a scan
   * computes.
   */
-object SumShadow {
+object SumShadow extends LedgerFamily {
 
   def supported(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -44,74 +40,39 @@ object SumShadow {
     case _ => false
   }
 
-  /** One pass over the given plans' row groups for `sumCol`: per task,
-    * stream the column accumulating an exact Long sum (overflow ⇒ the
-    * stored sum is NULL), then attach it to the catalog row. */
-  def build(
-      spark: SparkSession,
-      dir: String,
-      plans: Seq[FileScanPlan],
-      dataSchema: StructType,
-      sumCol: String,
-      dbPath: String): Unit = {
-    require(supported(dataSchema(sumCol).dataType),
-      s"sum column $sumCol has unsupported type ${dataSchema(sumCol).dataType}")
-    val rgMeta = spark.sparkContext.broadcast(
-      graft.plans.RowGroupScan.perRowGroupMeta(plans).toArray)
-    val url = s"jdbc:derby:$dbPath"
-    // decimals ride the same BIGINT ledger as their UNSCALED sum (the
-    // scale is a constant of the column type, so sum-of-unscaled at that
-    // scale IS the exact decimal sum); integrals widen to Long
-    val isDecimal = dataSchema(sumCol).dataType.isInstanceOf[DecimalType]
-    val decScale = dataSchema(sumCol).dataType match {
-      case d: DecimalType => d.scale
-      case _ => 0
+  def columns(c: String): Seq[(String, String)] = Seq(s"${c}_sum" -> "BIGINT")
+
+  /** Integrals widen to Long; decimals stay decimal and ride the same
+    * BIGINT ledger as their UNSCALED sum (the scale is a constant of the
+    * column type, so sum-of-unscaled at that scale IS the exact sum). */
+  def derive(c: String, dt: DataType): Column = dt match {
+    case _: DecimalType => col(c)
+    case _ => col(c).cast(LongType)
+  }
+
+  /** An exact Long sum; overflow stores NULL. */
+  def accumulator(dt: DataType, rowCount: Long): LedgerAcc = new LedgerAcc {
+    private val scale = dt match {
+      case d: DecimalType => Some(d.scale)
+      case _ => None
     }
-    val valueCol =
-      if (isDecimal) col(sumCol).as("v") else col(sumCol).cast(LongType).as("v")
-    RowGroupSkipScan.scan(spark, dir, plans, dataSchema,
-        mergeRuns = false, requiredCols = Seq(sumCol))
-      .select(valueCol, spark_partition_id().as("pid"))
-      .rdd.foreachPartition { it =>
-        var pid = -1
-        var sum = 0L
-        var sawRow = false
-        var overflow = false
-        it.foreach { r =>
-          pid = r.getInt(1)
-          sawRow = true
-          if (!r.isNullAt(0) && !overflow) {
-            try {
-              val v =
-                if (isDecimal)
-                  // setScale pins the ledger to the COLUMN's scale even if
-                  // the runtime value arrives rescaled; any inexact
-                  // adjustment throws and fails the ledger closed
-                  r.getDecimal(0).setScale(decScale).unscaledValue().longValueExact()
-                else r.getLong(0)
-              sum = Math.addExact(sum, v)
-            } catch { case _: ArithmeticException => overflow = true }
+    private var sum = 0L
+    private var overflow = false
+    def add(r: Row, slot: Int): Unit =
+      if (!overflow)
+        try {
+          val v = scale match {
+            // setScale pins the ledger to the COLUMN's scale even if the
+            // runtime value arrives rescaled; any inexact adjustment
+            // throws and fails the ledger closed
+            case Some(s) => r.getDecimal(slot).setScale(s).unscaledValue().longValueExact()
+            case None => r.getLong(slot)
           }
-        }
-        if (pid >= 0 && sawRow) {
-          val (fileName, rowGroup) = rgMeta.value(pid)
-          DerbyStatsIndex.ensureDriver()
-          val conn = DriverManager.getConnection(url)
-          try {
-            val up = conn.prepareStatement(
-              s"""UPDATE row_group_statistics
-                 |SET ${sumCol}_sum = ?
-                 |WHERE row_group = ? AND file_id =
-                 |  (SELECT file_id FROM file_statistics WHERE file_name = ?)"""
-                .stripMargin)
-            if (overflow) up.setNull(1, java.sql.Types.BIGINT)
-            else up.setLong(1, sum)
-            up.setInt(2, rowGroup)
-            up.setString(3, fileName)
-            up.executeUpdate()
-            up.close()
-          } finally conn.close()
-        }
-      }
+          sum = Math.addExact(sum, v)
+        } catch { case _: ArithmeticException => overflow = true }
+    def bind(ps: PreparedStatement): Boolean = {
+      if (overflow) ps.setNull(1, java.sql.Types.BIGINT) else ps.setLong(1, sum)
+      true
+    }
   }
 }

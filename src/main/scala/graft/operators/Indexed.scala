@@ -2236,8 +2236,8 @@ object Indexed {
       val hasSums = index.rowGroupStats("l_orderkey")
         .exists(_.exists(_.sumVal.isDefined))
       if (!hasSums)
-        graft.index.SumShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "l_orderkey", s"$base/statsdb-aligned-v1")
+        index.rebuildShadows(spark, dataDir, index.allFiles(), dataSchema,
+          freqCols = Nil, sumCols = Seq("l_orderkey"))
       val (df, fileIndex) = IndexedParquet.read(spark, dataDir, index, dataSchema)
       Entry(df, fileIndex, dataDir, index, dataSchema)
     })
@@ -2276,8 +2276,8 @@ object Indexed {
       val hasSums = index.rowGroupStats("l_orderkey")
         .exists(_.exists(_.sumVal.isDefined))
       if (!hasSums)
-        graft.index.SumShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "l_orderkey", db)
+        index.rebuildShadows(spark, dataDir, index.allFiles(), dataSchema,
+          freqCols = Nil, sumCols = Seq("l_orderkey"))
       val (df, fileIndex) = IndexedParquet.read(spark, dataDir, index, dataSchema)
       Entry(df, fileIndex, dataDir, index, dataSchema)
     })
@@ -2321,10 +2321,8 @@ object Indexed {
       val hasFreq = index.rowGroupStats("l_returnflag")
         .exists(_.exists(_.maxFreq.isDefined))
       if (!hasFreq) {
-        graft.index.FreqShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "l_returnflag", db)
-        graft.index.FreqShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "l_orderkey", db)
+        index.rebuildShadows(spark, dataDir, index.allFiles(), dataSchema,
+          freqCols = Seq("l_returnflag", "l_orderkey"), sumCols = Nil)
       }
       val (df, fileIndex) = IndexedParquet.read(spark, dataDir, index, dataSchema)
       Entry(df, fileIndex, dataDir, index, dataSchema)
@@ -2515,10 +2513,8 @@ object Indexed {
       val hasSums = index.rowGroupStats("l_price_dec")
         .exists(_.exists(_.sumVal.isDefined))
       if (!hasSums) {
-        graft.index.SumShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "l_orderkey", db)
-        graft.index.SumShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "l_price_dec", db)
+        index.rebuildShadows(spark, dataDir, index.allFiles(), dataSchema,
+          freqCols = Nil, sumCols = Seq("l_orderkey", "l_price_dec"))
       }
       val (df, fileIndex) = IndexedParquet.read(spark, dataDir, index, dataSchema)
       Entry(df, fileIndex, dataDir, index, dataSchema)
@@ -2567,8 +2563,8 @@ object Indexed {
       val hasSums = index.rowGroupStats("l_orderkey")
         .exists(_.exists(_.sumVal.isDefined))
       if (!hasSums)
-        graft.index.SumShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "l_orderkey", db)
+        index.rebuildShadows(spark, dataDir, index.allFiles(), dataSchema,
+          freqCols = Nil, sumCols = Seq("l_orderkey"))
       val (df, fileIndex) = IndexedParquet.read(spark, dataDir, index, dataSchema)
       Entry(df, fileIndex, dataDir, index, dataSchema)
     })
@@ -2618,8 +2614,8 @@ object Indexed {
       val hasSums = index.rowGroupStats("user_id")
         .exists(_.exists(_.sumVal.isDefined))
       if (!hasSums)
-        graft.index.SumShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "user_id", db)
+        index.rebuildShadows(spark, dataDir, index.allFiles(), dataSchema,
+          freqCols = Nil, sumCols = Seq("user_id"))
       val (df, fileIndex) = IndexedParquet.read(spark, dataDir, index, dataSchema)
       Entry(df, fileIndex, dataDir, index, dataSchema)
     })
@@ -2672,8 +2668,8 @@ object Indexed {
       val hasSums = index.rowGroupStats("user_id")
         .exists(_.exists(_.sumVal.isDefined))
       if (!hasSums)
-        graft.index.SumShadow.build(spark, dataDir, index.allFiles(),
-          dataSchema, "user_id", db)
+        index.rebuildShadows(spark, dataDir, index.allFiles(), dataSchema,
+          freqCols = Nil, sumCols = Seq("user_id"))
       val (df, fileIndex) = IndexedParquet.read(spark, dataDir, index, dataSchema)
       Entry(df, fileIndex, dataDir, index, dataSchema)
     })

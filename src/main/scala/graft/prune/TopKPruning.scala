@@ -429,8 +429,8 @@ object TopKPruning {
   /** Per-query memo over a [[StatsIndex]]: the planner-fallback prefix
     * recursion intersects every shorter prefix, re-reading the same
     * per-column stats (and file listing) at every depth without this —
-    * O(N²) whole-index fetches for an N-key order. Everything else
-    * delegates, fast paths included. */
+    * O(N²) whole-index fetches for an N-key order. Every other read
+    * delegates, fast paths included; it never rebuilds a ledger. */
   private final class MemoStatsIndex(u: StatsIndex) extends StatsIndex {
     private val statsMemo =
       scala.collection.mutable.HashMap.empty[String, Option[Seq[RowGroupStat]]]
@@ -466,23 +466,6 @@ object TopKPruning {
     override def totalRowCount(): Option[Long] = u.totalRowCount()
     override def nonNullCount(c: String): Option[Long] = u.nonNullCount(c)
     override def totalSum(c: String): Option[(Long, Long)] = u.totalSum(c)
-    override def rebuildBlooms(spark: org.apache.spark.sql.SparkSession,
-        dir: String, plans: Seq[FileScanPlan],
-        dataSchema: org.apache.spark.sql.types.StructType): Unit =
-      u.rebuildBlooms(spark, dir, plans, dataSchema)
-    override def rebuildShadows(spark: org.apache.spark.sql.SparkSession,
-        dir: String, plans: Seq[FileScanPlan],
-        dataSchema: org.apache.spark.sql.types.StructType,
-        freqCols: Seq[String], sumCols: Seq[String]): Unit =
-      u.rebuildShadows(spark, dir, plans, dataSchema, freqCols, sumCols)
-    override def rebuildLedgers(spark: org.apache.spark.sql.SparkSession,
-        dir: String, plans: Seq[FileScanPlan],
-        dataSchema: org.apache.spark.sql.types.StructType,
-        freqCols: Seq[String], sumCols: Seq[String], hllCols: Seq[String],
-        quantileCols: Seq[String], cmsCols: Seq[String],
-        blooms: Boolean): Unit =
-      u.rebuildLedgers(spark, dir, plans, dataSchema, freqCols, sumCols,
-        hllCols, quantileCols, cmsCols, blooms)
     def close(): Unit = u.close()
   }
 

@@ -147,9 +147,9 @@ object Compaction {
   /** Compaction with catalog maintenance in one call: rewrite the bins,
     * then bring EVERY index layer back in step with O(changed files) work —
     * one keyed delete for the originals the pass removed, one distributed
-    * footer-ingest job for the files it wrote, one bloom-build job per
-    * bloom column over just those files (via the index's own
-    * `rebuildBlooms` hook), and for each entry in `rowLevel` (key column →
+    * footer-ingest job for the files it wrote, one ledger-build job for
+    * the blooms and every shadow ledger over just those files (via the
+    * index's own `rebuildLedgers` hook), and for each entry in `rowLevel` (key column →
     * posting-catalog dir) an incremental posting append that also extends
     * the covered-files set — so automatic routing stays PRECISE instead of
     * tripping the staleness guard. The untouched bulk of a 100 TB table

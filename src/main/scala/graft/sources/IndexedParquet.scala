@@ -68,8 +68,8 @@ object IndexedParquet {
     index.ingestAll(statsRdd)
     index.retainOnly(files.map(f => new Path(f).getName).toSet)
     // bloom pass AFTER footer ingest (it updates the catalog rows the
-    // ingest wrote); one distributed job per bloom column, one task per
-    // row group, executor-side JDBC — same shape as ingestAll
+    // ingest wrote); one distributed job for every bloom column, one task
+    // per row group, executor-side JDBC — same shape as ingestAll
     index.rebuildBlooms(spark, dir, index.allFiles(), dataSchema)
     (index, dataSchema)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{BloomIndex, DerbyStatsIndex}
+import graft.index.DerbyStatsIndex
 import graft.sources.{IndexedParquet, RowGroupSkipScan}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ class BloomPruningSpec extends SparkSpec {
   // 8009 (a permutation of 0..8008 restricted to our domain) — decorrelated
   // from write order, so row-group ranges all span ~the full domain
   private lazy val fixture: (String, String) = {
-    val base = Files.createTempDirectory("graft-bloom").toString
+    val base = tempDir("graft-bloom")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 8000)

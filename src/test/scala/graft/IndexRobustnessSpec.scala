@@ -15,7 +15,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 class IndexRobustnessSpec extends SparkSpec {
 
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-robust").toString
+    val base = tempDir("graft-robust")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._
@@ -58,7 +58,7 @@ class IndexRobustnessSpec extends SparkSpec {
 
   test("a pre-r11 catalog (no shadow columns) reads degraded, then upgrades in place") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-upgrade").toString
+    val base = tempDir("graft-upgrade")
     val dir = s"$base/data"
     (0 until 200).map(i => (i.toLong, s"s$i")).toDF("k", "s").coalesce(1)
       .write.option("parquet.block.row.count.limit", "50")
@@ -87,7 +87,7 @@ class IndexRobustnessSpec extends SparkSpec {
     index.initialize(schema)
     assert(index.rowGroupStats("k").get.forall(s =>
       s.sumVal.isEmpty && s.minFreq.isEmpty)) // still unbuilt, now present
-    graft.index.SumShadow.build(spark, dir, index.allFiles(), schema, "k", db)
+    index.rebuildShadows(spark, dir, index.allFiles(), schema, freqCols = Nil, sumCols = Seq("k"))
     assert(index.totalSum("k") === Some(((0L until 200L).sum, 200L)))
     index.close()
   }
@@ -95,7 +95,7 @@ class IndexRobustnessSpec extends SparkSpec {
   test("re-indexing after file deletion retains only surviving files") {
     val (dir, _, _, _, _) = env
     // build a second index over a copy, then delete a file and re-index
-    val base = Files.createTempDirectory("graft-retain").toString
+    val base = tempDir("graft-retain")
     val dir2 = s"$base/data"
     Files.createDirectories(Paths.get(dir2))
     Files.list(Paths.get(dir)).toArray.map(_.asInstanceOf[Path])

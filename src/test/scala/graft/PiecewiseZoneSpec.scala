@@ -247,7 +247,7 @@ class PiecewiseZoneSpec extends SparkSpec {
     // one-local-day drill-down narrows WITHIN the file, where listFiles
     // can only drop whole files — PartPruneScan must substitute the
     // byte-range RowGroupScan leaf so off-day groups are never read
-    val base = Files.createTempDirectory("graft-pwz-sorted").toString
+    val base = tempDir("graft-pwz-sorted")
     val dir = s"$base/data"
     val start = micros("2024-01-01T00:00:00Z")
     val src = (0 until 24 * 20).map(h => (start + h * 3600000000L, h.toLong))
@@ -286,7 +286,7 @@ class PiecewiseZoneSpec extends SparkSpec {
     // random local-date range filtered through the indexed read (the
     // interval engine decides keep/drop per group) must equal the plain
     // scan — a single wrong wholesale drop shows up as missing rows.
-    val base = Files.createTempDirectory("graft-pwz-sweep").toString
+    val base = tempDir("graft-pwz-sweep")
     val dir = s"$base/data"
     val spans = Seq(
       micros("2024-03-07T00:00:00Z") -> (6 * 144),  // Mar 7-13
@@ -334,7 +334,7 @@ class PiecewiseZoneSpec extends SparkSpec {
     // three NY-local days land as three micro-batches through
     // IndexedSink; the local-day rollup must fold from exactly the
     // catalog the SINK built, through the piecewise certificate
-    val base = Files.createTempDirectory("graft-pwz-sink").toString
+    val base = tempDir("graft-pwz-sink")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -358,8 +358,8 @@ class PiecewiseZoneSpec extends SparkSpec {
           d.toLong, dataDir, index, Seq("ts", "v"), hconf)
       }
     }
-    graft.index.SumShadow.build(spark, dataDir, index.allFiles(), schema,
-      "v", s"$base/db")
+    index.rebuildShadows(spark, dataDir, index.allFiles(), schema,
+      freqCols = Nil, sumCols = Seq("v"))
     val (df, _) = IndexedParquet.read(spark, dataDir, index, schema)
     val nyDay = to_date(from_utc_timestamp(col("ts"), NY))
     val g = df.groupBy(nyDay.as("d"))
@@ -378,7 +378,7 @@ class PiecewiseZoneSpec extends SparkSpec {
 
   test("a transition-straddling row group fails the fold closed, stays correct") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-pwz").toString
+    val base = tempDir("graft-pwz")
     val dir = s"$base/data"
     // hourly instants Mar 8-12 2024, partitioned by NY local day, ONE
     // row group per day: the Mar 10 group contains the 07:00Z

@@ -3,7 +3,6 @@ package graft
 import graft.index.{DerbyStatsIndex, RowLevelIndex}
 import graft.sources.{Compaction, IndexedParquet, RowGroupSkipScan}
 import graft.streaming.IndexedSink
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -29,7 +28,7 @@ class PostingCatalogSpec extends SparkSpec {
 
   private def writeFile(dir: String, name: String, keys: Seq[Long]): Unit = {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-posting-part").toString
+    val tmp = tempDir("graft-posting-part")
     keys.map(k => (k, s"r$k")).toDF("key", "s").coalesce(1)
       .write.option("parquet.block.row.count.limit", "50")
       .mode("overwrite").parquet(tmp)
@@ -39,36 +38,10 @@ class PostingCatalogSpec extends SparkSpec {
     Files.move(part, Paths.get(dir, name))
   }
 
-  /** Spark jobs started on this thread while `body` runs, seen through a
-    * SparkListener. The listener bus delivers events in order, so once a
-    * sentinel job launched afterwards is seen, every job of `body` is. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"posting-probe-${java.util.UUID.randomUUID()}"
-    val sentinel = group + "-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "routing probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "listener sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(sentinel), "listener never saw the sentinel job")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   // 8000 shuffled keys in 50-row row groups: every row group's min/max
   // spans ~the whole domain, so only postings narrow the scan
   private lazy val fx = {
-    val base = Files.createTempDirectory("graft-posting-jobs").toString
+    val base = tempDir("graft-posting-jobs")
     val dir = s"$base/data"
     writeFile(dir, "f0.parquet", (0 until 8000).map(i => i.toLong * 7919L % 8009L))
     val (index, schema) = IndexedParquet.buildIndex(spark, dir, Seq("key"), s"$base/statsdb")
@@ -98,7 +71,7 @@ class PostingCatalogSpec extends SparkSpec {
   }
 
   test("postings inserted twice for one batch still route exactly") {
-    val base = Files.createTempDirectory("graft-posting-replay").toString
+    val base = tempDir("graft-posting-replay")
     val dir = s"$base/data"
     writeFile(dir, "f1.parquet", 0L until 100L)
     val (idx1, schema) = IndexedParquet.buildIndex(spark, dir, Seq("key"), s"$base/db")
@@ -140,7 +113,7 @@ class PostingCatalogSpec extends SparkSpec {
 
   test("key types: dates and timestamps route, long strings only over-scan, doubles are refused") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-posting-types").toString
+    val base = tempDir("graft-posting-types")
     val dir = s"$base/data"
     val long = "x" * (DerbyStatsIndex.MaxStringLen + 5)
     val day0 = java.time.LocalDate.of(2020, 1, 1)
@@ -183,7 +156,7 @@ class PostingCatalogSpec extends SparkSpec {
 
   test("string keys follow Spark's byte order, not Derby's UTF-16 order or space padding") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-posting-strings").toString
+    val base = tempDir("graft-posting-strings")
     val dir = s"$base/data"
     // one key per 50-row group: "a", "a " (equal to "a" under VARCHAR
     // padding), U+FFFD, and U+1F600 (a surrogate pair, so below U+FFFD
@@ -218,7 +191,7 @@ class PostingCatalogSpec extends SparkSpec {
 
   test("compacting a table whose catalog carries row numbers keeps them, and routing exact") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-posting-rownum-compact").toString
+    val base = tempDir("graft-posting-rownum-compact")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = StructType(Seq(StructField("k", LongType), StructField("p", LongType)))

@@ -24,7 +24,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   // 2000 rows in 50-row groups; s is null every 3rd row so COUNT(col) and
   // null-skipping MIN/MAX semantics are genuinely exercised
   private lazy val fx: (DataFrame, DataFrame) = {
-    val base = Files.createTempDirectory("graft-aggpush").toString
+    val base = tempDir("graft-aggpush")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 2000)
@@ -65,7 +65,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   // 50-row group (boundaries align), null every 7th row so the NULL
   // group and mixed null/value groups are genuinely exercised
   private lazy val fxg: (DataFrame, DataFrame) = {
-    val base = Files.createTempDirectory("graft-aggpush-g").toString
+    val base = tempDir("graft-aggpush-g")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 2000)
@@ -107,7 +107,7 @@ class StatsAggPushdownSpec extends SparkSpec {
     assert(!folded(withNulls))
     // a null-free aligned fixture: min/max of the other column fold and
     // match ground truth
-    val base = Files.createTempDirectory("graft-aggpush-g2").toString
+    val base = tempDir("graft-aggpush-g2")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 2000).map(i => (i.toLong, i.toLong / 500L))
@@ -150,7 +150,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   // the r11 filtered / SUM extensions
   private lazy val fxg3: (DataFrame, DataFrame, String, String,
       org.apache.spark.sql.types.StructType, graft.index.StatsIndex) = {
-    val base = Files.createTempDirectory("graft-aggpush-g3").toString
+    val base = tempDir("graft-aggpush-g3")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 2000).map(i => (i.toLong, i.toLong / 500L))
@@ -196,7 +196,7 @@ class StatsAggPushdownSpec extends SparkSpec {
     assert(folded(cntOnly), cntOnly.queryExecution.optimizedPlan.toString)
     // SUM(k) declines until the ledger is built
     assert(!folded(shape(df)))
-    graft.index.SumShadow.build(spark, dir, index.allFiles(), schema, "k", db)
+    index.rebuildShadows(spark, dir, index.allFiles(), schema, freqCols = Nil, sumCols = Seq("k"))
     val agg = shape(df)
     assert(folded(agg), agg.queryExecution.optimizedPlan.toString)
     val key = (r: org.apache.spark.sql.Row) =>
@@ -222,7 +222,7 @@ class StatsAggPushdownSpec extends SparkSpec {
     val (df, plainDf, dir, db, schema, index) = fxg3
     // the ledger was built by the SUM/COUNT test (shared fixture) — build
     // idempotently in case of test-order changes
-    graft.index.SumShadow.build(spark, dir, index.allFiles(), schema, "k", db)
+    index.rebuildShadows(spark, dir, index.allFiles(), schema, freqCols = Nil, sumCols = Seq("k"))
     def shape(d: DataFrame, cond: Option[org.apache.spark.sql.Column]) =
       cond.fold(d)(d.filter(_))
         .agg(sum(col("k")).as("sk"), count(lit(1)).as("n"), min(col("k")).as("mk"))
@@ -277,7 +277,7 @@ class StatsAggPushdownSpec extends SparkSpec {
     // layout aligned on (a, b) with: a never null; b null on a PARTIAL
     // slice of some groups (splits soundly); plus one row group where
     // BOTH a and b have partial nulls (joint distribution unknowable)
-    val base = Files.createTempDirectory("graft-aggpush-2col").toString
+    val base = tempDir("graft-aggpush-2col")
     import spark.implicits._
     def write(dir: String, rows: Seq[(Option[Long], Option[Long], Long)]): DataFrame = {
       rows.toDF("a", "b", "k").coalesce(1)
@@ -461,7 +461,7 @@ class StatsAggPushdownSpec extends SparkSpec {
     // folds (calendar units need no Derby render on this path). Month 2
     // carries a leading ALL-null 100-row block — a whole-row-group null
     // slice lands in the NULL group and keeps other-column tallies alive
-    val base = java.nio.file.Files.createTempDirectory("graft-gby-img").toString
+    val base = tempDir("graft-gby-img")
     import spark.implicits._
     graft.operators.Indexed.withMicrosTimestamps(spark) {
       (0 until 6).foreach { m =>
@@ -495,7 +495,7 @@ class StatsAggPushdownSpec extends SparkSpec {
     // a PARTIAL-null slice (nulls sharing a row group with values) still
     // folds pure counts — the split is per-column sound — but fails any
     // other-column tally closed (no unsplit key for that row group)
-    val base2 = java.nio.file.Files.createTempDirectory("graft-gby-img2").toString
+    val base2 = tempDir("graft-gby-img2")
     graft.operators.Indexed.withMicrosTimestamps(spark) {
       (0 until 600).map { i =>
         val m = i / 300
@@ -609,7 +609,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   test("r13: AVG folds from the ledger globally, per group, and filtered") {
     // global: exact ledger sum / non-null tally through Average's own eval
     val (df, plainDf, dir, db, schema, index) = fxg3
-    graft.index.SumShadow.build(spark, dir, index.allFiles(), schema, "k", db)
+    index.rebuildShadows(spark, dir, index.allFiles(), schema, freqCols = Nil, sumCols = Seq("k"))
     val g = df.agg(avg(col("k")).as("ak"), count(col("k")).as("n"))
     assert(folded(g), g.queryExecution.optimizedPlan.toString)
     assert(g.collect() === plainDf.agg(avg(col("k")).as("ak"),
@@ -683,7 +683,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   // wall-clock hour (i/50 = hour index, minutes vary within), 40 hours
   // spanning two days so hour-of-day groups merge across row groups
   private lazy val fxh: (DataFrame, DataFrame) = {
-    val base = Files.createTempDirectory("graft-aggpush-h").toString
+    val base = tempDir("graft-aggpush-h")
     val dir = s"$base/data"
     import spark.implicits._
     graft.operators.Indexed.withMicrosTimestamps(spark) {
@@ -832,7 +832,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   // day's first hour so hour-grid patterns certify but minute/second
   // grids straddle
   private lazy val fxe: (DataFrame, DataFrame) = {
-    val base = Files.createTempDirectory("graft-aggpush-e").toString
+    val base = tempDir("graft-aggpush-e")
     val dir = s"$base/data"
     import spark.implicits._
     graft.operators.Indexed.withMicrosTimestamps(spark) {
@@ -1022,7 +1022,7 @@ class StatsAggPushdownSpec extends SparkSpec {
     // serves allFiles), so a file dropped into the directory without
     // re-indexing is ignored by the scan AND by the catalog scalars —
     // the pushdown can never disagree with the scan it replaces
-    val base = Files.createTempDirectory("graft-aggstale").toString
+    val base = tempDir("graft-aggstale")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 100).map(i => (i.toLong, s"v$i")).toDF("k", "s")
@@ -1058,7 +1058,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   test("maxIndexedValue: exact when certified, refused when NULL-max may hide values") {
     val schema = StructType(Seq(StructField("k", LongType)))
     val db = new DerbyStatsIndex(
-      Files.createTempDirectory("graft-maxval").toString + "/db", schema)
+      tempDir("graft-maxval") + "/db", schema)
     db.initialize(schema)
     db.addFile(FileStats("f1.parquet", 1000L, 20L, Vector(
       rg(0, ColumnStats(Some(0L), Some(5L), Some(9L))),
@@ -1074,7 +1074,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   test("maxIndexedValue: over-long string maxima were stored NULL — refused") {
     val schema = StructType(Seq(StructField("s", StringType)))
     val db = new DerbyStatsIndex(
-      Files.createTempDirectory("graft-maxval2").toString + "/db", schema)
+      tempDir("graft-maxval2") + "/db", schema)
     db.initialize(schema)
     val longStr = "x" * (DerbyStatsIndex.MaxStringLen + 10)
     db.addFile(FileStats("f1.parquet", 1000L, 10L, Vector(
@@ -1089,7 +1089,7 @@ class StatsAggPushdownSpec extends SparkSpec {
   test("totalRowCount / nonNullCount: footer sums, certification, empty catalog") {
     val schema = StructType(Seq(StructField("k", LongType)))
     val db = new DerbyStatsIndex(
-      Files.createTempDirectory("graft-counts").toString + "/db", schema)
+      tempDir("graft-counts") + "/db", schema)
     db.initialize(schema)
     assert(db.totalRowCount() === Some(0L)) // empty catalog = zero files scanned
     assert(db.nonNullCount("k") === Some(0L))

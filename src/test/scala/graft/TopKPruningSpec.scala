@@ -61,7 +61,7 @@ class TopKPruningSpec extends SparkSpec {
   // group spans the domain and nothing can prune; the sweep below still
   // covers it implicitly through the groups whose ranges do overlap.)
   private lazy val fx: (String, DerbyStatsIndex, StructType) = {
-    val base = Files.createTempDirectory("graft-topk").toString
+    val base = tempDir("graft-topk")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 4000)
@@ -448,7 +448,7 @@ class TopKPruningSpec extends SparkSpec {
   // within every 50-row group — boundaries align), key noisy/increasing
   // with ~10% nulls, id unique
   private lazy val fx2: (String, DerbyStatsIndex, StructType) = {
-    val base = Files.createTempDirectory("graft-topk2").toString
+    val base = tempDir("graft-topk2")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 4000)
@@ -552,7 +552,7 @@ class TopKPruningSpec extends SparkSpec {
   // (changes every 100 rows — both tie-heavy, constant within most
   // 50-row groups), key noisy/increasing with ~10% nulls, id unique
   private lazy val fx4: (String, DerbyStatsIndex, StructType) = {
-    val base = Files.createTempDirectory("graft-topk3").toString
+    val base = tempDir("graft-topk3")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 4000)
@@ -630,7 +630,7 @@ class TopKPruningSpec extends SparkSpec {
   // guarantees ≥lex (a_guarantee, b_guarantee)) must still separate the
   // tied bands.
   private lazy val fx3: (String, DerbyStatsIndex, StructType) = {
-    val base = Files.createTempDirectory("graft-topk2nc").toString
+    val base = tempDir("graft-topk2nc")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 4000)
@@ -783,7 +783,7 @@ class TopKPruningSpec extends SparkSpec {
   // certificate still anchors at the weak min guarantee but the
   // FreqShadow can certify the dominant slice AT the max
   private lazy val fx5: (String, DerbyStatsIndex, StructType, String) = {
-    val base = Files.createTempDirectory("graft-topk-freq").toString
+    val base = tempDir("graft-topk-freq")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 4000)
@@ -805,12 +805,12 @@ class TopKPruningSpec extends SparkSpec {
 
   test("freq shadow certifies dominant slices — strictly fewer groups, still sound") {
     val (dir, index, schema, db) = fx5
-    import graft.index.{FreqShadow, SortKeySpec}
+    import graft.index.SortKeySpec
     val keys = Seq(SortKeySpec("grp", desc = true, nullsFirst = false),
       SortKeySpec("key", desc = true, nullsFirst = false))
     val keptBefore = TopKPruning.pruneLexN(index, keys, 16L)
       .map(_.scanRowGroups.size).sum
-    FreqShadow.build(spark, dir, index.allFiles(), schema, "grp", db)
+    index.rebuildShadows(spark, dir, index.allFiles(), schema, freqCols = Seq("grp"), sumCols = Nil)
     val keptAfter = TopKPruning.pruneLexN(index, keys, 16L)
       .map(_.scanRowGroups.size).sum
     assert(keptAfter < keptBefore,
@@ -857,7 +857,7 @@ class TopKPruningSpec extends SparkSpec {
   // then pair a frequency with the stored MIN — sound only where the
   // min-is-exact marker certifies it verbatim.
   private lazy val fx6: (String, DerbyStatsIndex, StructType, String) = {
-    val base = Files.createTempDirectory("graft-topk-freq-str").toString
+    val base = tempDir("graft-topk-freq-str")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 4000)
@@ -879,7 +879,7 @@ class TopKPruningSpec extends SparkSpec {
 
   test("string-ASC freq certificates fire under the min-is-exact marker") {
     val (dir, index, schema, db) = fx6
-    import graft.index.{FreqShadow, SortKeySpec}
+    import graft.index.SortKeySpec
     // short stored minima ⇒ the ingest recorded every marker as exact
     assert(index.rowGroupStats("grp").get.forall(_.minExact.contains(true)),
       "ingest did not record min-is-exact markers")
@@ -887,7 +887,7 @@ class TopKPruningSpec extends SparkSpec {
       SortKeySpec("key", desc = true, nullsFirst = false))
     val keptBefore = TopKPruning.pruneLexN(index, keys, 16L)
       .map(_.scanRowGroups.size).sum
-    FreqShadow.build(spark, dir, index.allFiles(), schema, "grp", db)
+    index.rebuildShadows(spark, dir, index.allFiles(), schema, freqCols = Seq("grp"), sumCols = Nil)
     val keptAfter = TopKPruning.pruneLexN(index, keys, 16L)
       .map(_.scanRowGroups.size).sum
     assert(keptAfter < keptBefore,
@@ -943,7 +943,7 @@ class TopKPruningSpec extends SparkSpec {
   // the shape where `ORDER BY date_trunc(unit, ts), id LIMIT k` must
   // prune via stats DERIVED through the monotone image.
   private lazy val fx7: (String, DerbyStatsIndex, StructType) = {
-    val base = Files.createTempDirectory("graft-topk-img").toString
+    val base = tempDir("graft-topk-img")
     val dir = s"$base/data"
     import spark.implicits._
     // INT96 (Spark's default) carries no footer min/max for timestamps;
@@ -1188,7 +1188,7 @@ class TopKPruningSpec extends SparkSpec {
     // code-unit order but ABOVE it in code-point order. Build a fixture
     // whose group boundaries straddle that band and pin catalog ==
     // planner == full-scan truth.
-    val base = Files.createTempDirectory("graft-topk-uni").toString
+    val base = tempDir("graft-topk-uni")
     val dir = s"$base/data"
     import spark.implicits._
     val vals = Seq("a", "𐀀", "zz", "�", "😀",
@@ -1384,7 +1384,7 @@ class TopKPruningSpec extends SparkSpec {
   // UnixSecondsImage), a DATE column with pre-1970 days (floorToGrid's
   // Monday anchor below zero), ~4% nulls, 50-row groups.
   private lazy val fx8: (String, DerbyStatsIndex, StructType) = {
-    val base = Files.createTempDirectory("graft-topk-epoch").toString
+    val base = tempDir("graft-topk-epoch")
     val dir = s"$base/data"
     import spark.implicits._
     graft.operators.Indexed.withMicrosTimestamps(spark) {
