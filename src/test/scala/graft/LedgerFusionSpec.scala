@@ -14,8 +14,10 @@ import scala.collection.immutable.SortedSet
   * and sums come from a Spark group-by; bloom, HLL, count-min and
   * quantile bytes come from each family's own add/serialize over the
   * collected values, compared byte for byte. Ledger columns nobody asked
-  * for stay NULL. Also pins that one rebuild hook call is one Spark job,
-  * however many columns it covers.
+  * for stay NULL. A second catalog over the same files, built family by
+  * family through the standalone rebuild hooks (one call, one scan per
+  * family), must hold exactly the same ledgers. Also pins that one rebuild
+  * hook call is one Spark job, however many columns it covers.
   */
 class LedgerFusionSpec extends SparkSpec {
 
@@ -53,6 +55,21 @@ class LedgerFusionSpec extends SparkSpec {
       hllCols = Seq("k", "s", "z"), quantileCols = Seq("k", "q"),
       cmsCols = Seq("k", "s"), blooms = true)
     (dir, index, schema, db)
+  }
+
+  /** The same files indexed family by family: blooms at index build, then
+    * one standalone rebuild hook call per remaining family. */
+  private lazy val standalone = {
+    val (dir, _, _, _) = env
+    val db = s"${tempDir("graft-lfuse-sep")}/db"
+    val (index, schema) = IndexedParquet.buildIndex(
+      spark, dir, Seq("k", "s", "z", "q"), db, bloomCols = Seq("k", "s"))
+    index.rebuildShadows(spark, dir, index.allFiles(), schema,
+      freqCols = Seq("k", "s"), sumCols = Seq("k"))
+    index.rebuildHll(spark, dir, index.allFiles(), schema, Seq("k", "s", "z"))
+    index.rebuildQuantiles(spark, dir, index.allFiles(), schema, Seq("k", "q"))
+    index.rebuildCms(spark, dir, index.allFiles(), schema, Seq("k", "s"))
+    (index, db)
   }
 
   /** Every ledger column the catalog can hold for this schema: the
@@ -196,6 +213,57 @@ class LedgerFusionSpec extends SparkSpec {
       val holding = keys.collect { case (`v`, g) => g }.toSet
       assert(holding.nonEmpty && holding.subsetOf(kept), s"bloom pruning dropped k=$v")
     }
+  }
+
+  test("fused build equals standalone builds on every ledger and row group") {
+    val (_, fus, schema, fusDb) = env
+    val (sep, sepDb) = standalone
+    val a = catalogLedgers(sepDb)
+    val b = catalogLedgers(fusDb)
+    assert(a.keySet == b.keySet && a.size == 4, s"row groups ${a.keySet} vs ${b.keySet}")
+    for (g <- a.keys.toSeq.sorted; c <- ledgerCols)
+      assert(a(g)(c) == b(g)(c), s"$c diverges in $g")
+
+    // through the public API, per row group and over the whole table
+    val slices = sep.allFiles().flatMap(p =>
+      p.scanRowGroups.toSeq.map(rg => Seq(p.copy(scanRowGroups = SortedSet(rg)))))
+    for (plans <- slices.map(Option(_)) :+ (None: Option[Seq[FileScanPlan]])) {
+      for (c <- Seq("k", "s", "z"))
+        assert(sep.approxDistinct(c, plans) == fus.approxDistinct(c, plans),
+          s"hll($c) diverges on $plans")
+      for (c <- Seq("k", "q"))
+        assert(sep.approxQuantiles(c, Seq(0.1, 0.5, 0.9), plans) ==
+          fus.approxQuantiles(c, Seq(0.1, 0.5, 0.9), plans), s"qsk($c) diverges on $plans")
+      for ((c, v) <- Seq(("k", 5), ("s", "s7")))
+        assert(sep.approxFrequency(c, v, plans) == fus.approxFrequency(c, v, plans),
+          s"cms($c=$v) diverges on $plans")
+    }
+    for (c <- Seq("k", "s")) {
+      def shadows(ix: graft.index.StatsIndex) = ix.rowGroupStats(c).get.map(s =>
+        (s.fileName, s.rowGroup, s.minFreq, s.maxFreq, s.sumVal)).sorted
+      assert(shadows(sep) == shadows(fus), s"freq/sum shadows diverge for $c")
+    }
+    assert(sep.totalSum("k") == fus.totalSum("k"))
+    def plansOf(ix: graft.index.StatsIndex, v: Int) =
+      ix.getFiles(RowGroupSkipScan.resolvePredicate(spark, schema, col("k") === v))
+        .map(p => (p.fileName, p.scanRowGroups)).sortBy(_._1)
+    for (v <- Seq(0, 5, 77, 299, 12345))
+      assert(plansOf(sep, v) == plansOf(fus, v), s"bloom pruning diverges at k=$v")
+  }
+
+  test("all-null and empty-family groups behave like the standalone builds") {
+    val (_, fus, _, fusDb) = env
+    val (sep, sepDb) = standalone
+    // z is all-null: HLL estimates 0 in both; freq/sum/quantile/count-min
+    // were never requested for z, so those columns stay NULL in both
+    assert(fus.approxDistinct("z") == Some(0L))
+    assert(sep.approxDistinct("z") == fus.approxDistinct("z"))
+    for ((g, ledgers) <- catalogLedgers(sepDb) ++ catalogLedgers(fusDb);
+         c <- Seq("z_min_freq", "z_max_freq", "z_sum", "z_qsk", "z_cms"))
+      assert(ledgers(c) == null, s"$c is set in $g")
+    // q was not a count-min column: both catalogs decline
+    assert(fus.approxFrequency("q", 1.0) == None)
+    assert(sep.approxFrequency("q", 1.0) == fus.approxFrequency("q", 1.0))
   }
 
   test("one rebuild call is one Spark job, however many columns it covers") {
