@@ -421,129 +421,25 @@ final class DerbyStatsIndex(
   }
 
   /** Catalog-computed top-k survivors (the [[StatsIndex.topKSurvivors]]
-    * fast path): the guaranteed-count threshold is discovered by PAGED
-    * ordered reads of (guarantee bound, row count, null count) — usually
-    * one page: row groups are walked best-first, so coverage of k is
-    * typically reached within the first few — and the survivor filter
-    * then runs as ONE catalog-side pruning query, shipping only surviving
-    * plans to the planner. Served for numeric-encoded columns (integrals,
-    * date/timestamp, decimal) directly, and for STRINGS via the
-    * order-preserving hex shadow columns (Derby compares raw VARCHAR by
-    * UTF-16 code unit, which diverges from Spark's code-point order above
-    * U+E000 — the ASCII-only hex of the UTF-8 bytes restores byte order;
-    * see [[DerbyStatsIndex.hex]]); float/double are uncertified
-    * everywhere. Threshold literals are numeric or hex, so embedding them
-    * in the survivor SQL is safe. */
+    * fast path): the one-key case of [[lexWalk]], the threshold walk every
+    * catalog top-k question shares. With no window it is the unfiltered
+    * walk; with one it is the one-disjunct certificate `Disjunct(lo, hi,
+    * Nil)`, so only groups whose BOTH stored bounds sit inside the window
+    * count toward k. Served for the column types [[colEncoding]]
+    * certifies: numerics directly, strings through the order-preserving
+    * hex shadow columns; float/double are uncertified everywhere. */
   override def topKSurvivors(
       colName: String,
       k: Long,
       descending: Boolean,
       nullsFirst: Boolean,
       lo: Option[(Any, Boolean)] = None,
-      hi: Option[(Any, Boolean)] = None): Option[Seq[FileScanPlan]] = conn.synchronized {
-    require(indexedCols.exists(_.name == colName), s"$colName is not indexed")
-    val colType = indexedCols.find(_.name == colName).map(_.dataType)
-    val numeric = colType.exists {
-      case ByteType | ShortType | IntegerType | LongType | DateType |
-           TimestampType | TimestampNTZType | _: DecimalType => true
-      case _ => false
-    }
-    // strings are served through the order-preserving hex shadow columns
-    // (see initialize): Derby's ordered reads over them equal Spark's
-    // UTF8String (code-point) order, which the raw VARCHAR columns do not
-    val isString = colType.contains(StringType)
-    if ((!numeric && !isString) || k <= 0) return None
-    val minCol = if (isString) s"${colName}_min_hex" else s"${colName}_min"
-    val maxCol = if (isString) s"${colName}_max_hex" else s"${colName}_max"
-    val guar = if (descending) minCol else maxCol
-    val best = if (descending) maxCol else minCol
-    val dir = if (descending) "DESC" else "ASC"
-    def render(v: Any): String =
-      if (isString) "'" + DerbyStatsIndex.hex(v.asInstanceOf[String]) + "'"
-      else v match {
-        case d: java.math.BigDecimal => d.toPlainString
-        case other => other.toString // boxed integrals only (numeric gate above)
-      }
-    // threshold certificate restricted to groups wholly inside the window:
-    // BOTH stored bounds must sit within [lo, hi] (and be known), so every
-    // non-null row of the group passes the data filter
-    // the windowed certificate needs BOTH stored bounds known (the
-    // unfiltered one needs only the guarantee side — adding more would
-    // diverge from the planner-side reference semantics)
-    val inside =
-      (if (lo.isDefined || hi.isDefined)
-        s" AND rg.$minCol IS NOT NULL AND rg.$maxCol IS NOT NULL"
-      else "") +
-      lo.map { case (v, inc) =>
-        s" AND rg.$minCol ${if (inc) ">=" else ">"} ${render(v)}" }
-        .getOrElse("") +
-      hi.map { case (v, inc) =>
-        s" AND rg.$maxCol ${if (inc) "<=" else "<"} ${render(v)}" }
-        .getOrElse("")
-    try {
-      var covered = 0L
-      var threshold: Option[Any] = None
-      var offset = 0
-      val page = 1024
-      while (threshold.isEmpty) {
-        // (file_id, row_group) tiebreakers make the OFFSET walk total-ordered:
-        // each page re-executes the query, and without them a page boundary
-        // inside a run of equal guarantee values could double-count or skip
-        // groups across executions, certifying a threshold not backed by k rows
-        val st = conn.prepareStatement(
-          s"""SELECT $guar, rg.row_count, rg.${colName}_null_count
-             |FROM row_group_statistics rg
-             |WHERE $guar IS NOT NULL AND rg.${colName}_null_count IS NOT NULL
-             |  $inside
-             |ORDER BY $guar $dir, rg.file_id, rg.row_group
-             |OFFSET $offset ROWS FETCH NEXT $page ROWS ONLY""".stripMargin)
-        var n = 0
-        try {
-          val rs = st.executeQuery()
-          while (threshold.isEmpty && rs.next()) {
-            n += 1
-            covered += rs.getLong(2) - rs.getLong(3)
-            if (covered >= k) threshold = Some(rs.getObject(1))
-          }
-          rs.close()
-        } finally st.close()
-        if (threshold.isEmpty) {
-          if (n < page) return None // guarantees never cover k — uncertifiable
-          offset += page
-        }
-      }
-      val t = threshold.get match {
-        case d: java.math.BigDecimal => d.toPlainString
-        // string threshold comes back FROM the hex shadow column — already
-        // hex ([0-9A-F]*), safe to embed quoted
-        case s: String if isString => "'" + s + "'"
-        case other => other.toString
-      }
-      val cmp = if (descending) ">=" else "<="
-      // survivor = best value could beat the threshold (unknown bound
-      // keeps), refined by the null-order contract: nulls-first keeps any
-      // group that may hold a null; nulls-last prunes certified all-null
-      // groups (mirrors TopKPruning exactly)
-      val cond =
-        if (nullsFirst)
-          s"""(rg.$best $cmp $t OR rg.$best IS NULL
-             | OR rg.${colName}_null_count IS NULL
-             | OR rg.${colName}_null_count > 0)""".stripMargin
-        else
-          s"""((rg.$best $cmp $t OR rg.$best IS NULL)
-             | AND (rg.${colName}_null_count IS NULL
-             |      OR rg.${colName}_null_count <> rg.row_count))""".stripMargin
-      Some(runPlanQuery(
-        s"""SELECT f.file_name, f.file_size_bytes, f.row_group_count, rg.row_group,
-           |  rg.rg_start_bytes, rg.rg_compressed_bytes, rg.row_count
-           |FROM row_group_statistics rg
-           |JOIN file_statistics f ON rg.file_id = f.file_id
-           |WHERE $cond
-           |ORDER BY f.file_name, rg.row_group""".stripMargin))
-    } catch {
-      case _: java.sql.SQLException => None
-    }
-  }
+      hi: Option[(Any, Boolean)] = None): Option[Seq[FileScanPlan]] =
+    if (lo.isEmpty && hi.isEmpty)
+      topKSurvivorsLexN(Seq(graft.index.SortKeySpec(colName, descending, nullsFirst)), k)
+    else
+      topKSurvivorsDisjunctive(colName, k, descending, nullsFirst,
+        Seq(graft.prune.TopKPruning.Disjunct(lo, hi, Nil)))
 
   /** Ordering-certified storage encoding of a column for catalog-side
     * ordered reads/comparisons: (min column, max column, literal
@@ -599,8 +495,9 @@ final class DerbyStatsIndex(
     * O(survivors) shipped, independent of how many disjuncts or columns
     * the filter carries.
     *
-    * Implemented as [[lexWalk]] at N = 1 (r11): one threshold-walk
-    * implementation serves every certificate family — at a single key
+    * The one-key case of [[topKSurvivorsDisjunctiveLexN]], so
+    * [[lexWalk]] at N = 1: one threshold-walk implementation serves
+    * every certificate family — at a single key
     * the tuple degenerates to the plain guarantee bound, branch 2 (the
     * deeper-key remainder) and branch 3 (the FreqShadow dominant slice)
     * vanish, and the survivor tie descent bottoms out at "ties keep",
@@ -611,15 +508,9 @@ final class DerbyStatsIndex(
       descending: Boolean,
       nullsFirst: Boolean,
       disjuncts: Seq[graft.prune.TopKPruning.Disjunct])
-      : Option[Seq[FileScanPlan]] = conn.synchronized {
-    if (disjuncts.isEmpty || !indexedCols.exists(_.name == colName)) return None
-    val (minCol, maxCol, _) = colEncoding(colName).getOrElse(return None)
-    val disjSql = disjunctsSql(colName, disjuncts).getOrElse(return None)
-    val nullMayPass = disjuncts.exists(d => d.sortLo.isEmpty && d.sortHi.isEmpty)
-    lexWalk(Seq(graft.index.SortKeySpec(colName, descending, nullsFirst)), k,
-      certSql = s" AND rg.$minCol IS NOT NULL AND rg.$maxCol IS NOT NULL AND $disjSql",
-      headNullsMayWin = nullsFirst && nullMayPass)
-  }
+      : Option[Seq[FileScanPlan]] =
+    topKSurvivorsDisjunctiveLexN(
+      Seq(graft.index.SortKeySpec(colName, descending, nullsFirst)), disjuncts, k)
 
   /** The per-disjunct ALL-PASS certificate as one Derby predicate over a
     * row group's stats: for SOME disjunct, the sort interval holds on

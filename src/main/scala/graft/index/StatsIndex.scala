@@ -24,6 +24,23 @@ final case class FileScanPlan(
       .mkString("[", ", ", "]")
 }
 
+object FileScanPlan {
+
+  /** `plans` narrowed to the row groups `keep` names per file; a file
+    * `keep` omits, or left with no row group, drops. Each side is a sound
+    * over-approximation on its own, so their intersection is too. */
+  def intersect(
+      plans: Seq[FileScanPlan], keep: Map[String, SortedSet[Int]]): Seq[FileScanPlan] =
+    plans.flatMap { p =>
+      keep.get(p.fileName)
+        .map(rgs => p.copy(scanRowGroups = p.scanRowGroups intersect rgs))
+        .filter(_.scanRowGroups.nonEmpty)
+    }
+
+  def intersect(plans: Seq[FileScanPlan], keep: Seq[FileScanPlan]): Seq[FileScanPlan] =
+    intersect(plans, keep.map(p => p.fileName -> p.scanRowGroups).toMap)
+}
+
 /** One row group's statistics for ONE column, in the catalog's storage
   * encoding (same seam as [[StatsIndex.minIndexedValue]]: Long micros for
   * timestamps, Int days for dates; string minima may be TRUNCATED — a

@@ -1,15 +1,12 @@
 package graft.plans
 
 import graft.index.FileScanPlan
-import graft.sources.{IndexedParquetFileIndex, PruneExecution, RowGroupSkipScan}
 import org.apache.spark.sql.{GraftSqlShim, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Sample, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
 /** AUTOMATIC catalog semi-join pruning (r15) — [[graft.prune.JoinPrune]]
@@ -55,11 +52,13 @@ import org.apache.spark.sql.types._
   *  - the pruning decision narrows the scan, and every kept group has a
   *    byte range.
   *
-  * Exactness is untouched: only the fact LEAF is substituted (same
-  * remap-Project-over-RowGroupScan pattern as [[PartPruneScan]], exprIds
-  * preserved); the Join itself stays and re-applies the real condition,
-  * so false positives cost IO only. The dim side is executed ONCE at
-  * planning per execution (a recursive optimizer entry — guarded
+  * Exactness is untouched: only the fact LEAF is substituted, by
+  * [[IndexedRelation.substitute]] — the one swap [[PartPruneScan]] and
+  * [[TopKPushdown]] share (exprIds preserved, byte ranges checked,
+  * decision recorded); this rule owns its strip, its decision and its
+  * consumed columns. The Join itself stays and re-applies the real
+  * condition, so false positives cost IO only. The dim side is executed
+  * ONCE at planning per execution (a recursive optimizer entry — guarded
   * re-entrant, and the substituted leaf cannot match again, so the
   * fixed-point batch converges).
   *
@@ -126,20 +125,6 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     case _ => false
   }
 
-  /** File-by-file, row-group-by-row-group intersection of two sound
-    * per-key decisions — still sound (see class doc) and never larger
-    * than either input. */
-  private def intersect(
-      a: Seq[FileScanPlan], b: Seq[FileScanPlan]): Seq[FileScanPlan] = {
-    val byName = b.map(p => p.fileName -> p).toMap
-    a.flatMap { p =>
-      byName.get(p.fileName).flatMap { q =>
-        val keep = p.scanRowGroups.intersect(q.scanRowGroups)
-        if (keep.isEmpty) None else Some(p.copy(scanRowGroups = keep))
-      }
-    }
-  }
-
   private def attempt(j: Join, factLeft: Boolean): Option[LogicalPlan] = {
     val factPlan = if (factLeft) j.left else j.right
     val dimPlan = if (factLeft) j.right else j.left
@@ -148,15 +133,14 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     // Projects and deterministic Filters (the optimizer infers
     // `isnotnull(key)` onto the join's sides) — both stay in place
     // above the substituted leaf, so traversal is sound
-    def strip(p: LogicalPlan): Option[LogicalRelation] = p match {
-      case l: LogicalRelation => Some(l)
+    def strip(p: LogicalPlan): Option[IndexedRelation] = p match {
       case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
         strip(c)
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter
           if f.condition.deterministic => strip(f.child)
-      case _ => None
+      case other => IndexedRelation.of(other)
     }
-    val rel = strip(factPlan).getOrElse(return None)
+    val ir = strip(factPlan).getOrElse(return None)
     // every column any surviving fact-side node consumes must resolve
     // against the substituted scan: the side's output plus every
     // Filter/Project reference below it
@@ -164,16 +148,8 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
         f.condition.references.map(_.name).toSeq
       case p: Project => p.projectList.flatMap(_.references.map(_.name))
-    }.flatten).distinct
-    val h = rel.relation match {
-      case h: HadoopFsRelation if h.partitionSchema.isEmpty => h
-      case _ => return None
-    }
-    val fi = h.location match {
-      case fi: IndexedParquetFileIndex => fi
-      case _ => return None
-    }
-    val idx = fi.statsIndex
+    }.flatten).toSet
+    val idx = ir.index
 
     // equi-key pairs via Catalyst's own extractor (it normalizes sides:
     // leftKeys come from j.left); keep plain attribute pairs whose fact
@@ -191,7 +167,7 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
       if (factLeft) (leftKeys, rightKeys) else (rightKeys, leftKeys)
     val pairs = factSideKeys.zip(dimSideKeys).collect {
       case (fa: AttributeReference, da: AttributeReference)
-          if rel.outputSet.contains(fa) &&
+          if ir.rel.outputSet.contains(fa) &&
             idx.indexedSchema.fieldNames.contains(fa.name) &&
             prunableType(fa.dataType) => (fa, da)
     }.distinctBy(_._1.name)
@@ -207,7 +183,7 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     if (threshold <= 0 || dimPlan.stats.sizeInBytes > threshold) return None
     val counts = idx.catalogCounts()
     val cacheKey = (dimPlan.canonicalized,
-      fi.rootPaths.head.toString + "#" + pairs.map(_._1.name).mkString(","),
+      ir.fileIndex.rootPaths.head.toString + "#" + pairs.map(_._1.name).mkString(","),
       counts)
     if (JoinPruneRule.declined.contains(cacheKey)) return None
     def decline(): Option[LogicalPlan] = {
@@ -244,42 +220,24 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     val decs = livePairs.zipWithIndex.map { case ((fa, _), i) =>
       val keys = tuples.iterator.map(_.get(i)).filter(_ != null).toSeq.distinct
       graft.prune.JoinPrune.prunePlans(
-        session, idx, h.dataSchema, fa.name, keys, maxKeys)
+        session, idx, ir.fs.dataSchema, fa.name, keys, maxKeys)
     }
     if (decs.exists(_.route.startsWith("degrade"))) return decline()
-    val plans = decs.map(_.plans).reduce(intersect)
+    // file-by-file, row-group-by-row-group: still sound (see class
+    // doc) and never larger than any single key's decision
+    val plans = decs.map(_.plans).reduce(FileScanPlan.intersect(_, _))
     val scanned = plans.map(_.scanRowGroups.size).sum
     val totalGroups = counts.map(_._2.toInt).getOrElse(-1)
     if (totalGroups < 0 || scanned >= totalGroups) return decline()
-    // byte ranges must exist for every kept group (pre-range catalogs
-    // degrade to the unpruned relation)
-    if (plans.exists(p =>
-        p.scanRowGroups.exists(rg => !p.rowGroupRanges.contains(rg))))
-      return decline()
-
-    // observability totals via the O(1) counts, never an allFiles fetch
-    val nf = counts.map(_._1.toInt).getOrElse(-1)
-    fi.lastExecution = Some(PruneExecution(
-      Nil, plans, nf, totalGroups,
-      route = decs.zip(livePairs).map { case (d, (fa, _)) =>
-        s"join-prune:${d.route}(${fa.name})"
-      } :+ s"keys:${decs.map(_.keyCount).max}"))
-
-    val required = StructType(h.dataSchema.filter(f => keptCols.contains(f.name)))
-    val scan = RowGroupScan(
-      DataTypeUtils.toAttributes(required),
-      fi.rootPaths.head.toString, plans, h.dataSchema, required,
-      mergeRuns = true,
-      pushedFilters = Nil)
-    val byName = scan.output.map(o => o.name -> o).toMap
-    val remap = Project(
-      rel.output.filter(o => keptCols.contains(o.name)).map(o =>
-        Alias(byName(o.name), o.name)(exprId = o.exprId, qualifier = o.qualifier)),
-      scan)
-    val newFact = factPlan.transformUp {
-      case l: LogicalRelation if l eq rel => remap
+    val route = decs.zip(livePairs).map { case (d, (fa, _)) =>
+      s"join-prune:${d.route}(${fa.name})"
+    } :+ s"keys:${decs.map(_.keyCount).max}"
+    // a pre-range catalog (a kept group without a byte range) declines
+    ir.substitute(factPlan, plans, keptCols, Nil, counts, route) match {
+      case Some(newFact) =>
+        Some(if (factLeft) j.copy(left = newFact) else j.copy(right = newFact))
+      case None => decline()
     }
-    Some(if (factLeft) j.copy(left = newFact) else j.copy(right = newFact))
   }
 }
 

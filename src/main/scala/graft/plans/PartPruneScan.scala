@@ -1,13 +1,9 @@
 package graft.plans
 
-import graft.sources.{IndexedParquetFileIndex, PruneExecution, RowGroupSkipScan}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.StructType
 
 /** Physical WITHIN-FILE row-group skipping for constancy-prunable
   * predicates (r13): the scan-path refinement (prune/PartPrune) can only
@@ -28,9 +24,12 @@ import org.apache.spark.sql.types.StructType
   * AFTER StatsAggPushdown in the injected rule list, so catalog folds
   * (which replace the whole Aggregate) always get first claim; a fold
   * that declines leaves its Filter to this rule. Whole-file-only drops
-  * stay with the `listFiles` path (standard FileSourceScanExec).
-  * Kill switches: shared `spark.graft.partPrune`, plus this rule's own
-  * `spark.graft.partPruneScan`. */
+  * stay with the `listFiles` path (standard FileSourceScanExec). The
+  * swap itself, byte-range check and pruning record included, is
+  * [[IndexedRelation.substitute]], shared with [[TopKPushdown]] and
+  * [[JoinPruneRule]]; this rule owns only its strip, its decision and
+  * its consumed columns. Kill switches: shared `spark.graft.partPrune`,
+  * plus this rule's own `spark.graft.partPruneScan`. */
 final case class PartPruneScan(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -51,22 +50,13 @@ final case class PartPruneScan(session: SparkSession) extends Rule[LogicalPlan] 
   private def rewrite(
       f: Filter, cond: Expression, child: LogicalPlan,
       consumed: Option[Set[String]]): Option[LogicalPlan] = {
-    def strip(p: LogicalPlan): Option[LogicalRelation] = p match {
-      case l: LogicalRelation => Some(l)
+    def strip(p: LogicalPlan): Option[IndexedRelation] = p match {
       case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
         strip(c)
-      case _ => None
+      case other => IndexedRelation.of(other)
     }
-    val rel = strip(child).getOrElse(return None)
-    val h = rel.relation match {
-      case h: HadoopFsRelation if h.partitionSchema.isEmpty => h
-      case _ => return None
-    }
-    val fi = h.location match {
-      case fi: IndexedParquetFileIndex => fi
-      case _ => return None
-    }
-    val idx = fi.statsIndex
+    val ir = strip(child).getOrElse(return None)
+    val idx = ir.index
     // cheap pure-expression gate BEFORE any catalog IO: ordinary
     // predicates (no determined part / unrenderable image) never pay a
     // planning-time stats fetch here
@@ -81,37 +71,14 @@ final case class PartPruneScan(session: SparkSession) extends Rule[LogicalPlan] 
     val base = statsPlans.map(p => p.fileName -> p.scanRowGroups.size).toMap
     if (!refined.exists(p => p.scanRowGroups.size < base(p.fileName)))
       return None
-    // byte ranges must exist for every kept group (pre-range catalogs
-    // degrade to the listFiles path)
-    if (refined.exists(p =>
-        p.scanRowGroups.exists(rg => !p.rowGroupRanges.contains(rg))))
-      return None
-    // observability totals via the O(1) counts, never an allFiles fetch
-    // (a full-catalog materialization per fired rewrite at 1M+ groups)
-    val (nf, ng) = idx.catalogCounts().getOrElse((-1L, -1L))
-    fi.lastExecution = Some(PruneExecution(
-      Seq(cond), refined, nf.toInt, ng.toInt,
-      route = partRoute :+ "part-rowgroup-scan"))
     // every column any surviving node consumes must resolve against the
-    // substituted scan (same contract as the top-k substitution); a
-    // known render Project narrows it to the actually-consumed set
+    // substituted scan; a known render Project narrows it to the
+    // actually-consumed set
     val needed = (child.collect {
       case p: Project => p.projectList.map(_.name)
     }.flatten ++ cond.references.map(_.name).toSeq ++
       consumed.getOrElse(child.output.map(_.name).toSet)).toSet
-    val required = StructType(h.dataSchema.filter(fl => needed.contains(fl.name)))
-    val scan = RowGroupScan(
-      DataTypeUtils.toAttributes(required),
-      fi.rootPaths.head.toString, refined, h.dataSchema, required,
-      mergeRuns = true,
-      pushedFilters = RowGroupSkipScan.translateDataFilters(cond))
-    val byName = scan.output.map(o => o.name -> o).toMap
-    val remap = Project(
-      rel.output.filter(o => needed.contains(o.name)).map(o =>
-        Alias(byName(o.name), o.name)(exprId = o.exprId, qualifier = o.qualifier)),
-      scan)
-    Some(f.copy(child = child.transformUp {
-      case l: LogicalRelation if l eq rel => remap
-    }))
+    ir.substitute(child, refined, needed, Seq(cond), idx.catalogCounts(),
+      partRoute :+ "part-rowgroup-scan").map(c => f.copy(child = c))
   }
 }

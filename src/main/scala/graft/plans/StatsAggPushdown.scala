@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Exp
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -797,10 +796,10 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     * attribute-only Project (column pruning) — anything else (Filter,
     * joins, computed projections) disqualifies the rewrite. */
   private def fileIndexOf(p: LogicalPlan): Option[IndexedParquetFileIndex] = p match {
-    case l: LogicalRelation => fromRelation(l)
-    case Project(projectList, l: LogicalRelation) =>
-      fromRelation(l).filter(idx => projectList.forall(passThrough(_, idx)))
-    case _ => None
+    case Project(projectList, l) =>
+      IndexedRelation.of(l).map(_.fileIndex)
+        .filter(idx => projectList.forall(passThrough(_, idx)))
+    case other => IndexedRelation.of(other).map(_.fileIndex)
   }
 
   /** A projection entry the aggregate rewrites may traverse: a plain
@@ -820,16 +819,6 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       !idx.statsIndex.indexedSchema.fields.exists(_.name == al.name)
     case _ => false
   }
-
-  private def fromRelation(l: LogicalRelation): Option[IndexedParquetFileIndex] =
-    l.relation match {
-      case h: HadoopFsRelation =>
-        h.location match {
-          case idx: IndexedParquetFileIndex => Some(idx)
-          case _ => None
-        }
-      case _ => None
-    }
 
   /** One aggregate output column → its certified catalog value (already in
     * Catalyst internal encoding), or None ⇒ the whole rewrite aborts.

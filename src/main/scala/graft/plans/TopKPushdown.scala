@@ -1,15 +1,12 @@
 package graft.plans
 
 import graft.prune.TopKPruning
-import graft.sources.{IndexedParquetFileIndex, PruneExecution, RowGroupSkipScan}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IntegerLiteral, IsNotNull, LessThan, LessThanOrEqual, Literal, NullsFirst, Or, SortOrder, TruncTimestamp}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IntegerLiteral, IsNotNull, LessThan, LessThanOrEqual, Literal, NullsFirst, Or, SortOrder, TruncTimestamp}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{DataType, DateType, DecimalType, StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DateType, DecimalType, StringType, TimestampNTZType, TimestampType}
 
 /** Automatic top-k pruning — the optimizer face of
   * [[graft.prune.TopKPruning]]: a user writes plain
@@ -41,12 +38,17 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, StringType, 
   * keys past the prefix are lexicographically dominated and ignored.
   * Kill switch: `spark.graft.topkPushdown=false`.
   *
-  * The rewrite substitutes the [[LogicalRelation]] node IN PLACE (any
-  * surrounding Filter/Project structure survives, so the filter is still
-  * re-applied above the scan — the Inexact contract) with the pruned
-  * [[RowGroupScan]] under exprId-preserving aliases; the filter's
-  * translatable conjuncts are pushed to the reader for page-level
-  * skipping inside surviving row groups.
+  * Every shape, single key or lexicographic, filtered or not, goes
+  * through the lex pruners ([[TopKPruning.pruneLexN]],
+  * [[TopKPruning.pruneDisjunctiveLex]]), whose one-key case is the
+  * single-key walk. The rewrite is [[IndexedRelation.substitute]], shared
+  * with [[PartPruneScan]] and [[JoinPruneRule]]: the relation is replaced
+  * IN PLACE (any surrounding Filter/Project structure survives, so the
+  * filter is still re-applied above the scan — the Inexact contract) by
+  * the pruned [[RowGroupScan]] under exprId-preserving aliases, and the
+  * filter's translatable conjuncts reach the reader for page-level
+  * skipping inside surviving row groups. This rule owns its strip, its
+  * decision and its consumed columns.
   */
 final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -78,24 +80,15 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
     // the sort input: the indexed relation under attribute-only Projects
     // and at most one Filter
     var cond: Option[Expression] = None
-    def strip(p: LogicalPlan): Option[LogicalRelation] = p match {
-      case l: LogicalRelation => Some(l)
+    def strip(p: LogicalPlan): Option[IndexedRelation] = p match {
       case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
         strip(c)
       case f: Filter if cond.isEmpty =>
         cond = Some(f.condition); strip(f.child)
-      case _ => None
+      case other => IndexedRelation.of(other)
     }
-    val rel = strip(child).getOrElse(return None)
-    val h = rel.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val fi = h.location match {
-      case fi: IndexedParquetFileIndex => fi
-      case _ => return None
-    }
-    val idx = fi.statsIndex
+    val ir = strip(child).getOrElse(return None)
+    val idx = ir.index
     // N-key lexicographic prefix: the maximal leading prefix of DISTINCT
     // indexed sort keys takes the tuple certificate — each added key
     // separates groups still tied on the shallower ones (never worse —
@@ -109,8 +102,6 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
     // keys (the raw value refines its own day bucket).
     val specs = keySpecs(order, child, idx)
     val (a, headSpec) = specs.headOption.getOrElse(return None)
-    val descending = headSpec.desc
-    val nullsFirst = headSpec.nullsFirst
     val prefix = scala.collection.mutable.ArrayBuffer(headSpec)
     val pit = specs.drop(1).iterator
     var extending = true
@@ -122,25 +113,23 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
         case _ => extending = false
       }
     }
-    def keyTag(p: graft.index.SortKeySpec): String =
-      p.image.fold(p.col)(img => s"${img.id}(${p.col})")
-    val headTag = keyTag(headSpec)
+    val keysTag = prefix.map(p => p.image.fold(p.col)(img => s"${img.id}(${p.col})"))
+      .mkString(",")
     // O(1) catalog cardinalities — the baseline for the unfiltered shape
     // AND the observability totals below. Fetching allFiles() here would
     // be a full-catalog materialization per fired rewrite (the exact
     // driver-side bottleneck at 1M+ row groups); a store failure declines
     // the rewrite (fail-closed — the declarative plan stands).
-    val (catFiles, catGroups) = idx.catalogCounts().getOrElse(return None)
+    val counts = idx.catalogCounts()
+    val catGroups = counts.getOrElse(return None)._2
+    // a single plain key keeps its one-key route tag; the lex pruners
+    // serve it through their one-key case
+    val lexTag =
+      if (prefix.sizeIs == 1 && headSpec.image.isEmpty) "" else s"-lex${prefix.size}"
     val (plans, baseline, routeTag) = cond match {
       case None =>
-        val total = catGroups
-        if (prefix.sizeIs == 1 && headSpec.image.isEmpty)
-          (TopKPruning.prune(idx, a.name, k.toLong, descending, nullsFirst),
-            total, s"topk($headTag)")
-        else
-          (TopKPruning.pruneLexN(idx, prefix.toSeq, k.toLong),
-            total,
-            s"topk-lex${prefix.size}(${prefix.map(keyTag).mkString(",")})")
+        (TopKPruning.pruneLexN(idx, prefix.toSeq, k.toLong), catGroups,
+          s"topk$lexTag($keysTag)")
       case Some(c) =>
         val disjunctsRaw = parseDisjuncts(c, a).getOrElse(return None)
         // a computed head key cannot compare RAW-value sort bounds in
@@ -161,29 +150,16 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
           if (disjuncts.sizeIs == 1 && otherCols.isEmpty) "filtered"
           else "composite"
         val suffix = if (otherCols.isEmpty) "" else ";" + otherCols.mkString(",")
-        if (prefix.sizeIs == 1 && headSpec.image.isEmpty)
-          (TopKPruning.pruneDisjunctive(
-              idx, a.name, k.toLong, descending, nullsFirst,
-              disjuncts, statsPlans),
-            statsPlans.map(_.scanRowGroups.size.toLong).sum,
-            s"topk-$shape($headTag$suffix)")
-        else
-          // FILTERED lexicographic: the disjunctive all-pass certificate
-          // composed with the tuple threshold — deeper sort keys
-          // separate groups tied on the leading key inside the window
-          (TopKPruning.pruneDisjunctiveLex(
-              idx, prefix.toSeq, k.toLong, disjuncts, statsPlans),
-            statsPlans.map(_.scanRowGroups.size.toLong).sum,
-            s"topk-$shape-lex${prefix.size}(" +
-              s"${prefix.map(keyTag).mkString(",")}$suffix)")
+        // FILTERED lexicographic past one key: the disjunctive all-pass
+        // certificate composed with the tuple threshold — deeper sort
+        // keys separate groups tied on the leading key inside the window
+        (TopKPruning.pruneDisjunctiveLex(
+            idx, prefix.toSeq, k.toLong, disjuncts, statsPlans),
+          statsPlans.map(_.scanRowGroups.size.toLong).sum,
+          s"topk-$shape$lexTag($keysTag$suffix)")
     }
     val kept = plans.map(_.scanRowGroups.size).sum
     if (kept >= baseline) return None // no narrowing beyond the stats path
-
-    fi.lastExecution = Some(PruneExecution(
-      cond.toSeq, plans, catFiles.toInt, catGroups.toInt,
-      route = Seq(routeTag)))
-
     // every column ANY node of the surviving Filter/Project chain consumes
     // (not just the top node's references — an intermediate Project or the
     // Filter condition must also resolve against the substituted scan)
@@ -191,21 +167,7 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
       case p: Project => p.projectList.map(_.name)
       case f: Filter  => f.condition.references.map(_.name).toSeq
     }.flatten.toSet ++ child.output.map(_.name)
-    val required = StructType(h.dataSchema.filter(f => needed.contains(f.name)))
-    val scan = RowGroupScan(
-      DataTypeUtils.toAttributes(required),
-      fi.rootPaths.head.toString, plans, h.dataSchema, required,
-      mergeRuns = true,
-      pushedFilters =
-        cond.toSeq.flatMap(RowGroupSkipScan.translateDataFilters))
-    val byName = scan.output.map(o => o.name -> o).toMap
-    val remap = Project(
-      rel.output.filter(o => needed.contains(o.name)).map(o =>
-        Alias(byName(o.name), o.name)(exprId = o.exprId, qualifier = o.qualifier)),
-      scan)
-    Some(child.transformUp {
-      case l: LogicalRelation if l eq rel => remap
-    })
+    ir.substitute(child, plans, needed, cond.toSeq, counts, Seq(routeTag))
   }
 
   /** The maximal leading run of catalog-certifiable sort keys, with

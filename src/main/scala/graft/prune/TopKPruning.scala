@@ -59,18 +59,14 @@ object TopKPruning {
   }
 
   /** FILTERED top-k pruning — `WHERE c [>= lo] [<= hi] ORDER BY c LIMIT k`,
-    * the time-window-latest-k shape: bounds are on the SORT column itself,
-    * so a row group lying WHOLLY inside the filter interval (certified
-    * stored min ≥ lo and stored max ≤ hi; truncated string minima are
-    * lower bounds, so `stored ≥ lo ⇒ real ≥ lo` stays sound) contributes
-    * its full non-null row count to the threshold guarantee — every one
-    * of those rows passes the filter. Survivors are taken from
-    * `statsPlans` (the filter's own stats pruning, already conservative)
-    * minus groups whose best value is strictly worse than the threshold.
-    * Null ordering is irrelevant here: a comparison filter on `c` never
-    * passes nulls, so certified all-null groups are pruned outright.
-    * Degrades to `statsPlans` unchanged whenever the inside-the-interval
-    * guarantees never cover k. */
+    * the time-window-latest-k shape: the one-disjunct case of
+    * [[pruneDisjunctive]] with bounds on the SORT column only. A row group
+    * lying WHOLLY inside the interval (certified stored min ≥ lo and
+    * stored max ≤ hi; truncated string minima are lower bounds, so
+    * `stored ≥ lo ⇒ real ≥ lo` stays sound) contributes its full non-null
+    * row count to the threshold guarantee. Null ordering is irrelevant: a
+    * comparison filter on `c` never passes nulls, so certified all-null
+    * groups are pruned outright. */
   def pruneFiltered(
       index: StatsIndex,
       colName: String,
@@ -78,67 +74,9 @@ object TopKPruning {
       descending: Boolean,
       lo: Option[(Any, Boolean)],
       hi: Option[(Any, Boolean)],
-      statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] = {
-    require(k > 0, s"top-k needs k > 0, got $k")
-    if (statsPlans.isEmpty) return statsPlans
-    val dt = index.indexedSchema.fields.find(_.name == colName)
-      .getOrElse(return statsPlans).dataType
-    val ord = ordering(dt).getOrElse(return statsPlans)
-    // catalog-side fast path: in-window threshold + survivor filter inside
-    // the store; survivors intersect with the filter's own stats pruning
-    // (both over-approximate independently, so intersecting is sound).
-    // nullsFirst=false always: a comparison filter on the column passes no
-    // nulls, so certified all-null groups lose regardless of sort order.
-    index.topKSurvivors(colName, k, descending, nullsFirst = false, lo, hi) match {
-      case Some(survivors) =>
-        val byFile = survivors.map(p => p.fileName -> p.scanRowGroups).toMap
-        return statsPlans.flatMap { p =>
-          byFile.get(p.fileName)
-            .map(rgs => p.copy(scanRowGroups = p.scanRowGroups intersect rgs))
-            .filter(_.scanRowGroups.nonEmpty)
-        }
-      case None => () // fall through to the planner-side reference path
-    }
-    val stats = index.rowGroupStats(colName).getOrElse(return statsPlans)
-
-    def passesLo(v: Any) = lo.forall { case (b, inc) =>
-      if (inc) ord.gteq(v, b) else ord.gt(v, b) }
-    def passesHi(v: Any) = hi.forall { case (b, inc) =>
-      if (inc) ord.lteq(v, b) else ord.lt(v, b) }
-    def inside(s: RowGroupStat): Boolean =
-      s.min.isDefined && s.max.isDefined && s.nullCount.isDefined &&
-        passesLo(s.min.get) && passesHi(s.max.get)
-
-    def guarantee(s: RowGroupStat): Option[Any] = if (descending) s.min else s.max
-    def best(s: RowGroupStat): Option[Any] = if (descending) s.max else s.min
-    val better: (Any, Any) => Boolean = if (descending) ord.gteq else ord.lteq
-
-    val certified = stats.filter(inside)
-      .sortBy(s => guarantee(s).get)(if (descending) ord.reverse else ord)
-    var covered = 0L
-    var threshold: Option[Any] = None
-    val it = certified.iterator
-    while (covered < k && it.hasNext) {
-      val s = it.next()
-      covered += s.rowCount - s.nullCount.get
-      if (covered >= k) threshold = guarantee(s)
-    }
-    threshold match {
-      case None => statsPlans
-      case Some(t) =>
-        val pruned = stats.filter { s =>
-          if (s.nullCount.contains(s.rowCount)) true // no row passes the filter
-          else best(s) match {
-            case Some(b) => !better(b, t)
-            case None    => false
-          }
-        }.map(s => (s.fileName, s.rowGroup)).toSet
-        statsPlans.flatMap { p =>
-          val rgs = p.scanRowGroups.filterNot(rg => pruned((p.fileName, rg)))
-          if (rgs.isEmpty) None else Some(p.copy(scanRowGroups = rgs))
-        }
-    }
-  }
+      statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] =
+    pruneDisjunctive(index, colName, k, descending, nullsFirst = false,
+      Seq(Disjunct(lo, hi, Nil)), statsPlans)
 
   /** Bounds on one NON-sort indexed column of a composite filtered top-k
     * (`None`/`None` = a bare IsNotNull conjunct: no value bounds, but rows
@@ -150,31 +88,14 @@ object TopKPruning {
 
   /** COMPOSITE filtered top-k pruning — `WHERE <conjuncts over several
     * indexed columns> ORDER BY c LIMIT k`, e.g. the per-source-latest-k
-    * shape `WHERE src = 'web' ORDER BY ts DESC LIMIT k`. The threshold
-    * guarantee generalizes per-column: a row group contributes its
-    * non-null-in-`c` row count iff EVERY filter conjunct is certified
-    * ALL-PASS for the group —
-    *  - sort-column bounds: stored min ≥ lo and stored max ≤ hi (the
-    *    [[pruneFiltered]] inside-the-interval certificate);
-    *  - other-column bounds: that column's stored min ≥ lo, stored max
-    *    ≤ hi AND certified null count 0 (a null row fails any comparison
-    *    — and a bare IsNotNull — so all-pass needs zero nulls). Truncated
-    *    string minima stay sound: stored ≥ lo ⇒ real ≥ stored ≥ lo;
-    *    stored maxima are verbatim by construction.
-    * Such a group's non-null-in-`c` rows ALL pass the whole filter and
-    * all sit at-or-beyond the group's guarantee bound, so accumulating
-    * them to k yields a sound threshold; survivors are `statsPlans` (the
-    * filter's own stats pruning) minus groups whose best sort value is
-    * strictly worse. Null ordering on the sort column: bounds on `c`
-    * reject nulls outright (as in [[pruneFiltered]]); without them the
-    * [[prune]] rules apply (nullsFirst keeps any group that may hold a
-    * null; nullsLast prunes certified all-null groups). Degrades to
-    * `statsPlans` unchanged whenever certification never covers k — on a
-    * layout where the filter columns aren't clustered, no group certifies
-    * all-pass and the declarative plan simply stands: over-scan, never
-    * wrong. This is O(index) planner-side work (one rowGroupStats fetch
-    * per filter column); the catalog-side fast path only serves the
-    * single-column shapes, so composites skip it. */
+    * shape `WHERE src = 'web' ORDER BY ts DESC LIMIT k`: the one-disjunct
+    * case of [[pruneDisjunctive]]. A row group contributes its
+    * non-null-in-`c` row count iff EVERY conjunct is certified ALL-PASS
+    * for it — sort-column bounds as in [[pruneFiltered]]; other-column
+    * bounds need that column's stored min ≥ lo, stored max ≤ hi AND a
+    * certified null count of 0 (a null row fails any comparison, and a
+    * bare IsNotNull). On a layout where the filter columns aren't
+    * clustered no group certifies and the declarative plan stands. */
   def pruneComposite(
       index: StatsIndex,
       colName: String,
@@ -184,88 +105,9 @@ object TopKPruning {
       sortLo: Option[(Any, Boolean)],
       sortHi: Option[(Any, Boolean)],
       others: Seq[OtherColBounds],
-      statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] = {
-    require(k > 0, s"top-k needs k > 0, got $k")
-    if (others.isEmpty)
-      return pruneFiltered(index, colName, k, descending, sortLo, sortHi, statsPlans)
-    if (statsPlans.isEmpty) return statsPlans
-    val dt = index.indexedSchema.fields.find(_.name == colName)
-      .getOrElse(return statsPlans).dataType
-    val ord = ordering(dt).getOrElse(return statsPlans)
-    // catalog-side fast path: the all-pass-extended threshold + survivor
-    // filter inside the store, O(survivors) transfer instead of one
-    // O(index) rowGroupStats fetch per filter column
-    index.topKSurvivorsComposite(
-        colName, k, descending, nullsFirst, sortLo, sortHi, others) match {
-      case Some(survivors) =>
-        val byFile = survivors.map(p => p.fileName -> p.scanRowGroups).toMap
-        return statsPlans.flatMap { p =>
-          byFile.get(p.fileName)
-            .map(rgs => p.copy(scanRowGroups = p.scanRowGroups intersect rgs))
-            .filter(_.scanRowGroups.nonEmpty)
-        }
-      case None => () // fall through to the planner-side reference path
-    }
-    val sortStats = index.rowGroupStats(colName).getOrElse(return statsPlans)
-    val otherInfo = others.map { ob =>
-      val odt = index.indexedSchema.fields.find(_.name == ob.col)
-        .getOrElse(return statsPlans).dataType
-      val oord = ordering(odt).getOrElse(return statsPlans)
-      val stats = index.rowGroupStats(ob.col).getOrElse(return statsPlans)
-      (ob, oord, stats.map(s => (s.fileName, s.rowGroup) -> s).toMap)
-    }
-    def allPass(file: String, rg: Int): Boolean = otherInfo.forall {
-      case (ob, o, m) =>
-        m.get((file, rg)).exists { s =>
-          s.nullCount.contains(0L) &&
-            ob.lo.forall { case (b, inc) =>
-              s.min.exists(v => if (inc) o.gteq(v, b) else o.gt(v, b)) } &&
-            ob.hi.forall { case (b, inc) =>
-              s.max.exists(v => if (inc) o.lteq(v, b) else o.lt(v, b)) }
-        }
-    }
-    val sortBounded = sortLo.isDefined || sortHi.isDefined
-    def passesLo(v: Any) = sortLo.forall { case (b, inc) =>
-      if (inc) ord.gteq(v, b) else ord.gt(v, b) }
-    def passesHi(v: Any) = sortHi.forall { case (b, inc) =>
-      if (inc) ord.lteq(v, b) else ord.lt(v, b) }
-    def insideSort(s: RowGroupStat): Boolean =
-      s.min.isDefined && s.max.isDefined && s.nullCount.isDefined &&
-        passesLo(s.min.get) && passesHi(s.max.get)
-    def guarantee(s: RowGroupStat): Option[Any] = if (descending) s.min else s.max
-    def best(s: RowGroupStat): Option[Any] = if (descending) s.max else s.min
-    val better: (Any, Any) => Boolean = if (descending) ord.gteq else ord.lteq
-
-    val certified = sortStats
-      .filter(s => insideSort(s) && allPass(s.fileName, s.rowGroup))
-      .sortBy(s => guarantee(s).get)(if (descending) ord.reverse else ord)
-    var covered = 0L
-    var threshold: Option[Any] = None
-    val it = certified.iterator
-    while (covered < k && it.hasNext) {
-      val s = it.next()
-      covered += s.rowCount - s.nullCount.get
-      if (covered >= k) threshold = guarantee(s)
-    }
-    threshold match {
-      case None => statsPlans
-      case Some(t) =>
-        val pruned = sortStats.filter { s =>
-          val mayNullWin = nullsFirst && !sortBounded && !s.nullCount.contains(0L)
-          val allNullGroup = s.nullCount.contains(s.rowCount)
-          if (mayNullWin) false
-          else if (allNullGroup) true // sortBounded rejects nulls; else nullsLast loses
-          else best(s) match {
-            case Some(b) => !better(b, t)
-            case None    => false
-          }
-        }.map(s => (s.fileName, s.rowGroup)).toSet
-        statsPlans.flatMap { p =>
-          val rgs = p.scanRowGroups.filterNot(rg => pruned((p.fileName, rg)))
-          if (rgs.isEmpty) None else Some(p.copy(scanRowGroups = rgs))
-        }
-    }
-  }
+      statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] =
+    pruneDisjunctive(index, colName, k, descending, nullsFirst,
+      Seq(Disjunct(sortLo, sortHi, others)), statsPlans)
 
   /** One disjunct of a DISJUNCTIVE filtered top-k (`WHERE D1 OR D2 …
     * ORDER BY c LIMIT k`): its own sort-column interval plus its own
@@ -302,11 +144,6 @@ object TopKPruning {
       statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] = {
     require(k > 0, s"top-k needs k > 0, got $k")
     if (disjuncts.isEmpty) return statsPlans
-    if (disjuncts.sizeIs == 1) {
-      val d = disjuncts.head
-      return pruneComposite(index, colName, k, descending, nullsFirst,
-        d.sortLo, d.sortHi, d.others, statsPlans)
-    }
     if (statsPlans.isEmpty) return statsPlans
     val dt = index.indexedSchema.fields.find(_.name == colName)
       .getOrElse(return statsPlans).dataType
@@ -315,13 +152,7 @@ object TopKPruning {
     // survivor filter inside the store
     index.topKSurvivorsDisjunctive(
         colName, k, descending, nullsFirst, disjuncts) match {
-      case Some(survivors) =>
-        val byFile = survivors.map(p => p.fileName -> p.scanRowGroups).toMap
-        return statsPlans.flatMap { p =>
-          byFile.get(p.fileName)
-            .map(rgs => p.copy(scanRowGroups = p.scanRowGroups intersect rgs))
-            .filter(_.scanRowGroups.nonEmpty)
-        }
+      case Some(survivors) => return FileScanPlan.intersect(statsPlans, survivors)
       case None => () // fall through to the planner-side reference path
     }
     val sortStats = index.rowGroupStats(colName).getOrElse(return statsPlans)
@@ -495,14 +326,9 @@ object TopKPruning {
   def pruneDisjunctiveLex(
       index: StatsIndex, keys: Seq[SortKeySpec], k: Long,
       disjuncts: Seq[Disjunct],
-      statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] = {
-    require(keys.nonEmpty, "lexicographic top-k needs at least one sort key")
-    if (disjuncts.isEmpty) return statsPlans
-    if (keys.sizeIs == 1 && keys.head.image.isEmpty)
-      return pruneDisjunctive(index, keys.head.col, k, keys.head.desc,
-        keys.head.nullsFirst, disjuncts, statsPlans)
-    pruneLexImpl(memo(index), keys, k, Some((disjuncts, statsPlans)))
-  }
+      statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] =
+    if (disjuncts.isEmpty) statsPlans
+    else pruneLexImpl(memo(index), keys, k, Some((disjuncts, statsPlans)))
 
   private def pruneLexImpl(
       index: StatsIndex, keys: Seq[SortKeySpec], k: Long,
@@ -510,7 +336,7 @@ object TopKPruning {
     require(keys.nonEmpty, "lexicographic top-k needs at least one sort key")
     require(k > 0, s"top-k needs k > 0, got $k")
     val head = keys.head
-    val universe: Seq[FileScanPlan] =
+    lazy val universe: Seq[FileScanPlan] =
       filter.map(_._2).getOrElse(index.allFiles())
     // a plain single key delegates to the reference single-key algorithms;
     // an IMAGE single key runs the generic body at n = 1 (those algorithms
@@ -528,16 +354,8 @@ object TopKPruning {
         case Some((ds, sp)) => pruneDisjunctiveLex(index, keys.init, k, ds, sp)
         case None           => pruneLexN(index, keys.init, k)
       }
-    def intersect(a: Seq[FileScanPlan], b: Seq[FileScanPlan]): Seq[FileScanPlan] = {
-      val byFile = b.map(p => p.fileName -> p.scanRowGroups).toMap
-      a.flatMap { p =>
-        byFile.get(p.fileName)
-          .map(rgs => p.copy(scanRowGroups = p.scanRowGroups intersect rgs))
-          .filter(_.scanRowGroups.nonEmpty)
-      }
-    }
     def intersectShorter(deeper: Seq[FileScanPlan]): Seq[FileScanPlan] =
-      intersect(deeper, shorterPlans)
+      FileScanPlan.intersect(deeper, shorterPlans)
     // orderings per key (an IMAGE key orders by its result type, and its
     // declared input type must match the indexed column's — else the
     // derived stats would be nonsense); an uncertified key truncates to
@@ -570,7 +388,7 @@ object TopKPruning {
       case Some((ds, _)) => index.topKSurvivorsDisjunctiveLexN(keys, ds, k)
       case None          => index.topKSurvivorsLexN(keys, k)
     }) match {
-      case Some(plans) => return intersectShorter(intersect(plans, universe))
+      case Some(plans) => return intersectShorter(FileScanPlan.intersect(plans, universe))
       case None => () // fall through to the planner-side reference path
     }
     // computed keys: per-group stats DERIVED through the monotone image
@@ -816,7 +634,8 @@ object TopKPruning {
       descending: Boolean,
       nullsFirst: Boolean): Seq[FileScanPlan] = {
     require(k > 0, s"top-k needs k > 0, got $k")
-    val all = index.allFiles()
+    // fetched only when the catalog fast path cannot answer
+    lazy val all = index.allFiles()
     val dt = index.indexedSchema.fields.find(_.name == colName)
       .getOrElse(return all).dataType
     val ord = ordering(dt).getOrElse(return all)

@@ -48,8 +48,10 @@ final case class PruneExecution(
   * can only over-scan, never change results.
   *
   * Row-group granularity: the index's per-row-group decision is recorded in
-  * [[lastExecution]]; the physical skip of non-matching row groups happens
-  * in the vectorized parquet reader via footer-stats filter pushdown
+  * [[lastExecution]] (through [[record]], which the graft optimizer rules
+  * that substitute a [[graft.plans.RowGroupScan]] share); the physical
+  * skip of non-matching row groups happens in the vectorized parquet
+  * reader via footer-stats filter pushdown
   * (`spark.sql.parquet.filterPushdown`), which reproduces the reference's
   * ParquetAccessPlan outcome from the same min/max values (SURVEY.md §7.4).
   *
@@ -84,16 +86,28 @@ final class IndexedParquetFileIndex(
     * rewrite consults the same registry the filter router uses). */
   def rowLevelIndexDirs: Map[String, String] = rowLevelIndexes
 
+  /** Read and reset by callers; written only through [[record]]. */
   @volatile var lastExecution: Option[PruneExecution] = None
+
+  /** Records what a planning pass chose to scan. `counts` is the
+    * catalog's (files, row groups) as [[StatsIndex.catalogCounts]] gives
+    * them, which the caller already holds; unknown totals read -1. */
+  def record(
+      dataFilters: Seq[Expression],
+      plans: Seq[FileScanPlan],
+      counts: Option[(Long, Long)],
+      route: Seq[String]): Unit = {
+    val (nf, ng) = counts.getOrElse((-1L, -1L))
+    lastExecution = Some(PruneExecution(dataFilters, plans, nf.toInt, ng.toInt, route))
+  }
 
   override def rootPaths: Seq[Path] = Seq(dir)
 
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val everything = index.allFiles()
     val statsPlans =
-      if (dataFilters.isEmpty) everything
+      if (dataFilters.isEmpty) index.allFiles()
       else index.getFiles(dataFilters.reduce(And))
     // planner-side constancy refinement (r13): conjuncts over determined
     // calendar parts / Derby-unrenderable images drop row groups — and
@@ -104,9 +118,13 @@ final class IndexedParquetFileIndex(
         (statsPlans, Nil)
       else graft.prune.PartPrune.refine(index, dataFilters, statsPlans)
     val (plans, route) = routeRowLevel(dataFilters, partPlans)
-    lastExecution = Some(PruneExecution(
-      dataFilters, plans, everything.size, everything.map(_.rowGroupCount).sum,
-      partRoute ++ route))
+    // an unfiltered listing holds every plan already; a filtered one asks
+    // the catalog's O(1) counts rather than fetching every plan to count
+    val counts =
+      if (dataFilters.isEmpty)
+        Some((statsPlans.size.toLong, statsPlans.map(_.rowGroupCount.toLong).sum))
+      else index.catalogCounts()
+    record(dataFilters, plans, counts, partRoute ++ route)
     val statuses = plans.map { p =>
       new FileStatus(p.fileSizeBytes, false, 1, fileSystemBlockSize, 0L,
         new Path(dir, p.fileName))
@@ -127,12 +145,6 @@ final class IndexedParquetFileIndex(
     val points = conjuncts.flatMap(pointKeys)
     val ranges = rangeBounds(conjuncts)
     if (points.isEmpty && ranges.isEmpty) return (statsPlans, Nil)
-    def intersect(plans: Seq[FileScanPlan], hits: Map[String, SortedSet[Int]]) =
-      plans.flatMap { p =>
-        hits.get(p.fileName)
-          .map(rgs => p.copy(scanRowGroups = p.scanRowGroups intersect rgs))
-          .filter(_.scanRowGroups.nonEmpty)
-      }
     // Staleness guard: a posting index built before an append/compaction
     // changed the file set has NO postings for the new files — intersecting
     // would silently prune them (rows lost). The catalog's covered-files
@@ -150,7 +162,7 @@ final class IndexedParquetFileIndex(
       case ((plans, route), (colName, keys)) =>
         if (!covered(colName)) (plans, route :+ s"rowlevel-stale($colName)")
         else lookupPostings(colName, keys) match {
-          case Some(hits) => (intersect(plans, hits), route :+ s"rowlevel($colName)")
+          case Some(hits) => (FileScanPlan.intersect(plans, hits), route :+ s"rowlevel($colName)")
           case None       => (plans, route :+ s"rowlevel-degraded($colName)")
         }
     }
@@ -158,7 +170,7 @@ final class IndexedParquetFileIndex(
       case ((plans, route), (colName, (lo, loInc), (hi, hiInc))) =>
         if (!covered(colName)) (plans, route :+ s"rowlevel-stale($colName)")
         else lookupRangePostings(colName, lo, loInc, hi, hiInc) match {
-          case Some(hits) => (intersect(plans, hits), route :+ s"rowlevel-range($colName)")
+          case Some(hits) => (FileScanPlan.intersect(plans, hits), route :+ s"rowlevel-range($colName)")
           case None       => (plans, route :+ s"rowlevel-degraded($colName)")
         }
     }

@@ -172,7 +172,6 @@ object EventStreams {
     * gates and the bench run queries strictly sequentially; a concurrent
     * caller must use a dedicated `spark.newSession()`. */
   private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val forced = s.conf.get("spark.graft.stream.statePartitions", n.toString).toInt
     // r17: NO-DATA micro-batches disabled for the gate queries (restored
     // after). After the last data batch, a stateful query otherwise runs
     // one more full micro-batch cycle (plan + state-store commit per
@@ -187,15 +186,13 @@ object EventStreams {
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prevNd = s.conf.get(ndKey)
     s.conf.set(ndKey, "false")
-    try {
-      if (forced <= 0) body // 0 ⇒ leave the session partition default
-      else {
-        val key = "spark.sql.shuffle.partitions"
-        val prev = s.conf.get(key)
-        s.conf.set(key, forced.toString)
-        try body finally s.conf.set(key, prev)
-      }
-    } finally s.conf.set(ndKey, prevNd)
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    s.conf.set(key, n.toString)
+    try body finally {
+      s.conf.set(key, prev)
+      s.conf.set(ndKey, prevNd)
+    }
   }
 
   def streamDedupQuery(s: SparkSession, sfDir: String): DataFrame = {

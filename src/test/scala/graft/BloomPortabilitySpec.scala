@@ -4,7 +4,6 @@ import graft.index.DerbyStatsIndex
 import graft.sources.{IndexedParquet, RowGroupSkipScan}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** Planner-side bloom probing — the portability fallback for catalogs that
   * cannot host JVM probe functions (PlannerBloom + DerbyStatsIndex's
@@ -34,7 +33,7 @@ class BloomPortabilitySpec extends SparkSpec {
   // same shuffled-key shape as BloomPruningSpec: 160 row groups whose
   // min/max all span ~the whole key domain, blooms on seq/key/skey
   private lazy val fx: Fx = {
-    val base = Files.createTempDirectory("graft-bloomport").toString
+    val base = tempDir("graft-bloomport")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 8000)

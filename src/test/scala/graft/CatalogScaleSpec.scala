@@ -6,7 +6,6 @@ import graft.sources.RowGroupSkipScan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.nio.file.Files
 
 /** Catalog SCALE demonstration (SURVEY §7.6's design note, measured):
   * the stats store must keep planning O(index-slice) when the index
@@ -52,7 +51,7 @@ class CatalogScaleSpec extends SparkSpec {
   // into the day) — zero nulls, so every group certifies for both the
   // interval walk and the constancy refinement.
   private lazy val index: DerbyStatsIndex = {
-    val db = Files.createTempDirectory("graft-catscale").toString + "/db"
+    val db = tempDir("graft-catscale") + "/db"
     val ix = new DerbyStatsIndex(db, schema)
     ix.initialize(schema)
     val rgs = RgsPerFile

@@ -18,7 +18,7 @@ class ClusterHealthSpec extends SparkSpec {
   //  - z: all NULL                                          -> None
   //  - s: strings                                           -> declines
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-chealth").toString
+    val base = tempDir("graft-chealth")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

@@ -59,7 +59,7 @@ class CmsShadowSpec extends SparkSpec {
   // fixture: 2 files × 2 groups of 100; k cycles 0..9 (so each value
   // appears 40 times overall, 20 per file), s has nulls, z all-null
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-cms").toString
+    val base = tempDir("graft-cms")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

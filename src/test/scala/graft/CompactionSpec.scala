@@ -34,7 +34,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("the rewrite is ONE Spark job regardless of bin count") {
-    val base = Files.createTempDirectory("graft-compact-1job").toString
+    val base = tempDir("graft-compact-1job")
     val dir = s"$base/data"
     writeTinyFiles(dir, base, 8)
     val before = spark.read.parquet(dir).orderBy("k").collect().toSeq
@@ -67,7 +67,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("a second pass never renames over survivors of the first") {
-    val base = Files.createTempDirectory("graft-compact-2pass").toString
+    val base = tempDir("graft-compact-2pass")
     val dir = s"$base/data"
     writeTinyFiles(dir, base, 4)
     assert(Compaction.compact(spark, dir,
@@ -89,7 +89,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compaction preserves data and the index stays correct after re-build") {
-    val base = Files.createTempDirectory("graft-compact").toString
+    val base = tempDir("graft-compact")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._
@@ -125,7 +125,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compactIndexed rebuilds the shadow ledgers over the new files") {
-    val base = Files.createTempDirectory("graft-compact-ledger").toString
+    val base = tempDir("graft-compact-ledger")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

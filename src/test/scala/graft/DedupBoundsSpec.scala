@@ -3,7 +3,6 @@ package graft
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** dd2's posting-list cap: a synthetic hot shingle (present in every
   * document) must never reach pair expansion, bounding every bucket task
@@ -161,7 +160,7 @@ class DedupBoundsSpec extends SparkSpec {
 
   test("dd2 end-to-end on a hot-shingle corpus still finds rare near-dups") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-dd2cap").toString
+    val base = tempDir("graft-dd2cap")
     val hot = "the quick brown fox jumps over the lazy dog again and again"
     // 100 docs share the hot sentence; docs 1 and 2 are near-identical
     // beyond it (long shared tail, one differing word — the tail must be

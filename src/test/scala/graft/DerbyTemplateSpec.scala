@@ -1,7 +1,6 @@
 package graft
 
 import graft.index._
-import java.nio.file.Files
 import org.apache.spark.sql.types._
 
 /** r17 template-copied fresh catalogs (DerbyStatsIndex.freshInitialized):
@@ -25,12 +24,12 @@ class DerbyTemplateSpec extends SparkSpec {
 
   test("template copy behaves like a direct create, and copies are independent") {
     val direct = new DerbyStatsIndex(
-      Files.createTempDirectory("graft-tmpl-direct").toString + "/db", schema)
+      tempDir("graft-tmpl-direct") + "/db", schema)
     direct.initialize(schema)
     val copy1 = DerbyStatsIndex.freshInitialized(
-      Files.createTempDirectory("graft-tmpl-c1").toString + "/db", schema)
+      tempDir("graft-tmpl-c1") + "/db", schema)
     val copy2 = DerbyStatsIndex.freshInitialized(
-      Files.createTempDirectory("graft-tmpl-c2").toString + "/db", schema)
+      tempDir("graft-tmpl-c2") + "/db", schema)
     try {
       // fresh copies are EMPTY (no data rides the template)
       assert(copy1.catalogCounts() === Some((0L, 0L)))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** COUNT(DISTINCT key) pushdown to the row-level posting catalog
   * (plans/StatsAggPushdown.distinctRewrite): the aggregate must be
@@ -19,7 +18,7 @@ class DistinctPushdownSpec extends SparkSpec {
   // k = i/2 (1000 distinct, null every 5th row), so the distinct count is
   // neither the row count nor the posting row count — a wrong source shows
   private lazy val fx: (DataFrame, String, String) = {
-    val base = Files.createTempDirectory("graft-distinct").toString
+    val base = tempDir("graft-distinct")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 2000)

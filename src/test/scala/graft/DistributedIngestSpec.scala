@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 /** Executor-side stats ingest: footer stats flow from tasks straight into
@@ -17,7 +16,7 @@ import scala.jdk.CollectionConverters._
 class DistributedIngestSpec extends SparkSpec {
 
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-ingest").toString
+    val base = tempDir("graft-ingest")
     val dir = s"$base/data"
     spark.range(0, 4000)
       .select(col("id").as("k"), (col("id") % 97).as("v"))

@@ -47,7 +47,7 @@ class HllShadowSpec extends SparkSpec {
   // overall (200 in file 0), s has 50 distincts with 1/4 nulls, z is
   // all-null
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-hll").toString
+    val base = tempDir("graft-hll")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

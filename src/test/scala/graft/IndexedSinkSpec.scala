@@ -21,7 +21,7 @@ class IndexedSinkSpec extends SparkSpec {
 
   test("streaming appends keep the catalog in sync; indexed reads follow") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sink").toString
+    val base = tempDir("graft-sink")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = StructType(Seq(StructField("k", LongType)))
@@ -72,7 +72,7 @@ class IndexedSinkSpec extends SparkSpec {
 
   test("a replayed batch replaces its previous attempt — exactly-once end to end") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sink-replay").toString
+    val base = tempDir("graft-sink-replay")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = StructType(Seq(StructField("k", LongType)))
@@ -98,7 +98,7 @@ class IndexedSinkSpec extends SparkSpec {
 
   test("readAsOf serves each version exactly, across replay and later batches") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sink-asof").toString
+    val base = tempDir("graft-sink-asof")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = StructType(Seq(StructField("k", LongType)))
@@ -143,7 +143,7 @@ class IndexedSinkSpec extends SparkSpec {
 
   test("shadow maintenance keeps SUM folds and freq certificates served as batches land") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sink-shadow").toString
+    val base = tempDir("graft-sink-shadow")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = StructType(Seq(StructField("k", LongType)))
@@ -174,7 +174,7 @@ class IndexedSinkSpec extends SparkSpec {
 
   test("a replay that produces FEWER parts removes the prior attempt's orphans") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sink-shrink").toString
+    val base = tempDir("graft-sink-shrink")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = StructType(Seq(StructField("k", LongType)))
@@ -201,7 +201,7 @@ class IndexedSinkSpec extends SparkSpec {
 
   test("rowLevel maintenance keeps routing PRECISE on the growing table") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sink-rowlevel").toString
+    val base = tempDir("graft-sink-rowlevel")
     val dataDir = s"$base/data"
     val rowIdx = s"$base/rowidx-k"
     new java.io.File(dataDir).mkdirs()
@@ -235,7 +235,7 @@ class IndexedSinkSpec extends SparkSpec {
 
   test("rowLevelRowNumbers maintenance keeps id->row fetches exact as batches land") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sink-rownum").toString
+    val base = tempDir("graft-sink-rownum")
     val dataDir = s"$base/data"
     val rowIdx = s"$base/rowidx-k"
     new java.io.File(dataDir).mkdirs()

@@ -19,7 +19,7 @@ class JoinPrunePropertySpec extends SparkSpec {
   // 3 files × 4 groups of 25 rows; values 0..249 with every 11th NULL;
   // group g covers [25g, 25g+24] of the non-null sequence (sorted write)
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-jpprop").toString
+    val base = tempDir("graft-jpprop")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

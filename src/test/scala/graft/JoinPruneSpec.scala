@@ -16,7 +16,7 @@ class JoinPruneSpec extends SparkSpec {
   // f1: values 0..99 (two 50-row groups), f2: 100..199 (two), f3: 50 rows
   // of NULL value (one group) — the group a semi-join may soundly SKIP.
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-joinprune").toString
+    val base = tempDir("graft-joinprune")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

@@ -24,7 +24,7 @@ class LifecycleSpec extends SparkSpec {
 
   test("stream → compact → re-ingest → prune keeps the catalog exact end to end") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-lifecycle").toString
+    val base = tempDir("graft-lifecycle")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = StructType(Seq(StructField("k", LongType)))
@@ -78,7 +78,7 @@ class LifecycleSpec extends SparkSpec {
 
   test("compaction + sink maintain blooms and postings — no degrade, no stale routing") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-lifecycle2").toString
+    val base = tempDir("graft-lifecycle2")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val schema = StructType(Seq(StructField("k", LongType)))
@@ -162,7 +162,7 @@ class LifecycleSpec extends SparkSpec {
 
   test("merge and delete compose with the maintained catalog — routing stays precise") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-lifecycle3").toString
+    val base = tempDir("graft-lifecycle3")
     val dataDir = s"$base/data"
     new java.io.File(dataDir).mkdirs()
     val dataSchema = StructType(Seq(

@@ -31,7 +31,7 @@ class MergeUpsertSpec extends SparkSpec {
       .filter(_.endsWith(".parquet")).toSet
 
   test("only files containing matched keys are rewritten; content is the declarative merge") {
-    val base = Files.createTempDirectory("graft-merge").toString
+    val base = tempDir("graft-merge")
     val dir = mkTable(base)
     val (index, schema) = IndexedParquet.buildIndex(spark, dir, Seq("k"), s"$base/db")
     try {
@@ -72,7 +72,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("insert-only merge rewrites nothing") {
-    val base = Files.createTempDirectory("graft-merge-ins").toString
+    val base = tempDir("graft-merge-ins")
     val dir = mkTable(base)
     val (index, schema) = IndexedParquet.buildIndex(spark, dir, Seq("k"), s"$base/db")
     try {
@@ -88,7 +88,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("stale posting coverage forces the scan fallback — merge stays correct") {
-    val base = Files.createTempDirectory("graft-merge-stale").toString
+    val base = tempDir("graft-merge-stale")
     val dir = mkTable(base)
     val (index, schema) = IndexedParquet.buildIndex(spark, dir, Seq("k"), s"$base/db")
     try {
@@ -112,7 +112,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("delete-by-key rewrites only matched files; fully-deleted files disappear") {
-    val base = Files.createTempDirectory("graft-merge-del").toString
+    val base = tempDir("graft-merge-del")
     val dir = mkTable(base)
     val (index, schema) = IndexedParquet.buildIndex(spark, dir, Seq("k"), s"$base/db")
     try {
@@ -133,7 +133,7 @@ class MergeUpsertSpec extends SparkSpec {
   }
 
   test("sequential merges compose (numbering never collides)") {
-    val base = Files.createTempDirectory("graft-merge-seq").toString
+    val base = tempDir("graft-merge-seq")
     val dir = mkTable(base)
     val r1 = MergeUpsert.merge(spark, dir,
       Seq((1L, "a1", 0L)).toDF("k", "s", "v"), "k")

@@ -4,7 +4,6 @@ import graft.sources.IndexedParquet
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** Planner-side constancy pruning (prune/PartPrune.scala, r13): row-group
   * refinement for ROW-selecting predicates the stats-space interval
@@ -88,7 +87,7 @@ class PartPruneSpec extends SparkSpec {
   // partial-null and IS NULL hazards the refinement must survive
   private lazy val nfx: (DataFrame,
       graft.sources.IndexedParquetFileIndex, DataFrame) = {
-    val base = Files.createTempDirectory("graft-partprune").toString
+    val base = tempDir("graft-partprune")
     val dir = s"$base/data"
     import spark.implicits._
     graft.operators.Indexed.withMicrosTimestamps(spark) {

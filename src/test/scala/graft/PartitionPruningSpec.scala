@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** Hive-partitioned layout: the third metadata pruning lever (alongside
   * the external stats index and bucketing) — a partition-column filter
@@ -11,7 +10,7 @@ import java.nio.file.Files
 class PartitionPruningSpec extends SparkSpec {
 
   test("partition-column filter prunes directories at plan time") {
-    val base = Files.createTempDirectory("graft-part").toString
+    val base = tempDir("graft-part")
     val events = Tables.load(spark, sf("sf0.001"), "events")
     events.write.partitionBy("event_type").parquet(s"$base/events")
     val types = events.select("event_type").distinct()

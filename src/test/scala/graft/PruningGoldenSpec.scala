@@ -27,7 +27,7 @@ class PruningGoldenSpec extends SparkSpec {
   }
 
   private lazy val fixture: (DataFrame, graft.sources.IndexedParquetFileIndex) = {
-    val base = Files.createTempDirectory("graft-golden").toString
+    val base = tempDir("graft-golden")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     val ranges = Seq("file1.parquet" -> (0 until 100),

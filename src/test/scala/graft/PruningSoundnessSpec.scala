@@ -19,7 +19,7 @@ class PruningSoundnessSpec extends SparkSpec {
   private val rng = new Random(4242)
 
   private lazy val env: (String, DataFrame, graft.sources.IndexedParquetFileIndex) = {
-    val base = Files.createTempDirectory("graft-sound").toString
+    val base = tempDir("graft-sound")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._
@@ -163,7 +163,7 @@ class PruningSoundnessSpec extends SparkSpec {
     * each — the fixture for `CAST(ts AS DATE)` / `date_trunc` /
     * `unix_timestamp` predicate pruning through the image rewrite. */
   private lazy val timeEnv: (String, DataFrame, graft.sources.IndexedParquetFileIndex) = {
-    val base = Files.createTempDirectory("graft-sound-time").toString
+    val base = tempDir("graft-sound-time")
     val dir = s"$base/data"
     import spark.implicits._
     graft.operators.Indexed.withMicrosTimestamps(spark) {
@@ -357,7 +357,7 @@ class PruningSoundnessSpec extends SparkSpec {
   }
 
   test("unsupported-type column is silently skipped; predicates on it scan all") {
-    val base = Files.createTempDirectory("graft-unsup").toString
+    val base = tempDir("graft-unsup")
     val dir = s"$base/data"
     import spark.implicits._
     Seq((1, Seq(1.0f, 2.0f)), (2, Seq(3.0f, 4.0f)))

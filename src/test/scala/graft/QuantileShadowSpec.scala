@@ -57,7 +57,7 @@ class QuantileShadowSpec extends SparkSpec {
   // fixture: 2 files x 2 row groups of 100 rows; v uniform-ish doubles
   // with nulls and NaNs sprinkled, z all-null
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-qsk").toString
+    val base = tempDir("graft-qsk")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

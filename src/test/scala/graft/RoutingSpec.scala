@@ -32,7 +32,7 @@ class RoutingSpec extends SparkSpec {
   // (min/max prunes nothing), bloom on both keys, row-level postings on
   // `key` only — so `key` routes and `skey` exercises the bloom fallback
   private lazy val fx: Fx = {
-    val base = Files.createTempDirectory("graft-routing").toString
+    val base = tempDir("graft-routing")
     val dir = s"$base/data"
     import spark.implicits._
     (0 until 8000)
@@ -200,7 +200,7 @@ class RoutingSpec extends SparkSpec {
 
   test("a STALE posting index (file set grew) degrades instead of losing rows") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-routing-stale").toString
+    val base = tempDir("graft-routing-stale")
     val dir = s"$base/data"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     def addFile(name: String, lo: Int, hi: Int): Unit = {
@@ -295,7 +295,7 @@ class RoutingSpec extends SparkSpec {
     def rg(i: Int, cs: ColumnStats) =
       RowGroupStats(i, 10L, i * 100L, 100L, Map("k" -> cs))
     val db = new DerbyStatsIndex(
-      Files.createTempDirectory("graft-minval").toString + "/db", schema)
+      tempDir("graft-minval") + "/db", schema)
     db.initialize(schema)
     db.addFile(FileStats("f1.parquet", 1000L, 20L, Vector(
       rg(0, ColumnStats(Some(0L), Some(5L), Some(9L))),
@@ -314,7 +314,7 @@ class RoutingSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("s", StringType), StructField("b", BinaryType)))
     val db = new DerbyStatsIndex(
-      Files.createTempDirectory("graft-minval2").toString + "/db", schema)
+      tempDir("graft-minval2") + "/db", schema)
     db.initialize(schema)
     val longStr = "x" * (DerbyStatsIndex.MaxStringLen + 10)
     db.addFile(FileStats("f1.parquet", 1000L, 10L, Vector(

@@ -14,7 +14,7 @@ class RowGroupSkipSpec extends SparkSpec {
 
   // 2 files x 100 rows, 50-row row groups => 4 row groups total
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-rgskip").toString
+    val base = tempDir("graft-rgskip")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._
@@ -66,7 +66,7 @@ class RowGroupSkipSpec extends SparkSpec {
   }
 
   test("pushed filters skip pages INSIDE a selected row group (column index)") {
-    val base = Files.createTempDirectory("graft-pageskip").toString
+    val base = tempDir("graft-pageskip")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

@@ -33,7 +33,7 @@ class RowLevelIndexSpec extends SparkSpec {
   // file i holds keys { i, 100+i, 200+i } spread over 2 row groups,
   // plus range-spanning filler keys
   private lazy val env = {
-    val base = Files.createTempDirectory("graft-rowlevel").toString
+    val base = tempDir("graft-rowlevel")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

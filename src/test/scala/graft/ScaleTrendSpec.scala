@@ -78,8 +78,7 @@ class ScaleTrendSpec extends SparkSpec {
     def timedBuild(sfd: String): Double = bestOf(2) {
       val (plans, schema, dataDir) =
         graft.operators.Indexed.indexHandles(spark, sfd)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-sts-idx").toString + "/rows"
+      val out = tempDir("graft-sts-idx") + "/rows"
       RowLevelIndex.build(spark, dataDir, plans, schema, "l_orderkey", out,
         withRowNumbers = true)
     }

@@ -17,7 +17,7 @@ import java.nio.file.{Files, Paths}
 class SchemaEvolutionSpec extends SparkSpec {
 
   private lazy val fx = {
-    val base = Files.createTempDirectory("graft-evolve").toString
+    val base = tempDir("graft-evolve")
     val dir = s"$base/data"
     Files.createDirectories(Paths.get(dir))
     import spark.implicits._

@@ -4,7 +4,6 @@ import graft.streaming.DedupMaintenance
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
-import java.nio.file.Files
 
 /** Incremental dedup-artifact maintenance in the streaming sink (st6):
   * per-batch band append + star-merged component labels.
@@ -39,7 +38,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("star-merged labels equal a full recompute; replay is idempotent; bands append-only") {
     val dir = sf("sf0.001")
-    val art = Files.createTempDirectory("graft-dedup-maint").toString
+    val art = tempDir("graft-dedup-maint")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     val batches = (0 until 3).map(i =>
       docs.filter(col("doc_id") % 3 === i))
@@ -102,7 +101,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("the band store read is bucket-pruned to the batch's partitions") {
     val dir = sf("sf0.001")
-    val art = Files.createTempDirectory("graft-bucket-prune").toString
+    val art = tempDir("graft-bucket-prune")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     // a sizable store (touches all buckets)…
     DedupMaintenance.commitBatch(docs.filter(col("doc_id") < 400), 0L, art, hconf)
@@ -139,7 +138,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("pair-stats maintenance equals the full inverted-index pass; replay idempotent") {
     val dir = sf("sf0.001")
-    val art = Files.createTempDirectory("graft-pairstats").toString
+    val art = tempDir("graft-pairstats")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     val batches = (0 until 3).map(i => docs.filter(col("doc_id") % 3 === i))
     batches.zipWithIndex.foreach { case (b, i) =>
@@ -161,7 +160,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("pair-stats compaction folds old deltas, preserves the view, and stays replay-safe") {
     val dir = sf("sf0.001")
-    val art = Files.createTempDirectory("graft-pairstats-compact").toString
+    val art = tempDir("graft-pairstats-compact")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     val batches = (0 until 3).map(i => docs.filter(col("doc_id") % 3 === i))
     batches.zipWithIndex.foreach { case (b, i) =>
@@ -194,7 +193,7 @@ class StreamingDedupSpec extends SparkSpec {
     // and 70 after batch 1 (dead — the full semantics drop the whole
     // bucket, so the maintained view must retract to empty)
     import spark.implicits._
-    val art = Files.createTempDirectory("graft-pairstats-cap").toString
+    val art = tempDir("graft-pairstats-cap")
     def mk(ids: Seq[Long]) =
       ids.map(i => (i, s"alpha beta gamma u$i v$i")).toDF("doc_id", "text")
     DedupMaintenance.commitPairStats(mk(0L until 40L), 0L, art, hconf)
@@ -209,7 +208,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("band-store compaction folds into a bucketed base; later merges stay exact") {
     val dir = sf("sf0.001")
-    val art = Files.createTempDirectory("graft-band-compact").toString
+    val art = tempDir("graft-band-compact")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     val batches = (0 until 4).map(i => docs.filter(col("doc_id") % 4 === i))
     (0 until 3).foreach(i =>
@@ -237,7 +236,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("an EMPTY micro-batch commits harmlessly (no-parquet dirs stay invisible)") {
     val dir = sf("sf0.001")
-    val art = Files.createTempDirectory("graft-dedup-empty").toString
+    val art = tempDir("graft-dedup-empty")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     DedupMaintenance.commitBatch(docs.filter(col("doc_id") % 2 === 0), 0L, art, hconf)
     // the empty batch: writes a b1 dir holding only _SUCCESS
@@ -290,7 +289,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("the sink's scheduled compaction bounds a 10-batch stream to base + newest per store") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-sched-compact").toString
+    val base = tempDir("graft-sched-compact")
     val dir = sf("sf0.001")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     val schema = org.apache.spark.sql.types.StructType(
@@ -334,7 +333,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("version retention keeps only the live label version") {
     val dir = sf("sf0.001")
-    val art = Files.createTempDirectory("graft-dedup-retain").toString
+    val art = tempDir("graft-dedup-retain")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     DedupMaintenance.commitBatch(docs.filter(col("doc_id") % 2 === 0), 0L, art, hconf)
     DedupMaintenance.commitBatch(docs.filter(col("doc_id") % 2 === 1), 1L, art, hconf)

@@ -3,7 +3,6 @@ package graft
 import graft.streaming.SearchMaintenance
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** Continuous search-index maintenance (st8): append-only postings +
   * doc counts per micro-batch, ts3's ranked retrieval served from the
@@ -23,7 +22,7 @@ class StreamingSearchSpec extends SparkSpec {
 
   test("maintained index equals the full pass; replay idempotent; term filter pushed") {
     val dir = sf("sf0.001")
-    val art = Files.createTempDirectory("graft-search-maint").toString
+    val art = tempDir("graft-search-maint")
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     val batches = (0 until 3).map(i => docs.filter(col("doc_id") % 3 === i))
     batches.zipWithIndex.foreach { case (b, i) =>

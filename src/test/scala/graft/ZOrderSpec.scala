@@ -3,7 +3,6 @@ package graft
 import graft.sources.{IndexedParquet, ZOrderLayout}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** Z-order clustering (sources/ZOrderLayout): Morton-code correctness of
   * the pure-expression bit interleave, and the layout's point — for a 2-d
@@ -55,7 +54,7 @@ class ZOrderSpec extends SparkSpec {
   /** Same 8000-row grid written two ways: x-range-clustered vs z-ordered,
     * both with 100-row groups (80 row groups each), both stats-indexed. */
   private lazy val fx = {
-    val base = Files.createTempDirectory("graft-zorder").toString
+    val base = tempDir("graft-zorder")
     import spark.implicits._
     val grid = (0 until 8000).map { i =>
       (i.toLong % 100L, i.toLong / 100L, i.toLong)
@@ -179,7 +178,7 @@ class ZOrderSpec extends SparkSpec {
     * (x,y,w): for a 3-d box only the 3-d layout's row groups are compact
     * in w, so it prunes strictly more. */
   private lazy val fx3 = {
-    val base = Files.createTempDirectory("graft-zorder3").toString
+    val base = tempDir("graft-zorder3")
     import spark.implicits._
     val grid = (0 until 8000).map { i =>
       (i.toLong % 20L, (i.toLong / 20L) % 20L, i.toLong / 400L, i.toLong)
