@@ -7,7 +7,8 @@
 Runs `python3 perfbench/run.py --workload W --seed S --seconds N --trace 0`
 in each checkout, one pair per seed, alternating which side runs first
 (pair 0 runs the parent first). N is `run_seconds` of the change's
-BENCHMARK.json, and every workload it declares is run. Both sides of a
+BENCHMARK.json, and every workload it declares is run unless
+`--workloads` names a comma-separated subset. Both sides of a
 pair use the same seed. For every workload and every end-to-end metric
 that BENCHMARK.json declares, it prints:
 
@@ -93,12 +94,20 @@ def main():
     ap.add_argument("--change", required=True, help="checkout of the change")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=1001, help="seed of pair 0; pair i uses seed0 + i")
+    ap.add_argument("--workloads", help="comma-separated workloads to run (default: every one in BENCHMARK.json)")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         spec = json.load(f)
     seconds = spec["run_seconds"]
     workloads = [w["name"] for w in spec["workloads"]]
+    if a.workloads:
+        chosen = a.workloads.split(",")
+        unknown = [w for w in chosen if w not in workloads]
+        if unknown:
+            ap.error("unknown workload(s) %s; BENCHMARK.json declares %s"
+                     % (",".join(unknown), ",".join(workloads)))
+        workloads = chosen
     metrics = spec["end_to_end"]
 
     runs = {w: {"parent": [], "change": []} for w in workloads}

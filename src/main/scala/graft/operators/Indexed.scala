@@ -1894,9 +1894,10 @@ object Indexed {
     // explicit API call. The injected rule recognizes the equi-join
     // against the indexed relation, checks the dim side is plan-time-
     // small by the optimizer's own size estimate (the DPP posture),
-    // materializes its distinct keys, and substitutes the byte-range
-    // RowGroupScan leaf for the fact relation; the Join stays above and
-    // re-applies the real condition (Inexact). This is the one-scan-seam
+    // collects its rows once, prunes by their keys, and substitutes the
+    // byte-range RowGroupScan leaf for the fact relation; this one-key
+    // semi-join then becomes an IN filter over that leaf, re-applying the
+    // real condition (Inexact). This is the one-scan-seam
     // story of idx13's routing, extended to joins: the USER writes
     // declarative Spark, the catalog prunes. JoinPruneRuleSpec pins the
     // route tag, the kill switch, and outer-join/huge-dim declines.

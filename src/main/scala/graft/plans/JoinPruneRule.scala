@@ -2,21 +2,22 @@ package graft.plans
 
 import graft.index.FileScanPlan
 import org.apache.spark.sql.{GraftSqlShim, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, InSet}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Sample, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{Distinct, Filter, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, Project, Sample, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
 
 /** AUTOMATIC catalog semi-join pruning (r15) — [[graft.prune.JoinPrune]]
   * at the one-scan seam: a plain `fact.join(dim, fact.k === dim.k)`
   * against the index-backed relation gets its fact row groups pruned by
-  * the dim side's materialized keys, with no explicit API call. This is
-  * the protocol of Spark's own dynamic partition pruning — materialize
-  * the small side's join keys, prune the big side's scan — applied at
-  * ROW-GROUP granularity through the external catalog instead of at
-  * partition directories.
+  * the dim side's keys, with no explicit API call. This is the protocol
+  * of Spark's own dynamic partition pruning — materialize the small
+  * side, prune the big side's scan — applied at ROW-GROUP granularity
+  * through the external catalog instead of at partition directories.
   *
   * When it fires (all must hold, else the declarative join stands):
   *  - an Inner equi-join with the indexed relation on EITHER side, or a
@@ -25,55 +26,62 @@ import org.apache.spark.sql.types._
   *    deterministic Filters. Outer joins never fire (an unmatched fact
   *    row must survive them), and EqualNullSafe never fires: NULL <=>
   *    NULL matches, so the all-NULL-group skip would be unsound;
-  *  - the ENTIRE dim subtree is deterministic (r16): the pruning key set
-  *    is collected at plan time while the retained Join re-executes the
-  *    dim at runtime — if any dim expression is non-deterministic, or a
-  *    Sample / limit-without-sort can admit different rows across
-  *    executions, the runtime dim could hold keys the plan-time collect
-  *    never saw and pruned-away fact groups would silently lose join
-  *    rows. Spark's own DPP avoids this by reusing one materialized
-  *    subquery; here the guard declines instead;
   *  - at least one equi-key pair is (indexed fact column of a
   *    key-prunable type, dim-side attribute). ALL such pairs prune
   *    (r16): per-key decisions are intersected file-by-file, row-group-
   *    by-row-group — sound because a joinable fact row matches EVERY
   *    equi-key, so its group survives every per-key superset — and the
   *    intersection is by construction never larger than any single
-  *    key's decision (the r15 two-key gap);
+  *    key's decision;
   *  - the dim side is plan-time-small by the optimizer's own size
   *    estimate (≤ spark.sql.autoBroadcastJoinThreshold — the same bound
   *    DPP's broadcast reuse applies) and not streaming;
-  *  - materializing its distinct key TUPLES stays within
-  *    [[graft.prune.JoinPrune.DefaultMaxKeys]] (the collect is
-  *    limit-bounded, so an estimate that lied costs maxKeys+1 rows, not
-  *    an unbounded driver set). An over-limit tuple set falls back to
-  *    the head key alone before declining (a single key may still be
-  *    under the bound);
   *  - the pruning decision narrows the scan, and every kept group has a
   *    byte range.
+  *
+  * The dim runs ONCE. One bounded collect reads its rows, all output
+  * columns, at most [[graft.prune.JoinPrune.DefaultMaxKeys]] + 1 of
+  * them (a dim that is already a `LocalRelation` is read in place, with
+  * no Spark job). Each equi-pair's key set is projected from those rows
+  * on the driver: distinct, nulls dropped (a NULL key equals nothing).
+  * Then one of two paths serves, recorded in the route:
+  *  - `dim:rows(N)` — the rows fit the bound: the join's dim side
+  *    becomes `LocalRelation(dim.output, rows)`, so the rows that pruned
+  *    the fact side are exactly the rows that join (multiplicity kept).
+  *    The dim need not be deterministic: a `rand` filter, a Sample or an
+  *    unsorted limit is read once and both prunes and joins. A LeftSemi
+  *    with one equi-pair and no other condition needs no join at all:
+  *    it becomes `Filter(InSet(factKey, keys))` over the pruned scan,
+  *    and the same predicate reaches the reader for page skipping
+  *    (`semi:in`, no broadcast job);
+  *  - `dim:keys(N)` — more rows than the bound: one more collect reads
+  *    the distinct key TUPLES (limit-bounded; over the bound, the head
+  *    key alone before declining) and the original Join re-runs the dim
+  *    at run time. Both runs must then see the same rows, so this path
+  *    alone requires the ENTIRE dim subtree deterministic (no
+  *    non-deterministic expression, Sample, or limit without a Sort
+  *    below it); otherwise it declines.
   *
   * Exactness is untouched: only the fact LEAF is substituted, by
   * [[IndexedRelation.substitute]] — the one swap [[PartPruneScan]] and
   * [[TopKPushdown]] share (exprIds preserved, byte ranges checked,
   * decision recorded); this rule owns its strip, its decision and its
-  * consumed columns. The Join itself stays and re-applies the real
-  * condition, so false positives cost IO only. The dim side is executed
-  * ONCE at planning per execution (a recursive optimizer entry — guarded
-  * re-entrant, and the substituted leaf cannot match again, so the
-  * fixed-point batch converges).
+  * consumed columns. The Join (or the semi-join's Filter) re-applies the
+  * real condition, so false positives cost IO only. A decline leaves the
+  * plan untouched. The collect is a recursive optimizer entry (guarded
+  * re-entrant), and the substituted leaf cannot match again, so the
+  * fixed-point batch converges.
   *
-  * Cost honesty: the dim materialization is a plan-time data job — the
-  * price DPP pays too (its subquery broadcast runs before the main
-  * stages). The size gate keeps it to genuinely-small sides; every
-  * pure-plan decline check runs BEFORE the collect; and a shape that
-  * collected but then declined is remembered (r16) in a bounded
-  * DECLINE-ONLY cache keyed by (canonicalized dim, relation root,
-  * catalog cardinalities), so repeated optimizations of the same
-  * never-benefiting query — explain() then execute, a re-run loop — pay
-  * the dim job once, not every time. Only declines are cached (a stale
-  * decline is a missed optimization, never a wrong plan; catalog growth
-  * changes the key and retries). A query that cannot afford the first
-  * probe sets the kill switch `spark.graft.joinPrune=false`.
+  * Cost: a non-local dim costs one plan-time data job — the price DPP
+  * pays too, here paid instead of the join's own dim run on the
+  * `dim:rows` path. Every pure-plan decline check runs BEFORE the
+  * collect; and a shape that collected but then declined is remembered
+  * (r16) in a bounded DECLINE-ONLY cache keyed by (canonicalized dim,
+  * relation root, catalog cardinalities), so repeated optimizations of
+  * the same never-benefiting query pay the collect once. Only declines
+  * are cached (a stale decline is a missed optimization, never a wrong
+  * plan; catalog growth changes the key and retries). The kill switch is
+  * `spark.graft.joinPrune=false`.
   */
 final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -96,11 +104,11 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     attempt(j, factLeft = true).orElse(
       if (j.joinType == Inner) attempt(j, factLeft = false) else None)
 
-  /** The plan-time collect and the runtime Join must see the SAME dim
-    * rows: every expression deterministic, no Sample, no limit whose
-    * row choice isn't pinned by a Sort below it (through Projects /
-    * the local-limit pair). Ties under a non-total sort order remain —
-    * the same residual Spark's sort-limit reuse accepts. */
+  /** The keys-only path's plan-time collect and the runtime Join must
+    * see the SAME dim rows: every expression deterministic, no Sample,
+    * no limit whose row choice isn't pinned by a Sort below it (through
+    * Projects / the local-limit pair). Ties under a non-total sort order
+    * remain — the same residual Spark's sort-limit reuse accepts. */
   private def deterministicSubtree(p: LogicalPlan): Boolean = {
     def sortBelow(c: LogicalPlan): Boolean = c match {
       case _: Sort => true
@@ -125,6 +133,19 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     case _ => false
   }
 
+  /** `plan`'s rows, at most `n` of them: read in place from a
+    * `LocalRelation`, else one bounded collect (a guarded recursive
+    * optimizer entry). */
+  private def collectRows(plan: LogicalPlan, n: Int): Seq[InternalRow] = plan match {
+    case l: LocalRelation => l.data.take(n)
+    case _ =>
+      try {
+        JoinPruneRule.reentrant.set(true)
+        val qe = GraftSqlShim.ofRows(session, plan).limit(n).queryExecution
+        SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect().toSeq)
+      } finally JoinPruneRule.reentrant.set(false)
+  }
+
   private def attempt(j: Join, factLeft: Boolean): Option[LogicalPlan] = {
     val factPlan = if (factLeft) j.left else j.right
     val dimPlan = if (factLeft) j.right else j.left
@@ -136,8 +157,7 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     def strip(p: LogicalPlan): Option[IndexedRelation] = p match {
       case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
         strip(c)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.condition.deterministic => strip(f.child)
+      case f: Filter if f.condition.deterministic => strip(f.child)
       case other => IndexedRelation.of(other)
     }
     val ir = strip(factPlan).getOrElse(return None)
@@ -145,8 +165,7 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     // against the substituted scan: the side's output plus every
     // Filter/Project reference below it
     val keptCols = (factPlan.output.map(_.name) ++ factPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.references.map(_.name).toSeq
+      case f: Filter => f.condition.references.map(_.name).toSeq
       case p: Project => p.projectList.flatMap(_.references.map(_.name))
     }.flatten).toSet
     val idx = ir.index
@@ -156,10 +175,9 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     // attribute is indexed and key-prunable — EqualTo only (the
     // extractor models <=> as Coalesce-wrapped keys, which never look
     // like bare attributes here). ALL qualifying pairs participate; a
-    // fact column joined twice contributes once (its dim keys union via
-    // the tuple projection anyway — keep the first pairing).
-    val (leftKeys, rightKeys) = j match {
-      case ExtractEquiJoinKeys(_, lk, rk, _, _, _, _, _) => (lk, rk)
+    // fact column joined twice contributes once (keep the first pairing).
+    val (leftKeys, rightKeys, otherCondition) = j match {
+      case ExtractEquiJoinKeys(_, lk, rk, oc, _, _, _, _) => (lk, rk, oc)
       case _ => return None
     }
     // factLeft: fact attrs are leftKeys; mirrored Inner: rightKeys
@@ -173,11 +191,10 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     }.distinctBy(_._1.name)
     if (pairs.isEmpty) return None
 
-    // PRE-COLLECT gates, all pure plan/metadata work (no data job):
-    // determinism of the dim subtree, the DPP-posture size bound, and
-    // the decline cache. catalogCounts is one O(1) store round trip,
-    // shared by the cache key and the observability totals below.
-    if (!deterministicSubtree(dimPlan)) return None
+    // PRE-COLLECT gates, all pure plan/metadata work (no data job): the
+    // DPP-posture size bound and the decline cache. catalogCounts is one
+    // O(1) store round trip, shared by the cache key and the
+    // observability totals below.
     val threshold = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.autoBroadcastJoinThreshold
     if (threshold <= 0 || dimPlan.stats.sizeInBytes > threshold) return None
@@ -190,37 +207,50 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
       JoinPruneRule.remember(cacheKey); None
     }
 
-    // materialize the dim keys: ONE data job collects the distinct key
-    // TUPLES (bounded), from which every column's key set projects
-    // driver-side — a recursive optimizer entry, guarded. NULL handling:
-    // a null in one column doesn't void the tuple's other columns; each
-    // column's set drops its own nulls (a NULL key equals nothing).
+    // the dim's rows, once, bounded: within the bound they both prune
+    // and join (dim:rows); past it only distinct key tuples are kept and
+    // the Join re-runs the dim (dim:keys)
     val maxKeys = graft.prune.JoinPrune.DefaultMaxKeys
-    def collectDistinct(attrs: Seq[AttributeReference]): Array[org.apache.spark.sql.Row] =
-      try {
-        JoinPruneRule.reentrant.set(true)
-        GraftSqlShim.ofRows(session, Project(attrs, dimPlan))
-          .distinct()
-          .limit(maxKeys + 1)
-          .collect()
-      } finally JoinPruneRule.reentrant.set(false)
-    var tuples = collectDistinct(pairs.map(_._2))
+    val rows = collectRows(dimPlan, maxKeys + 1)
+    val reuse = rows.length <= maxKeys
     var livePairs = pairs
-    if (tuples.length > maxKeys && pairs.size > 1) {
-      // tuple cardinality over the bound: the head key alone may still
-      // fit (never worse than r15's single-key behavior)
-      livePairs = pairs.take(1)
-      tuples = collectDistinct(livePairs.map(_._2))
+    // per live pair: its distinct non-null keys, in Catalyst's internal
+    // form (the semi-join's InSet; converted for the catalog probe)
+    def keySet(src: Seq[InternalRow], i: Int, dt: DataType): Seq[Any] =
+      src.iterator.map(_.get(i, dt)).filter(_ != null).toSeq.distinct
+    val (keySets, dimTag) = if (reuse) {
+      val sets = pairs.map { case (_, da) =>
+        keySet(rows, dimPlan.output.indexWhere(_.exprId == da.exprId), da.dataType)
+      }
+      (sets, s"dim:rows(${rows.length})")
+    } else {
+      if (!deterministicSubtree(dimPlan)) return decline()
+      // ONE data job collects the distinct key TUPLES (bounded), from
+      // which every column's key set projects driver-side; a null in one
+      // column doesn't void the tuple's other columns
+      def collectDistinct(attrs: Seq[AttributeReference]): Seq[InternalRow] =
+        collectRows(Distinct(Project(attrs, dimPlan)), maxKeys + 1)
+      var tuples = collectDistinct(pairs.map(_._2))
+      if (tuples.length > maxKeys && pairs.size > 1) {
+        // tuple cardinality over the bound: the head key alone may still
+        // fit (never worse than r15's single-key behavior)
+        livePairs = pairs.take(1)
+        tuples = collectDistinct(livePairs.map(_._2))
+      }
+      if (tuples.length > maxKeys) return decline()
+      val sets = livePairs.zipWithIndex.map { case ((_, da), i) =>
+        keySet(tuples, i, da.dataType)
+      }
+      (sets, s"dim:keys(${tuples.length})")
     }
-    if (tuples.length > maxKeys) return decline()
 
     // per-key decisions, intersected — each is a superset of the groups
     // holding its key, so the intersection is a superset of the groups
     // holding a FULLY matching row, and ⊆ every single-key decision
-    val decs = livePairs.zipWithIndex.map { case ((fa, _), i) =>
-      val keys = tuples.iterator.map(_.get(i)).filter(_ != null).toSeq.distinct
+    val decs = livePairs.zip(keySets).map { case ((fa, da), keys) =>
+      val toScala = CatalystTypeConverters.createToScalaConverter(da.dataType)
       graft.prune.JoinPrune.prunePlans(
-        session, idx, ir.fs.dataSchema, fa.name, keys, maxKeys)
+        session, idx, ir.fs.dataSchema, fa.name, keys.map(toScala), maxKeys)
     }
     if (decs.exists(_.route.startsWith("degrade"))) return decline()
     // file-by-file, row-group-by-row-group: still sound (see class
@@ -229,13 +259,27 @@ final case class JoinPruneRule(session: SparkSession) extends Rule[LogicalPlan] 
     val scanned = plans.map(_.scanRowGroups.size).sum
     val totalGroups = counts.map(_._2.toInt).getOrElse(-1)
     if (totalGroups < 0 || scanned >= totalGroups) return decline()
+
+    // a LeftSemi whose one condition is one live key pair is exactly
+    // `factKey IN keys`: no join, no broadcast
+    val semiIn = livePairs match {
+      case Seq((fa, da)) if reuse && j.joinType == LeftSemi && leftKeys.size == 1 &&
+          otherCondition.isEmpty && fa.dataType == da.dataType =>
+        Some(InSet(fa, keySets.head.toSet))
+      case _ => None
+    }
     val route = decs.zip(livePairs).map { case (d, (fa, _)) =>
       s"join-prune:${d.route}(${fa.name})"
-    } :+ s"keys:${decs.map(_.keyCount).max}"
+    } ++ Seq(s"keys:${decs.map(_.keyCount).max}", dimTag) ++ semiIn.map(_ => "semi:in")
     // a pre-range catalog (a kept group without a byte range) declines
-    ir.substitute(factPlan, plans, keptCols, Nil, counts, route) match {
-      case Some(newFact) =>
-        Some(if (factLeft) j.copy(left = newFact) else j.copy(right = newFact))
+    ir.substitute(factPlan, plans, keptCols, semiIn.toSeq, counts, route) match {
+      case Some(newFact) => Some(semiIn match {
+        case Some(in) => Filter(in, newFact)
+        case None =>
+          val dim = if (reuse) LocalRelation(dimPlan.output, rows) else dimPlan
+          if (factLeft) j.copy(left = newFact, right = dim)
+          else j.copy(left = dim, right = newFact)
+      })
       case None => decline()
     }
   }
