@@ -362,6 +362,20 @@ object KeyImage {
   def geoZoneOf(tzOpt: Option[String]): Option[java.time.ZoneId] =
     tzOpt.flatMap(geoZoneOfName)
 
+  /** The zone's offset in seconds over the instant range [mn, mx] (catalog
+    * micros) when no transition falls in `(mn, mx]`, else None (a
+    * straddler). `nextTransition(mn)` is strictly after `mn`, and
+    * `getOffset` at an exact transition instant is the post-transition
+    * offset, so a range starting ON a transition takes the offset in
+    * force there. */
+  def pieceOffset(zone: java.time.ZoneId, mn: Long, mx: Long): Option[Int] = {
+    val ia = DateTimeUtils.microsToInstant(mn)
+    val rules = zone.getRules
+    val tr = rules.nextTransition(ia)
+    if (tr != null && !tr.getInstant.isAfter(DateTimeUtils.microsToInstant(mx))) None
+    else Some(rules.getOffset(ia).getTotalSeconds)
+  }
+
   /** DST-PIECEWISE constancy recognizer (r14, SURVEY §8.8 limit (b)):
     * calendar keys read through a GEOGRAPHIC zone — `CAST(ts AS DATE)`
     * under an America/New_York session, `month(from_utc_timestamp(ts,
@@ -882,12 +896,14 @@ final case class ChainedImage(inner: KeyImage, outer: KeyImage)
   * that every non-null row of the group shares ONE value of the
   * expression, and returns that value (for the integral calendar
   * results the catalog and Catalyst-internal encodings coincide).
-  * None = straddler — the caller fails closed; call sites also wrap the
-  * call in Try so a throwing certificate fails closed too. Used by the
-  * grouped fold (GROUP BY keys), the wholesale filter engine
-  * (idx44/idx47 conjuncts), and the DISTINCT-from-constancy path —
-  * never by the image-of-extreme or top-k certificates, which need
-  * monotonicity a [[DeterminedConstKey]] does not have. */
+  * None = straddler — the caller fails closed. Called only through
+  * `graft.prune.PartPrune.constancy`, which also fails closed on a
+  * throwing certificate; its users are the constancy engine's
+  * `decide` (the scan-path refinement and the idx44/idx47 filtered
+  * folds), the grouped fold (GROUP BY keys), DISTINCT-from-constancy
+  * and part extremes — never the image-of-extreme or top-k
+  * certificates, which need monotonicity a [[DeterminedConstKey]] does
+  * not have. */
 sealed trait RgConstKey extends Serializable {
   /** Stable tag for key identity (grouping-key dedup) and route logs. */
   def id: String
@@ -954,10 +970,8 @@ final case class DeterminedConstKey(
   * minimum (real zone rules — the grid only ever answers the equality
   * question, never renders a value). A group straddling a transition,
   * an unbuildable grid, or non-micros stats fail closed (None — the
-  * scan serves that group). Boundary semantics: `nextTransition(mn)` is
-  * strictly after `mn`, and `getOffset` at an exact transition instant
-  * is the post-transition offset, so a group whose minimum sits ON a
-  * transition certifies with the offset actually in force there.
+  * scan serves that group). The piece and its offset, boundaries
+  * included, are [[KeyImage.pieceOffset]]'s.
   *
   * All recognized shapes are null-preserving (casts, from_utc_timestamp,
   * field extractions, names, anchors, date_format), the precondition for
@@ -973,17 +987,31 @@ final case class PiecewiseZoneConstKey(
   def constantOf(mn: Any, mx: Any): Option[Any] = (mn, mx) match {
     case (a: java.lang.Number, b: java.lang.Number) =>
       val (av, bv) = (a.longValue, b.longValue)
-      val ia = DateTimeUtils.microsToInstant(av)
-      val ib = DateTimeUtils.microsToInstant(bv)
-      val rules = zone.getRules
-      val tr = rules.nextTransition(ia)
-      if (tr != null && !tr.getInstant.isAfter(ib)) None // straddler
-      else {
-        val off = rules.getOffset(ia).getTotalSeconds
-        gridAt(off).flatMap { g =>
-          if (g(av) == g(bv)) Option(eval(av)) else None
-        }
+      KeyImage.pieceOffset(zone, av, bv).flatMap(gridAt).flatMap { g =>
+        if (g(av) == g(bv)) Option(eval(av)) else None
       }
+    case _ => None
+  }
+}
+
+/** A comparison of a per-piece monotone leg ([[KeyImage.piecewiseMonotoneOf]])
+  * against literals (r14) as a BOOLEAN constancy key: on a
+  * transition-free piece the leg's exact value range over the group is
+  * [grid(off)(mn), grid(off)(mx)] (footer extremes are attained), and
+  * `decide(lo, hi)` is Some(b) when the comparison is b on that whole
+  * range, None when it is mixed. A NULL leg compares to NULL. */
+final case class PiecewiseCmpKey(
+    zone: java.time.ZoneId,
+    gridAt: Int => Option[KeyImage],
+    decide: (Long, Long) => Option[Boolean]) extends RgConstKey {
+  def id: String = s"pw-cmp@${zone.getId}"
+  def resultType: DataType = BooleanType
+  def constantOf(mn: Any, mx: Any): Option[Any] = (mn, mx) match {
+    case (a: java.lang.Number, b: java.lang.Number) =>
+      def at(g: KeyImage, v: Long) = g(v).asInstanceOf[java.lang.Number].longValue
+      val (av, bv) = (a.longValue, b.longValue)
+      KeyImage.pieceOffset(zone, av, bv).flatMap(gridAt)
+        .flatMap(g => decide(at(g, av), at(g, bv))).map(Boolean.box)
     case _ => None
   }
 }

@@ -5,10 +5,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The ONE place the catalog's JDBC value encodings bridge to Catalyst
-  * internals, and the ONE verbatim-exact type gate — shared by the
-  * aggregate-fold rule (plans/StatsAggPushdown) and the scan-path
-  * constancy refinement (prune/PartPrune) so the certified-type set
-  * cannot drift between the two serving paths. */
+  * internals, the ONE verbatim-exact type gate and the ONE conjunct
+  * splitter — shared by the row-group constancy engine (prune/PartPrune,
+  * whose `evalAt` bridges every slot value here), the aggregate-fold
+  * rule (plans/StatsAggPushdown), the top-k rule and the scan paths, so
+  * the certified-type set cannot drift between serving paths. */
 object StatsBridge {
 
   /** Catalog JDBC value (or an eval-internal value from a
@@ -28,6 +29,11 @@ object StatsBridge {
     case IntegerType | DateType => Some(v.asInstanceOf[Number].intValue)
     case LongType | TimestampType | TimestampNTZType =>
       Some(v.asInstanceOf[Number].longValue)
+    // a piecewise comparison's wholesale decision (PiecewiseCmpKey)
+    case BooleanType => v match {
+      case b: java.lang.Boolean => Some(b)
+      case _ => None
+    }
     case FloatType => Some(v.asInstanceOf[Number].floatValue)
     case DoubleType => Some(v.asInstanceOf[Number].doubleValue)
     case d: DecimalType =>

@@ -1053,8 +1053,9 @@ object Indexed {
              |  count(*) AS n
              |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
 
-    // Row-group-filtered GROUPED fold (idx47, r13 — rowGroupKeepSet keyed
-    // into groupByRewrite): the WHERE columns are NOT grouping keys —
+    // Row-group-filtered GROUPED fold (idx47, r13 — the constancy engine,
+    // prune/PartPrune, decides each row group for groupByRewrite through
+    // rowGroupKeepSet): the WHERE columns are NOT grouping keys —
     // they are keyish columns CONSTANT per row group on the aligned
     // layout, so the predicate keeps or drops ROW GROUPS wholesale and
     // the grouped tallies (counts, ledger sums, extremes, avg) merge

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Physical WITHIN-FILE row-group skipping for constancy-prunable
-  * predicates (r13): the scan-path refinement (prune/PartPrune) can only
+  * predicates (r13): the scan-path refinement (`PartPrune.refine`, a
+  * caller of the row-group constancy engine) can only
   * drop whole files through `listFiles` — a row group dropped inside a
   * surviving file is observability, not IO, because the standard parquet
   * reader cannot push a computed-key predicate (`year(ts) = 1996`,

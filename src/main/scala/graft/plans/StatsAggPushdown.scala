@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.index.{RowGroupStat, StatsIndex}
+import graft.index.{RowGroupStat, StatsBridge, StatsIndex}
+import graft.prune.PartPrune
 import graft.sources.IndexedParquetFileIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -140,10 +141,6 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
   private def allPassFilter(
       cond: Expression, idx: IndexedParquetFileIndex): Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     def conv(value: Any): Option[Any] =
       if (value == null) None
       else Some(value match {
@@ -169,7 +166,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
         else s.max.exists(v => if (inclusive) ord.lteq(v, b) else ord.lt(v, b))
       })
     }
-    conjuncts(cond).forall {
+    StatsBridge.conjuncts(cond).forall {
       case IsNotNull(ar: AttributeReference) => zeroNulls(ar)
       case GreaterThan(ar: AttributeReference, l: Literal) =>
         bound(ar, l, isLo = true, inclusive = false)
@@ -314,45 +311,18 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       val rs = resolvedExpr(s)
       rKeys.indexWhere(_.semanticEquals(rs))
     }
-    def keyEvaluator(cj: Expression): Option[Key => Option[Boolean]] = {
-      if (!cj.deterministic) return None
-      // compile ONCE: replace each key occurrence with a placeholder
-      // attribute, so the per-group pass substitutes by exprId instead
-      // of re-running semanticEquals recognition on every node
-      val placeholders = gs.indices.map(i =>
-        AttributeReference(s"__graft_gk$i", gs(i).keyType)())
-      val phIdx: Map[org.apache.spark.sql.catalyst.expressions.ExprId, Int] =
-        placeholders.zipWithIndex.map { case (p, i) => p.exprId -> i }.toMap
-      val template = cj.transformDown {
-        case s if keyIdxOf(s) >= 0 => placeholders(keyIdxOf(s))
-      }
-      // anything left referencing a non-key column declines the conjunct
-      if (!template.references.forall(a => phIdx.contains(a.exprId)))
-        return None
-      // fail closed when a DEFINED key value doesn't bridge: a future
-      // key type missing a StatsBridge case must decline the fold, not
-      // evaluate the predicate at NULL and silently drop groups. A None
-      // slot is the genuine NULL group and substitutes as SQL NULL.
-      def subst(key: Key): Option[Expression] = {
-        var bridged = true
-        val r = template.transformDown {
-          case a: AttributeReference if phIdx.contains(a.exprId) =>
-            val i = phIdx(a.exprId)
-            val v = key(i) match {
-              case Some(raw) => internal(raw, gs(i).keyType) match {
-                case Some(iv) => iv
-                case None => bridged = false; null
-              }
-              case None => null
-            }
-            Literal(v, gs(i).keyType)
-        }
-        if (bridged) Some(r) else None
-      }
-      Some(key => subst(key)
-        .flatMap(s => scala.util.Try(s.eval(null)).toOption)
-        .map(v => v == true))
+    // compiled ONCE over one placeholder slot per grouping key (anything
+    // else referenced declines the conjunct); per group the engine's
+    // evalAt substitutes the key values — a None slot is the genuine NULL
+    // group, an unbridgeable defined value fails closed
+    val keySlots = gs.indices.map(i =>
+      AttributeReference(s"__graft_gk$i", gs(i).keyType)())
+    object KeySlot {
+      def unapply(s: Expression): Option[Int] = Some(keyIdxOf(s)).filter(_ >= 0)
     }
+    def keyEvaluator(cj: Expression): Option[Key => Option[Boolean]] =
+      PartPrune.template(cj, keySlots) { case KeySlot(i) => keySlots(i) }
+        .map(t => key => PartPrune.evalAt(t, key).map(_ == true))
     // conjuncts that are neither vacuous nor key-only spill into rgLive:
     // if every one of them is ROW-GROUP-decidable (keyish + constant per
     // row group — the idx44 engine), they restrict the row-group UNIVERSE
@@ -363,12 +333,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     val groupKeep: Key => Option[Boolean] = cond match {
       case None => _ => Some(true)
       case Some(c) =>
-        def conjuncts(e: Expression): Seq[Expression] = e match {
-          case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-            conjuncts(l) ++ conjuncts(r)
-          case x => Seq(x)
-        }
-        val evs = conjuncts(c).flatMap { cj =>
+        val evs = StatsBridge.conjuncts(c).flatMap { cj =>
           if (allPassFilter(cj, idx)) Nil
           else keyEvaluator(cj) match {
             case Some(ev) => Seq(ev)
@@ -400,21 +365,13 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     val rgKey = scala.collection.mutable.HashMap.empty[(String, Int), Key]
     rgs.filter(keptRg).foreach { rg =>
       // per column: (null count, constant value — None when all-null)
+      // the key's constancy certificate over the raw extremes: image
+      // keys certify through their bucket equality, determined parts
+      // through their finer determiner; a straddler or a throwing
+      // certificate fails the fold closed
       val info: Seq[(Long, Option[Any])] = gs.indices.map { i =>
-        val s = statsPer(i).getOrElse(rg, return None)
-        val nc = s.nullCount.getOrElse(return None)
-        if (nc == s.rowCount) (nc, None)
-        else {
-          val mn = s.min.getOrElse(return None)
-          val mx = s.max.getOrElse(return None)
-          // the key's constancy certificate over the raw extremes: image
-          // keys certify through their bucket equality, determined parts
-          // through their finer determiner; a straddler or a throwing
-          // certificate fails the fold closed
-          val kv = scala.util.Try(gs(i).ck.constantOf(mn, mx))
-            .getOrElse(return None).getOrElse(return None)
-          (nc, Some(kv))
-        }
+        PartPrune.constancy(gs(i).ck, statsPer(i).getOrElse(rg, return None))
+          .getOrElse(return None)
       }
       val rowCount = statsPer.head(rg).rowCount
       if (gs.indices.exists(i => statsPer(i)(rg).rowCount != rowCount))
@@ -443,13 +400,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     // its extremes merge correctly). The other column's stored extremes
     // must be verbatim-exact VALUES: integrals/date/timestamp/decimal
     // only (string minima may be truncated — fine as bounds, wrong as
-    // answers; floats carry the NaN comparator hazard)
-    def exactOther(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType |
-          TimestampType | TimestampNTZType => true
-      case _: DecimalType => true // verbatim values, signed comparators (r13)
-      case _ => false
-    }
+    // answers; floats carry the NaN comparator hazard): StatsBridge's gate
     def isGrouping(a: AttributeReference): Boolean =
       gs.exists(k => k.isPlain && k.attr.exprId == a.exprId)
     // an aggregate over a monotone image of an indexed column, with the
@@ -490,8 +441,9 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       if (otherAggCols.isEmpty) Map.empty
       else {
         otherAggCols.map { a =>
-          if (!indexed(idx.statsIndex, a) || !exactOther(a.dataType)) return None
-          // the exactOther gate admits only types with a certified total
+          if (!indexed(idx.statsIndex, a) || !StatsBridge.verbatimExact(a.dataType))
+            return None
+          // the verbatim-exact gate admits only types with a certified total
           // order (integrals/date/ts as longs, decimal by value)
           val ord = graft.prune.TopKPruning.ordering(a.dataType)
             .getOrElse(return None)
@@ -820,12 +772,6 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     case _ => false
   }
 
-  /** One aggregate output column → its certified catalog value (already in
-    * Catalyst internal encoding), or None ⇒ the whole rewrite aborts.
-    * CollapseProject may fold a post-aggregate render (e.g. the decimal
-    * fixed-scale string cast) INTO the aggregate list — a Cast over a
-    * certified aggregate is served by evaluating Spark's own cast on the
-    * catalog value. */
   /** A FOLDABLE output column of a global aggregate (r15: ROLLUP's
     * `null AS <col>` padding, constant report labels — CollapseProject
     * folds them into the aggregate list): its one constant value, in
@@ -836,6 +782,12 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     case _ => None
   }
 
+  /** One aggregate output column → its certified catalog value (already in
+    * Catalyst internal encoding), or None ⇒ the whole rewrite aborts.
+    * CollapseProject may fold a post-aggregate render (e.g. the decimal
+    * fixed-scale string cast) INTO the aggregate list — a Cast over a
+    * certified aggregate is served by evaluating Spark's own cast on the
+    * catalog value. */
   private def catalogValue(index: StatsIndex, ne: Expression): Option[Any] = ne match {
     case Alias(e, _) => castsOver(e).flatMap { case (ae, cs) =>
       aggValue(index, ae).flatMap(replayCasts(cs, _)) }
@@ -886,8 +838,10 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     * running floating-point sum may round differently, so a catalog-
     * folded AVG can differ from the scan's by one ulp (intentional;
     * oracle-green). A bit-exact-reproducibility user must pin one plan
-    * via the kill switches (`spark.graft.groupByAggPushdown=false` /
-    * `spark.graft.aggPushdown=false`). */
+    * via the kill switches: `spark.graft.statsAggPushdown=false` turns
+    * every catalog fold off; `spark.graft.groupByAggPushdown=false` only
+    * the grouped one, `spark.graft.filteredAggPushdown=false` only the
+    * filtered ones. */
   private def avgFromLedger(
       av: Average, colType: DataType, sv: Long, nn: Long): Option[Any] = {
     if (nn == 0) return Some(null)
@@ -995,12 +949,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     val stats = index.rowGroupStats(attr.name).getOrElse(return None)
     var best: Any = null
     stats.foreach { st =>
-      val nc = st.nullCount.getOrElse(return None)
-      if (nc != st.rowCount) {
-        val mn = st.min.getOrElse(return None)
-        val mx = st.max.getOrElse(return None)
-        val v = scala.util.Try(ck.constantOf(mn, mx))
-          .getOrElse(return None).getOrElse(return None)
+      PartPrune.constancy(ck, st).getOrElse(return None)._2.foreach { v =>
         if (best == null) best = v
         else cmpInternal(ck.resultType, v, best) match {
           case Some(c) => if ((isMin && c < 0) || (!isMin && c > 0)) best = v
@@ -1040,32 +989,19 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
   private def distinctCell(index: StatsIndex, ne: Expression): Option[Any] = {
     if (session.conf.get("spark.graft.distinctAggPushdown", "true") != "true")
       return None
-    def constancyExact(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType |
-          TimestampType | TimestampNTZType => true
-      case _: DecimalType => true
-      case _ => false
-    }
     def countVia(e: Expression): Option[Any] = {
       val legOpt: Option[(AttributeReference, graft.index.RgConstKey)] =
         e match {
           case a: AttributeReference
-              if indexed(index, a) && constancyExact(a.dataType) =>
+              if indexed(index, a) && StatsBridge.verbatimExact(a.dataType) =>
             Some((a, graft.index.RawConstKey(a.dataType)))
           case other => constKeyOf(index, other)
         }
       val (attr, ck) = legOpt.getOrElse(return None)
       val stats = index.rowGroupStats(attr.name).getOrElse(return None)
       val seen = scala.collection.mutable.HashSet.empty[Any]
-      stats.foreach { st =>
-        val nc = st.nullCount.getOrElse(return None)
-        if (nc != st.rowCount) {
-          val mn = st.min.getOrElse(return None)
-          val mx = st.max.getOrElse(return None)
-          seen += scala.util.Try(ck.constantOf(mn, mx))
-            .getOrElse(return None).getOrElse(return None)
-        }
-      }
+      stats.foreach(st =>
+        seen ++= PartPrune.constancy(ck, st).getOrElse(return None)._2)
       Some(Long.box(seen.size.toLong))
     }
     ne match {
@@ -1079,152 +1015,67 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     }
   }
 
-  /** A GLOBAL aggregate under a Filter the catalog serves per ROW GROUP
-    * (r13): every conjunct is either stats-certified ALL-PASS (vacuous,
-    * r11) or closes over KEYISH operands — indexed columns or monotone
-    * images of them — CONSTANT within each row group, so the predicate
-    * keeps or drops row groups WHOLESALE (`WHERE year(ts) = 1995` over
-    * time-partitioned ingest: "last year's totals" answered O(index),
-    * zero data scanned). Kept row groups' tallies then merge into the
-    * global answer exactly like the unfiltered fold: COUNT from footer
-    * row counts, SUM from the ledger, MIN/MAX from verbatim-exact
-    * extremes — sound because membership is wholesale, so the kept
-    * set's stats ARE the filtered rows' stats. Null discipline: every
-    * referenced key column must be all-null or null-free per row group
-    * (a partial slice would split membership); an all-null group
-    * evaluates the predicate at NULL and SQL three-valued logic keeps
-    * or drops it whole. Any straddling row group, eval failure (ANSI),
-    * or unservable aggregate declines to the declarative plan.
-    * Kill switch: `spark.graft.filteredAggPushdown`. */
-  /** Per-ROW-GROUP wholesale membership — the shared engine of the
-    * filtered global fold (idx44) and the rg-filtered grouped fold
-    * (idx47). Every conjunct must close over KEYISH operands — indexed,
-    * ordering-certified columns or monotone images of them — each
-    * CONSTANT within every row group (image constancy f(min) = f(max)
-    * suffices) and all-null-or-null-free per row group, so each conjunct
-    * evaluates once per row group at the substituted constants and keeps
-    * or drops the whole group; SQL three-valued logic applies at NULL.
+  /** Per-ROW-GROUP wholesale membership — the filtered global fold
+    * (idx44) and the rg-filtered grouped fold (idx47) as callers of the
+    * constancy engine ([[PartPrune.decide]]): every conjunct must compile
+    * over keyish members (indexed, ordering-certified columns, monotone
+    * images, calendar parts, piecewise comparisons) and be DECIDED on
+    * every row group of the universe — the first key column's row groups.
     * Returns (kept set, kept row total, universe size) — the caller must
     * check the universe matches ITS row-group walk — or None when any
-    * conjunct is not rg-decidable (non-keyish reference, straddler,
-    * partial nulls, non-determinism, eval failure). */
+    * conjunct does not compile or any group is undecided (straddler,
+    * partial nulls, eval failure). */
   private def rowGroupKeepSet(index: StatsIndex, live: Seq[Expression])
       : Option[(scala.collection.Set[(String, Int)], Long, Int)] = {
-    if (live.isEmpty) return None
-    def keyish(e: Expression)
-        : Option[(AttributeReference, graft.index.RgConstKey)] =
-      e match {
-        case a: AttributeReference if indexed(index, a) && ordered(a.dataType) =>
-          Some((a, graft.index.RawConstKey(a.dataType)))
-        case other => constKeyOf(index, other)
-      }
-    // the keyish subexpressions the live conjuncts close over (maximal
-    // subtrees — transformDown stops descending once one matches)
-    val keyExprs = scala.collection.mutable.ArrayBuffer
-      .empty[(Expression, AttributeReference, graft.index.RgConstKey)]
-    def keyIdxOf(s: Expression): Int =
-      keyExprs.indexWhere(_._1.semanticEquals(s))
-    live.foreach { cj =>
-      if (!cj.deterministic) return None
-      val closed = cj.transformDown {
-        case s if keyIdxOf(s) >= 0 => Literal(null, s.dataType)
-        case s if keyish(s).isDefined =>
-          val (ar, ck) = keyish(s).get
-          keyExprs += ((s, ar, ck)); Literal(null, s.dataType)
-      }
-      if (closed.references.nonEmpty) return None
-    }
-    if (keyExprs.isEmpty) return None
-    def keyType(i: Int): DataType = keyExprs(i)._3.resultType
-    val statsPer: Seq[Map[(String, Int), RowGroupStat]] =
-      keyExprs.toSeq.map(k =>
-        index.rowGroupStats(k._2.name).getOrElse(return None)
-          .map(s => (s.fileName, s.rowGroup) -> s).toMap)
-    if (statsPer.exists(_.size != statsPer.head.size)) return None
-    def evalKeep(vals: IndexedSeq[Option[Any]]): Option[Boolean] = {
-      var keep = true
-      live.foreach { cj =>
-        if (keep) {
-          // as in keyEvaluator's subst: an unbridgeable DEFINED value
-          // declines (fail closed) instead of evaluating at NULL
-          var bridged = true
-          val sub = cj.transformDown {
-            case s if keyIdxOf(s) >= 0 =>
-              val i = keyIdxOf(s)
-              val v = vals(i) match {
-                case Some(raw) => internal(raw, keyType(i)) match {
-                  case Some(iv) => iv
-                  case None => bridged = false; null
-                }
-                case None => null
-              }
-              Literal(v, keyType(i))
-          }
-          if (!bridged) return None
-          scala.util.Try(sub.eval(null)).toOption match {
-            case Some(v) => keep = v == true
-            case None => return None
-          }
-        }
-      }
-      Some(keep)
-    }
-    val keptSet = scala.collection.mutable.HashSet.empty[(String, Int)]
+    val gate = (a: AttributeReference) => indexed(index, a) && ordered(a.dataType)
+    val compiled = live.map(cj => PartPrune.compile(cj, gate, gate).getOrElse(return None))
+    val cols = compiled.flatMap(_.members.map(_.attr.name)).distinct
+    if (cols.isEmpty) return None
+    val statsBy: Map[String, Map[(String, Int), RowGroupStat]] = cols.map(c =>
+      c -> index.rowGroupStats(c).getOrElse(return None)
+        .map(s => (s.fileName, s.rowGroup) -> s).toMap).toMap
+    val universe = statsBy(cols.head)
+    if (statsBy.values.exists(_.size != universe.size)) return None
     var keptRows = 0L
-    statsPer.head.keys.toSeq.sorted.foreach { rg =>
-      val rowCount = statsPer.head(rg).rowCount
-      val vals: IndexedSeq[Option[Any]] = keyExprs.indices.map { i =>
-        val s = statsPer(i).getOrElse(rg, return None)
-        if (s.rowCount != rowCount) return None
-        val nc = s.nullCount.getOrElse(return None)
-        if (nc == s.rowCount) None
-        else if (nc != 0L) return None // partial nulls split membership
-        else {
-          val mn = s.min.getOrElse(return None)
-          val mx = s.max.getOrElse(return None)
-          // straddler or throwing certificate: fail closed
-          Some(scala.util.Try(keyExprs(i)._3.constantOf(mn, mx))
-            .getOrElse(return None).getOrElse(return None))
-        }
-      }
-      evalKeep(vals) match {
-        case None => return None
-        case Some(true) => keptSet += rg; keptRows += rowCount
-        case Some(false) => ()
-      }
+    val kept = universe.keySet.filter { rg =>
+      val statOf = (c: String) => statsBy(c).get(rg)
+      val keep = compiled.map(PartPrune.decide(_, statOf))
+        .foldLeft(true)((acc, d) => d.getOrElse(return None) && acc)
+      if (keep) keptRows += universe(rg).rowCount
+      keep
     }
-    Some((keptSet, keptRows, statsPer.head.size))
+    Some((kept, keptRows, universe.size))
   }
 
+  /** A GLOBAL aggregate under a Filter the catalog serves per ROW GROUP
+    * (r13): every conjunct is either stats-certified ALL-PASS (vacuous,
+    * r11) or decided wholesale per row group by [[rowGroupKeepSet]]
+    * (`WHERE year(ts) = 1995` over time-partitioned ingest: "last year's
+    * totals" answered O(index), zero data scanned). Kept row groups'
+    * tallies then merge into the global answer exactly like the
+    * unfiltered fold: COUNT from footer row counts, SUM from the ledger,
+    * MIN/MAX from verbatim-exact extremes — sound because membership is
+    * wholesale, so the kept set's stats ARE the filtered rows' stats.
+    * Any undecided row group or unservable aggregate declines to the
+    * declarative plan. Kill switch: `spark.graft.filteredAggPushdown`. */
   private def globalFilteredFold(
       agg: Aggregate, idx: IndexedParquetFileIndex,
       cond: Expression): Option[LogicalPlan] = {
     if (session.conf.get("spark.graft.filteredAggPushdown", "true") != "true")
       return None
-    import org.apache.spark.sql.catalyst.expressions.And
     val index = idx.statsIndex
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    val live = conjuncts(cond).filterNot(cj => allPassFilter(cj, idx))
+    val live = StatsBridge.conjuncts(cond).filterNot(cj => allPassFilter(cj, idx))
     if (live.isEmpty) return None // fully vacuous is the unfiltered fold's job
     val (keptSet, keptRows, _) =
       rowGroupKeepSet(index, live).getOrElse(return None)
     // tallies over the kept set — each needs full, aligned coverage
-    def exactVal(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType |
-          TimestampType | TimestampNTZType => true
-      case _: DecimalType => true
-      case _ => false
-    }
     def keptStats(a: AttributeReference): Option[Seq[RowGroupStat]] =
       if (!indexed(index, a)) None
       else index.rowGroupStats(a.name)
         .map(_.filter(s => keptSet.contains((s.fileName, s.rowGroup))))
         .filter(_.size == keptSet.size)
     def extreme(a: AttributeReference, wantMin: Boolean): Option[Any] = {
-      if (!exactVal(a.dataType)) return None
+      if (!StatsBridge.verbatimExact(a.dataType)) return None
       val ord = graft.prune.TopKPruning.ordering(a.dataType)
         .getOrElse(return None)
       val ss = keptStats(a).getOrElse(return None)

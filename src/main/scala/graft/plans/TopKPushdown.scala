@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.prune.TopKPruning
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IntegerLiteral, IsNotNull, LessThan, LessThanOrEqual, Literal, NullsFirst, Or, SortOrder, TruncTimestamp}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IntegerLiteral, IsNotNull, LessThan, LessThanOrEqual, Literal, NullsFirst, Or, SortOrder, TruncTimestamp}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -326,10 +326,6 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
     * timestamp micros; UTF8String → String; Decimal → BigDecimal). */
   private def parseDisjuncts(cond: Expression, a: AttributeReference)
       : Option[Seq[TopKPruning.Disjunct]] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     def branches(e: Expression): Seq[Expression] = e match {
       case Or(l, r) => branches(l) ++ branches(r)
       case x => Seq(x)
@@ -396,7 +392,7 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
       else { m(ar.name) = (Some((value, true)), Some((value, true))); Some(m) }
     }
 
-    val conj = conjuncts(cond)
+    val conj = graft.index.StatsBridge.conjuncts(cond)
     val (disjunctive, plain) = conj.partition {
       case _: Or                         => true
       case In(_: AttributeReference, _)  => true
@@ -422,7 +418,7 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
           withEq(shared, ar, value).getOrElse(return None)
         }
       case Some(or: Or) =>
-        branches(or).map(b => absorb(shared, conjuncts(b)).getOrElse(return None))
+        branches(or).map(b => absorb(shared, graft.index.StatsBridge.conjuncts(b)).getOrElse(return None))
       case _ => return None
     }
     val result = maps.map { m =>

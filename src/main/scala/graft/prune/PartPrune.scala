@@ -1,49 +1,169 @@
 package graft.prune
 
-import graft.index.{DeterminedConstKey, FileScanPlan, ImageConstKey, KeyImage, RawConstKey, RgConstKey, RowGroupStat, StatsIndex}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, Literal}
+import graft.index.{DeterminedConstKey, FileScanPlan, ImageConstKey, KeyImage, PiecewiseCmpKey, PiecewiseZoneConstKey, RawConstKey, RgConstKey, RowGroupStat, StatsBridge, StatsIndex}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences, Coalesce, EqualNullSafe, Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Planner-side row-group refinement from per-row-group CONSTANCY (r13):
-  * the scan-path counterpart of the catalog fold's wholesale filter
-  * (StatsAggPushdown's idx44/idx47 engine), for predicates the
-  * stats-space interval rewrite CANNOT serve — determined calendar parts
-  * (`dayofweek(ts) IN (1,7)`, `date_format(ts,'EEEE') = 'Saturday'`) and
-  * Derby-unrenderable monotone images (`year(ts) = 1995`, calendar-unit
-  * truncs). A conjunct that closes over recognizable keys is evaluated
-  * ONCE per surviving row group at the group's certified constants:
-  * `false` (or NULL — with zero nulls certified, every actual row
-  * evaluates exactly like the constant, and a NULL conjunct filters the
-  * row) drops the group; `true`, a straddler, partial nulls, or any
-  * unknown keeps it. Pure over-approximation on top of the Derby walk,
-  * so Spark's re-applied filters (Inexact semantics, reference
-  * main.rs:308-316) make it impossible to change results — only to skip
-  * reads. At 100 TB on a day-partitioned layout this is the difference
-  * between reading 7/7 and 2/7 of the files for a weekend slice: whole
-  * files whose row groups all drop never reach the reader.
+/** THE row-group constancy engine (r13): the only code that decides a
+  * conjunct per row group from catalog stats. A
+  * conjunct is recognized ONCE into members — constancy keys (a raw
+  * attribute, a monotone image, a determined calendar part, a
+  * DST-piecewise part: [[KeyImage.constKeyOf]]) and piecewise interval
+  * comparisons ([[PiecewiseCmpKey]]) — and compiled ONCE into a
+  * [[Template]] over placeholder slots. Per row group, [[decide]] reads
+  * each member's `(null count, constant)` ([[constancy]]) and evaluates
+  * the template with Spark's own eval ([[evalAt]]):
+  *  - a null-free group substitutes its constant;
+  *  - an all-null group substitutes NULL — sound because every
+  *    recognized key maps a NULL operand to NULL (casts, images, field
+  *    extractions, names, anchors, date_format, from_utc_timestamp, and
+  *    the piecewise comparisons against non-null literals; `<=>` is
+  *    compiled as `coalesce(cmp, false)`);
+  *  - a partial-null slice, a straddler, mismatched row counts or an
+  *    eval failure is undecided (None).
   *
-  * Driver cost: O(surviving plans) — one file-restricted stats fetch per
-  * referenced column ([[graft.index.StatsIndex.rowGroupStatsFor]]), one
+  * Callers keep only their policy. The scan path ([[refine]], used by
+  * `IndexedParquetFileIndex.listFiles` and `PartPruneScan`) drops a row
+  * group on `Some(false)` — pure over-approximation, since Spark
+  * re-applies every filter (Inexact semantics, reference
+  * main.rs:308-316). StatsAggPushdown's folds (idx44/idx47) need every
+  * group decided and decline on any None; its grouped fold evaluates
+  * key-only conjuncts at the grouping-key values through [[evalAt]].
+  *
+  * Scan-path driver cost: O(surviving plans) — one file-restricted stats
+  * fetch per referenced column ([[StatsIndex.rowGroupStatsFor]]), one
   * in-memory pass over (conjunct × surviving row group). No data jobs.
   */
 object PartPrune {
 
-  /** Pure-expression pre-check (no catalog IO): does ANY conjunct close
-    * over the constancy keys with a novel member? Callers use this to
-    * skip the stats fetch entirely on ordinary predicates. */
-  def qualifies(index: StatsIndex, dataFilters: Seq[Expression]): Boolean =
-    dataFilters.flatMap(split).exists(q => closeOver(index, q).isDefined)
+  /** A maximal subexpression `node` of a conjunct whose value per row
+    * group `key` certifies from the stats of the indexed column `attr`. */
+  final case class Member(node: Expression, attr: AttributeReference, key: RgConstKey)
 
-  /** Refine `plans` against `dataFilters`; returns the narrowed plans and
+  /** A conjunct compiled once: member occurrences replaced by placeholder
+    * `slots`, bound to slot ordinals for evaluation. */
+  final case class Template(expr: Expression, slots: IndexedSeq[AttributeReference]) {
+    private[prune] lazy val bound: Expression =
+      BindReferences.bindReference(expr, slots)
+  }
+
+  final case class Compiled(members: IndexedSeq[Member], template: Template)
+
+  /** Compile `cj` over `slots`: `claim` replaces a member occurrence
+    * (top-down, so the maximal one wins) with its slot expression. None
+    * when `cj` is non-deterministic (a conjunct that is not a pure
+    * function of its members proves nothing per group) or when anything
+    * but a slot is still referenced. */
+  def template(cj: Expression, slots: IndexedSeq[AttributeReference])(
+      claim: PartialFunction[Expression, Expression]): Option[Template] = {
+    if (!cj.deterministic) return None
+    val expr = cj.transformDown(claim)
+    val ids = slots.map(_.exprId).toSet
+    if (expr.references.forall(a => ids.contains(a.exprId))) Some(Template(expr, slots))
+    else None
+  }
+
+  /** Recognize `cj`'s members and compile it. `rawGate` admits columns
+    * that are their own key (min = max); `imageGate` is the attribute gate
+    * handed to the image, part and piecewise recognizers. */
+  def compile(
+      cj: Expression,
+      rawGate: AttributeReference => Boolean,
+      imageGate: AttributeReference => Boolean): Option[Compiled] = {
+    val members = scala.collection.mutable.ArrayBuffer.empty[Member]
+    def indexOf(s: Expression): Int = members.indexWhere(_.node.semanticEquals(s))
+    def recognize(e: Expression): Option[Member] =
+      pwCompare(e, imageGate).orElse(e match {
+        case a: AttributeReference if rawGate(a) =>
+          Some(Member(a, a, RawConstKey(a.dataType)))
+        case other => KeyImage.constKeyOf(other, imageGate)
+          .map { case (ar, ck) => Member(other, ar, ck) }
+      })
+    def walk(e: Expression): Unit =
+      if (indexOf(e) < 0) recognize(e) match {
+        case Some(m) => members += m
+        case None => e.children.foreach(walk)
+      }
+    walk(cj)
+    val slots = members.indices.map(i =>
+      AttributeReference(s"__graft_m$i", members(i).key.resultType)())
+    object Claimed {
+      def unapply(s: Expression): Option[Int] = Some(indexOf(s)).filter(_ >= 0)
+    }
+    template(cj, slots) {
+      case Claimed(i) => members(i).node match {
+        // `leg <=> lit` over a NULL leg is false, not NULL
+        case _: EqualNullSafe => Coalesce(Seq(slots(i), Literal.FalseLiteral))
+        case _ => slots(i)
+      }
+    }.map(Compiled(members.toIndexedSeq, _))
+  }
+
+  /** A row group's `(null count, constant)` for `key`: the constant is
+    * None when every row is null. None when the null count or an extreme
+    * is unknown, or the certificate straddles or throws. */
+  def constancy(key: RgConstKey, st: RowGroupStat): Option[(Long, Option[Any])] =
+    st.nullCount.flatMap { nc =>
+      if (nc == st.rowCount) Some((nc, None))
+      else for {
+        mn <- st.min
+        mx <- st.max
+        v <- scala.util.Try(key.constantOf(mn, mx)).toOption.flatten
+      } yield (nc, Some(v))
+    }
+
+  /** Evaluate a template at slot values in catalog encoding (None = SQL
+    * NULL), each bridged through [[StatsBridge.internal]]. None when a
+    * defined value does not bridge — never evaluated as NULL — or the
+    * evaluation throws (ANSI). */
+  def evalAt(t: Template, values: IndexedSeq[Option[Any]]): Option[Any] =
+    scala.util.Try {
+      val row = values.indices.map { i =>
+        values(i).map(v => StatsBridge.internal(v, t.slots(i).dataType)) match {
+          case Some(Some(iv)) => iv
+          case Some(None) => throw new IllegalArgumentException("unbridgeable")
+          case None => null
+        }
+      }
+      t.bound.eval(new GenericInternalRow(row.toArray[Any]))
+    }.toOption
+
+  /** Whether every row of one row group passes `c` (Some(true)), fails
+    * it (Some(false) — false or NULL), or is undecided (None), from the
+    * group's per-column stats `statOf`. */
+  def decide(c: Compiled, statOf: String => Option[RowGroupStat]): Option[Boolean] = {
+    var rows = -1L
+    val values = c.members.map { m =>
+      val st = statOf(m.attr.name).getOrElse(return None)
+      if (rows < 0) rows = st.rowCount
+      else if (rows != st.rowCount) return None
+      constancy(m.key, st) match {
+        case Some((0L, v @ Some(_))) => v
+        case Some((_, None)) => None
+        case _ => return None // partial-null slice or no certificate
+      }
+    }
+    evalAt(c.template, values).map(_ == true)
+  }
+
+  // ---- the scan path ---------------------------------------------------------
+
+  /** Pure-expression pre-check (no catalog IO): does ANY conjunct compile
+    * with a novel member? Callers use this to skip the stats fetch
+    * entirely on ordinary predicates. */
+  def qualifies(index: StatsIndex, dataFilters: Seq[Expression]): Boolean =
+    dataFilters.flatMap(StatsBridge.conjuncts).exists(q => scanCompile(index, q).isDefined)
+
+  /** Refine `plans` against `dataFilters`, dropping a row group when some
+    * conjunct decides `Some(false)` there; returns the narrowed plans and
     * a route tag when anything dropped (empty route = pass-through). */
   def refine(
       index: StatsIndex,
       dataFilters: Seq[Expression],
       plans: Seq[FileScanPlan]): (Seq[FileScanPlan], Seq[String]) = {
     if (dataFilters.isEmpty || plans.isEmpty) return (plans, Nil)
-    val conjuncts = dataFilters.flatMap(split)
-    val qualifying = conjuncts.flatMap(q => closeOver(index, q))
+    val qualifying = dataFilters.flatMap(StatsBridge.conjuncts)
+      .flatMap(q => scanCompile(index, q))
     if (qualifying.isEmpty) return (plans, Nil)
 
     // one stats fetch per referenced column, keyed (file, rowGroup) —
@@ -51,8 +171,7 @@ object PartPrune {
     // plan set must cost O(survivors), not O(catalog); at millions of
     // row groups the unrestricted fetch was the walk that didn't scale
     val fileSet = plans.map(_.fileName).toSet
-    val colNames = (qualifying.flatMap(_.keys.map(_._2.name)) ++
-      qualifying.flatMap(_.cmps.map(_.ar.name))).distinct
+    val colNames = qualifying.flatMap(_.members.map(_.attr.name)).distinct
     val statsBy: Map[String, Map[(String, Int), RowGroupStat]] =
       colNames.flatMap { c =>
         index.rowGroupStatsFor(c, fileSet)
@@ -63,10 +182,12 @@ object PartPrune {
     var pwDropped = 0 // drops decided by a piecewise-interval conjunct
     val refined = plans.flatMap { p =>
       val kept = p.scanRowGroups.filter { rg =>
-        val dropper = qualifying.find(_.drops(statsBy, p.fileName, rg))
+        val statOf = (c: String) => statsBy.get(c).flatMap(_.get((p.fileName, rg)))
+        val dropper = qualifying.find(decide(_, statOf).contains(false))
         if (dropper.isDefined) {
           dropped += 1
-          if (dropper.exists(_.cmps.nonEmpty)) pwDropped += 1
+          if (dropper.exists(_.members.exists(_.key.isInstanceOf[PiecewiseCmpKey])))
+            pwDropped += 1
         }
         dropper.isEmpty
       }
@@ -83,174 +204,32 @@ object PartPrune {
       s"part-pw-interval(dropped=$pwDropped)"))
   }
 
-  private def split(e: Expression): Seq[Expression] =
-    graft.index.StatsBridge.conjuncts(e)
-
-  /** A comparison of a piecewise-MONOTONE leg (r14 —
-    * [[KeyImage.piecewiseMonotoneOf]]: `from_utc_timestamp(ts, geoZone)`
-    * or its cast-to-date) against literal(s), decided WHOLESALE per row
-    * group: on a transition-free piece the leg's exact value range is
-    * [grid(off)(min), grid(off)(max)], so the comparison is all-true,
-    * all-false, or mixed for the whole group. `decide(lo, hi)` returns
-    * Some(b) when every row agrees, None when mixed (keep). This is
-    * what serves the range form Spark's optimizer itself produces by
-    * unwrapping a local-calendar-day equality. */
-  private final case class PwCmp(
-      node: Expression,
-      ar: AttributeReference,
-      zone: java.time.ZoneId,
-      grid: Int => Option[KeyImage],
-      decide: (Long, Long) => Option[Boolean])
-
-  /** A conjunct fully closed over constancy-certifiable key expressions
-    * and/or piecewise-monotone comparisons, with at least one member the
-    * interval walk cannot already serve (a determined part, an image
-    * with no Derby rendering, or any piecewise member) — raw-only or
+  /** The scan path's compile: raw keys need verbatim-exact extremes, images
+    * and parts a time-typed column, and at least one member must be one
+    * the interval walk cannot already serve (a determined part, an image
+    * with no Derby rendering, or anything piecewise) — raw-only or
     * renderable-image-only conjuncts stay with the stats-space rewrite. */
-  private final case class Closed(
-      conjunct: Expression,
-      keys: IndexedSeq[(Expression, AttributeReference, RgConstKey)],
-      cmps: IndexedSeq[PwCmp] = IndexedSeq.empty) {
-
-    /** True when the stats PROVE every row of (file, rg) fails the
-      * conjunct: all keys certified constant and all piecewise
-      * comparisons decided wholesale over a zero-null group, and the
-      * conjunct at those constants is not true. */
-    def drops(
-        statsBy: Map[String, Map[(String, Int), RowGroupStat]],
-        file: String, rg: Int): Boolean = {
-      val consts = new Array[Any](keys.size)
-      var rows = -1L
-      var i = 0
-      while (i < keys.size) {
-        val (_, ar, ck) = keys(i)
-        val st = statsBy.get(ar.name).flatMap(_.get((file, rg)))
-          .getOrElse(return false)
-        if (rows < 0) rows = st.rowCount
-        else if (rows != st.rowCount) return false
-        if (!st.nullCount.contains(0L)) return false
-        val mn = st.min.getOrElse(return false)
-        val mx = st.max.getOrElse(return false)
-        val v = scala.util.Try(ck.constantOf(mn, mx)).toOption.flatten
-          .getOrElse(return false)
-        consts(i) = internal(v, keyTypeOf(ar, ck)).getOrElse(return false)
-        i += 1
-      }
-      val cmpVals = new Array[Any](cmps.size)
-      var j = 0
-      while (j < cmps.size) {
-        val c = cmps(j)
-        val st = statsBy.get(c.ar.name).flatMap(_.get((file, rg)))
-          .getOrElse(return false)
-        if (rows < 0) rows = st.rowCount
-        else if (rows != st.rowCount) return false
-        if (!st.nullCount.contains(0L)) return false
-        val mn = st.min.getOrElse(return false)
-        val mx = st.max.getOrElse(return false)
-        val decided: Option[Boolean] = scala.util.Try {
-          val a = mn.asInstanceOf[java.lang.Number].longValue
-          val b = mx.asInstanceOf[java.lang.Number].longValue
-          val rules = c.zone.getRules
-          val ia = org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .microsToInstant(a)
-          val ib = org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .microsToInstant(b)
-          val tr = rules.nextTransition(ia)
-          if (tr != null && !tr.getInstant.isAfter(ib)) None // straddler
-          else {
-            val off = rules.getOffset(ia).getTotalSeconds
-            c.grid(off).flatMap { img =>
-              val lo = img(mn).asInstanceOf[java.lang.Number].longValue
-              val hi = img(mx).asInstanceOf[java.lang.Number].longValue
-              c.decide(lo, hi)
-            }
-          }
-        }.toOption.flatten
-        decided match {
-          case Some(bv) => cmpVals(j) = bv
-          case None => return false // undecidable wholesale: keep
-        }
-        j += 1
-      }
-      val sub = conjunct.transformDown {
-        case s if cmpIdxOf(s) >= 0 =>
-          Literal(cmpVals(cmpIdxOf(s)), BooleanType)
-        case s if idxOf(s) >= 0 =>
-          val k = idxOf(s)
-          Literal(consts(k), keyTypeOf(keys(k)._2, keys(k)._3))
-      }
-      scala.util.Try(sub.eval(null)).toOption match {
-        case Some(v) => v != true
-        case None => false // an eval error keeps the group
-      }
-    }
-
-    private def idxOf(s: Expression): Int =
-      keys.indexWhere(_._1.semanticEquals(s))
-    private def cmpIdxOf(s: Expression): Int =
-      cmps.indexWhere(_.node.semanticEquals(s))
-  }
-
-  private def keyTypeOf(ar: AttributeReference, ck: RgConstKey): DataType =
-    ck match {
-      case RawConstKey(dt) => dt
-      case other => other.resultType
-    }
-
-  private def closeOver(index: StatsIndex, cj: Expression): Option[Closed] = {
-    // Spark only pushes deterministic data filters, but make the
-    // precondition local: a non-deterministic conjunct is not a pure
-    // function of its keys, so per-group substitution proves nothing
-    if (!cj.deterministic) return None
-    val keys = scala.collection.mutable.ArrayBuffer
-      .empty[(Expression, AttributeReference, RgConstKey)]
-    def idxOf(s: Expression): Int = keys.indexWhere(_._1.semanticEquals(s))
-    def keyish(e: Expression): Option[(AttributeReference, RgConstKey)] =
-      e match {
-        case a: AttributeReference
-            if indexed(index, a) && constancyExact(a.dataType) =>
-          Some((a, RawConstKey(a.dataType)))
-        case other => KeyImage.constKeyOf(other,
-          ar => indexed(index, ar) && timeOrdered(ar.dataType))
-      }
-    val cmps = scala.collection.mutable.ArrayBuffer.empty[PwCmp]
-    def cmpIdxOf(s: Expression): Int = cmps.indexWhere(_.node.semanticEquals(s))
-    // extractor objects so each recognizer runs ONCE per node (the
-    // isDefined-then-get shape would re-run recognition — pure driver waste)
-    object Pw {
-      def unapply(s: Expression): Option[PwCmp] = pwCompare(index, s)
-    }
-    object Keyish {
-      def unapply(s: Expression): Option[(AttributeReference, RgConstKey)] =
-        keyish(s)
-    }
-    val closed = cj.transformDown {
-      case s if cmpIdxOf(s) >= 0 => Literal(null, BooleanType)
-      case Pw(c) => cmps += c; Literal(null, BooleanType)
-      case s if idxOf(s) >= 0 => Literal(null, s.dataType)
-      case s @ Keyish((ar, ck)) =>
-        keys += ((s, ar, ck)); Literal(null, s.dataType)
-    }
-    if (closed.references.nonEmpty) return None
-    // the value-add gate: something the interval rewrite can't serve
-    val novel = cmps.nonEmpty || keys.exists {
-      case (_, _, _: DeterminedConstKey) => true
-      case (_, _, _: graft.index.PiecewiseZoneConstKey) => true
-      case (_, _, ImageConstKey(img)) => img.derbySql.isEmpty
-      case _ => false
-    }
-    if (novel) Some(Closed(cj, keys.toIndexedSeq, cmps.toIndexedSeq)) else None
-  }
+  private def scanCompile(index: StatsIndex, cj: Expression): Option[Compiled] =
+    compile(cj,
+      a => indexed(index, a) && StatsBridge.verbatimExact(a.dataType),
+      a => indexed(index, a) && timeOrdered(a.dataType))
+      .filter(_.members.exists(_.key match {
+        case _: DeterminedConstKey | _: PiecewiseZoneConstKey | _: PiecewiseCmpKey => true
+        case ImageConstKey(img) => img.derbySql.isEmpty
+        case _ => false
+      }))
 
   /** Recognize `cmp(pwLeg, literal)` (either operand order) and IN-lists
-    * over a piecewise-monotone leg, with the wholesale decision rule for
-    * the leg's exact per-group value interval [lo, hi] (endpoints
-    * ATTAINED — footer extremes are real values of verbatim-exact
-    * types). Mixed groups return None (keep). */
-  private def pwCompare(index: StatsIndex, e: Expression): Option[PwCmp] = {
-    import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-    def leg(x: Expression) = KeyImage.piecewiseMonotoneOf(x,
-      ar => indexed(index, ar) && ar.dataType == TimestampType)
+    * over a piecewise-monotone leg ([[KeyImage.piecewiseMonotoneOf]]),
+    * with the wholesale decision rule for the leg's exact per-group value
+    * interval [lo, hi] (endpoints ATTAINED — footer extremes are real
+    * values of verbatim-exact types). Mixed groups decide None. This is
+    * what serves the range form Spark's optimizer itself produces by
+    * unwrapping a local-calendar-day equality. */
+  private def pwCompare(e: Expression, gate: AttributeReference => Boolean)
+      : Option[Member] = {
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+    def leg(x: Expression) = KeyImage.piecewiseMonotoneOf(x, gate)
     def litNum(x: Expression): Option[Long] = x match {
       case Literal(v: java.lang.Number, _) if v != null => Some(v.longValue)
       case _ => None
@@ -272,26 +251,27 @@ object PartPrune {
       case "<" => ">"; case "<=" => ">="
       case ">" => "<"; case ">=" => "<="; case x => x
     }
+    def member(n: Expression, lg: (AttributeReference, java.time.ZoneId,
+        Int => Option[KeyImage]), d: (Long, Long) => Option[Boolean]) =
+      Member(n, lg._1, PiecewiseCmpKey(lg._2, lg._3, d))
     def bin(n: Expression, l: Expression, r: Expression, op: String)
-        : Option[PwCmp] =
-      leg(l).flatMap(lg => litNum(r).map(v =>
-          PwCmp(n, lg._1, lg._2, lg._3, dec(op, v))))
-        .orElse(leg(r).flatMap(lg => litNum(l).map(v =>
-          PwCmp(n, lg._1, lg._2, lg._3, dec(flip(op), v)))))
+        : Option[Member] =
+      leg(l).flatMap(lg => litNum(r).map(v => member(n, lg, dec(op, v))))
+        .orElse(leg(r).flatMap(lg => litNum(l).map(v => member(n, lg, dec(flip(op), v)))))
     e match {
       case n @ LessThan(l, r)           => bin(n, l, r, "<")
       case n @ LessThanOrEqual(l, r)    => bin(n, l, r, "<=")
       case n @ GreaterThan(l, r)        => bin(n, l, r, ">")
       case n @ GreaterThanOrEqual(l, r) => bin(n, l, r, ">=")
       case n @ EqualTo(l, r)            => bin(n, l, r, "=")
-      case n @ EqualNullSafe(l, r)      => bin(n, l, r, "=") // zero-null groups only
+      case n @ EqualNullSafe(l, r)      => bin(n, l, r, "=")
       case n @ In(x, lits) =>
         leg(x).flatMap { lg =>
           val vs = lits.map(litNum)
           if (vs.exists(_.isEmpty)) None
           else {
             val set = vs.flatten
-            Some(PwCmp(n, lg._1, lg._2, lg._3, (lo, hi) =>
+            Some(member(n, lg, (lo, hi) =>
               if (set.forall(v => v < lo || v > hi)) Some(false)
               else if (lo == hi && set.contains(lo)) Some(true)
               else None))
@@ -305,18 +285,8 @@ object PartPrune {
     index.indexedSchema.fields.exists(f =>
       f.name == a.name && f.dataType == a.dataType)
 
-  /** Raw columns whose catalog extremes are VERBATIM values (so min = max
-    * certifies constancy) — the shared gate, see [[StatsBridge]]. */
-  private def constancyExact(dt: DataType): Boolean =
-    graft.index.StatsBridge.verbatimExact(dt)
-
   private def timeOrdered(dt: DataType): Boolean = dt match {
     case DateType | TimestampType | TimestampNTZType => true
     case _ => false
   }
-
-  /** Catalog JDBC value (or eval-internal value from a determined key) →
-    * Catalyst internal for the Literal substitution — see [[StatsBridge]]. */
-  private def internal(v: Any, dt: DataType): Option[Any] =
-    graft.index.StatsBridge.internal(v, dt)
 }

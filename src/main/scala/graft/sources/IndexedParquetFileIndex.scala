@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.index.{FileScanPlan, RowLevelIndex, StatsIndex}
+import graft.index.{FileScanPlan, RowLevelIndex, StatsBridge, StatsIndex}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -141,7 +141,7 @@ final class IndexedParquetFileIndex(
       dataFilters: Seq[Expression],
       statsPlans: Seq[FileScanPlan]): (Seq[FileScanPlan], Seq[String]) = {
     if (rowLevelIndexes.isEmpty || dataFilters.isEmpty) return (statsPlans, Nil)
-    val conjuncts = dataFilters.flatMap(splitConjuncts)
+    val conjuncts = dataFilters.flatMap(StatsBridge.conjuncts)
     val points = conjuncts.flatMap(pointKeys)
     val ranges = rangeBounds(conjuncts)
     if (points.isEmpty && ranges.isEmpty) return (statsPlans, Nil)
@@ -174,11 +174,6 @@ final class IndexedParquetFileIndex(
           case None       => (plans, route :+ s"rowlevel-degraded($colName)")
         }
     }
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other     => Seq(other)
   }
 
   /** A conjunct the row-level index can answer exactly: equality or IN

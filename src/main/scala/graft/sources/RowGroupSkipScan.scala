@@ -121,12 +121,7 @@ object RowGroupSkipScan {
   def translateDataFilters(
       resolved: org.apache.spark.sql.catalyst.expressions.Expression)
       : Seq[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    conjuncts(resolved).flatMap(GraftSqlShim.translateFilter)
+    graft.index.StatsBridge.conjuncts(resolved).flatMap(GraftSqlShim.translateFilter)
   }
 
   /** Full path: consult the index with `predicate`, scan only surviving

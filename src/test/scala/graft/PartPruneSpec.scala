@@ -153,6 +153,59 @@ class PartPruneSpec extends SparkSpec {
     assert(rows.length === 5)
   }
 
+  // four 50-row row groups: the first is ALL-NULL ts, the other three
+  // day-constant (1970-01-02..04 = Fri, Sat, Sun)
+  private lazy val allNullFx: (DataFrame, graft.index.StatsIndex, DataFrame) = {
+    val base = tempDir("graft-partprune-allnull")
+    val dir = s"$base/data"
+    import spark.implicits._
+    graft.operators.Indexed.withMicrosTimestamps(spark) {
+      (0 until 200)
+        .map { i =>
+          val ts = if (i < 50) None
+          else Some(new java.sql.Timestamp((i / 50).toLong * 86400000L))
+          (i.toLong, ts)
+        }
+        .toDF("k", "ts")
+        .coalesce(1)
+        .write.option("parquet.block.row.count.limit", "50")
+        .mode("overwrite").parquet(dir)
+    }
+    val (index, schema) = IndexedParquet.buildIndex(
+      spark, dir, Seq("k", "ts"), s"$base/statsdb")
+    val (df, _) = IndexedParquet.read(spark, dir, index, schema)
+    (df, index, spark.read.parquet(dir))
+  }
+
+  test("an all-NULL group is decided at NULL: a comparison drops it, IS NULL keeps it") {
+    val (df, index, plain) = allNullFx
+    val plans = index.allFiles()
+    // the refinement alone, on the analyzed conjunct: the optimizer's
+    // inferred isnotnull(ts) would let the interval walk drop the
+    // all-null group first and hide what the engine decides
+    def refined(c: org.apache.spark.sql.Column) = {
+      val cond = df.filter(c).queryExecution.analyzed.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.get
+      graft.prune.PartPrune.refine(index, Seq(cond), plans)
+    }
+    val sat = dayofweek(col("ts")) === lit(7)
+    val (satPlans, satRoute) = refined(sat)
+    assert(satRoute === Seq("part-const(dropped=3)"), satRoute)
+    assert(satPlans.flatMap(_.scanRowGroups) === Seq(2), satPlans)
+    val isNull = dayofweek(col("ts")).isNull
+    val (nullPlans, nullRoute) = refined(isNull)
+    assert(nullRoute === Seq("part-const(dropped=3)"), nullRoute)
+    assert(nullPlans.flatMap(_.scanRowGroups) === Seq(0), nullPlans)
+    // end to end, both answers equal plain Parquet
+    def keys(d: DataFrame, c: org.apache.spark.sql.Column) =
+      d.filter(c).select("k").collect().map(_.getLong(0)).sorted.toSeq
+    assert(keys(df, sat) === (100L until 150L))
+    assert(keys(df, sat) === keys(plain, sat))
+    assert(keys(df, isNull) === (0L until 50L))
+    assert(keys(df, isNull) === keys(plain, isNull))
+  }
+
   test("part and raw conjuncts compose: both prunes intersect in one pass") {
     val (df, fi, plain) = nfx
     // raw range keeps groups 2-3 via the interval walk; the part

@@ -376,6 +376,51 @@ class PiecewiseZoneSpec extends SparkSpec {
     index.close()
   }
 
+  test("a local-date range folds a global count/sum over groups wholly inside or outside it") {
+    import spark.implicits._
+    // hourly instants from NY-local midnight 2024-01-01, sorted into
+    // 48-row groups = two local days each: no group is constant in the
+    // local day, but against a range starting on a group boundary every
+    // group lies wholly inside or wholly outside it
+    val base = tempDir("graft-pwz-range-fold")
+    val dir = s"$base/data"
+    val start = micros("2024-01-01T05:00:00Z")
+    graft.operators.Indexed.withMicrosTimestamps(spark) {
+      (0 until 6 * 24).map(h => (start + h * 3600000000L, h.toLong))
+        .toDF("us", "v")
+        .select(timestamp_micros(col("us")).as("ts"), col("v"))
+        .orderBy("ts").coalesce(1)
+        .write.option("parquet.block.row.count.limit", "48")
+        .mode("overwrite").parquet(dir)
+    }
+    val (idx, schema) = IndexedParquet.buildIndex(
+      spark, dir, Seq("ts", "v"), s"$base/db")
+    idx.rebuildShadows(spark, dir, idx.allFiles(), schema, freqCols = Nil, sumCols = Seq("v"))
+    val (df, _) = IndexedParquet.read(spark, dir, idx, schema)
+    val nyDay = to_date(from_utc_timestamp(col("ts"), NY))
+    def q(from: String) = df.filter(nyDay >= lit(java.sql.Date.valueOf(from)))
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
+    def answer(d: DataFrame) = d.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def killSwitched(from: String) = {
+      spark.conf.set("spark.graft.filteredAggPushdown", "false")
+      try {
+        val d = q(from)
+        assert(!folded(d))
+        answer(d)
+      } finally spark.conf.unset("spark.graft.filteredAggPushdown")
+    }
+    // Jan 3 starts the second group: the last two groups lie inside, the
+    // first outside
+    val inside = q("2024-01-03")
+    assert(folded(inside), inside.queryExecution.optimizedPlan.toString)
+    assert(answer(inside) === killSwitched("2024-01-03"))
+    assert(answer(inside) === Seq((96L, (48L until 144L).sum)))
+    // Jan 4 splits the second group: undecided, so the fold declines
+    val straddling = q("2024-01-04")
+    assert(!folded(straddling), straddling.queryExecution.optimizedPlan.toString)
+    assert(answer(straddling) === killSwitched("2024-01-04"))
+  }
+
   test("a transition-straddling row group fails the fold closed, stays correct") {
     import spark.implicits._
     val base = tempDir("graft-pwz")
