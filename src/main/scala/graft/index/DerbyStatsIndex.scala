@@ -467,8 +467,8 @@ final class DerbyStatsIndex(
   }
 
   /** Catalog-side COMPOSITE filtered top-k: the single-disjunct face of
-    * the disjunctive walk below (see
-    * [[graft.prune.TopKPruning.pruneComposite]]). */
+    * the disjunctive walk below (the planner's one N-key walk,
+    * [[graft.prune.TopKPruning.pruneDisjunctiveLex]], at one key). */
   override def topKSurvivorsComposite(
       colName: String,
       k: Long,
@@ -481,13 +481,14 @@ final class DerbyStatsIndex(
     topKSurvivorsDisjunctive(colName, k, descending, nullsFirst,
       Seq(graft.prune.TopKPruning.Disjunct(lo, hi, others)))
 
-  /** Catalog-side DISJUNCTIVE filtered top-k (the in-store face of
-    * [[graft.prune.TopKPruning.pruneDisjunctive]]): the threshold walk's
+  /** Catalog-side DISJUNCTIVE filtered top-k (the in-store face of the
+    * planner's one N-key walk at one key,
+    * [[graft.prune.TopKPruning.pruneDisjunctiveLex]]): the threshold walk's
     * WHERE requires, for SOME disjunct, the sort interval to hold on the
     * group's stored bounds AND every other filter column's stats to
     * certify the group ALL-PASS (zero nulls, stored bounds inside that
     * column's interval — hex-rendered for strings); the survivor query
-    * mirrors pruneDisjunctive's keep logic exactly (null-order aware:
+    * mirrors the planner walk's keep logic exactly (null-order aware:
     * nulls may win only under nulls-first AND a disjunct placing no
     * bound on the sort column; certified all-null groups are dropped
     * otherwise). Returns the keep-set; the caller intersects with the
@@ -501,7 +502,7 @@ final class DerbyStatsIndex(
     * the tuple degenerates to the plain guarantee bound, branch 2 (the
     * deeper-key remainder) and branch 3 (the FreqShadow dominant slice)
     * vanish, and the survivor tie descent bottoms out at "ties keep",
-    * which is exactly pruneDisjunctive's `best >= t` keep. */
+    * which is exactly the planner walk's one-key `best >= t` keep. */
   override def topKSurvivorsDisjunctive(
       colName: String,
       k: Long,
@@ -650,9 +651,9 @@ final class DerbyStatsIndex(
     // DOMINANT-slice count from the FreqShadow (0 when unbuilt or when
     // the stored extreme is not verbatim-exact — string minima): rows at
     // the leading best value, minus the nulls-last remainder, clamped.
-    // Single-key walks never use it: the planner reference algorithms
-    // (prune / pruneDisjunctive) carry no frequency candidates, and
-    // catalog==planner parity pins the two sides equal.
+    // Single-key walks never use it: the planner's N-key walk carries
+    // no frequency candidates at one key, and catalog==planner parity
+    // pins the two sides equal.
     val headField = indexedCols.find(_.name == keys(0).col)
     val headIsString = headField.exists(_.dataType == StringType)
     val freqUsable = n >= 2 &&

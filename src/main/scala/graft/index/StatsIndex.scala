@@ -188,11 +188,14 @@ trait StatsIndex extends AutoCloseable {
     * restrict the THRESHOLD certificate to row groups lying wholly inside
     * the window — the filtered-top-k shape; survivors are then still the
     * threshold-beating groups (callers intersect with the filter's own
-    * stats pruning). Semantics must match [[graft.prune.TopKPruning]]'s
-    * planner-side algorithms exactly (they are the reference
-    * implementation and the fallback). None = the catalog cannot serve or
-    * certify (unsupported type, guarantees never cover k, query failure)
-    * — the caller falls back to planner-side pruning. */
+    * stats pruning). Semantics must match the one-key case of the
+    * planner's one N-key walk ([[graft.prune.TopKPruning.pruneLexN]] /
+    * [[graft.prune.TopKPruning.pruneDisjunctiveLex]]) exactly — the
+    * reference implementation and the fallback, which itself asks only
+    * [[topKSurvivorsLexN]] / [[topKSurvivorsDisjunctiveLexN]]. None = the
+    * catalog cannot serve or certify (unsupported type, guarantees never
+    * cover k, query failure) — the caller falls back to planner-side
+    * pruning. */
   def topKSurvivors(
       colName: String,
       k: Long,
@@ -208,8 +211,9 @@ trait StatsIndex extends AutoCloseable {
     * column's bound interval), and survivors are the groups that may
     * still hold a top-k row (callers intersect with the filter's own
     * stats pruning, exactly like the windowed [[topKSurvivors]]).
-    * Semantics must match `pruneComposite`'s planner-side algorithm
-    * exactly. None = cannot serve/certify → planner-side fallback. */
+    * Semantics must match the planner's one N-key walk at one key and
+    * one disjunct exactly. None = cannot serve/certify → planner-side
+    * fallback. */
   def topKSurvivorsComposite(
       colName: String,
       k: Long,
@@ -224,9 +228,9 @@ trait StatsIndex extends AutoCloseable {
     * face of [[graft.prune.TopKPruning.pruneDisjunctive]]: a row group's
     * count certifies the threshold iff SOME disjunct's sort interval and
     * other-column all-pass bounds are both satisfied by the group's
-    * stats. Semantics must match `pruneDisjunctive`'s planner-side
-    * algorithm exactly. None = cannot serve/certify → planner-side
-    * fallback. */
+    * stats. Semantics must match the planner's one N-key walk at one
+    * key exactly ([[graft.prune.TopKPruning.pruneDisjunctiveLex]]). None
+    * = cannot serve/certify → planner-side fallback. */
   def topKSurvivorsDisjunctive(
       colName: String,
       k: Long,

@@ -1,11 +1,11 @@
 package graft.plans
 
 import graft.index.{RowGroupStat, StatsBridge, StatsIndex}
-import graft.prune.PartPrune
+import graft.prune.{PartPrune, TopKPruning}
 import graft.sources.IndexedParquetFileIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, IsNotNull, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -131,65 +131,30 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     }
 
   /** Every conjunct is a comparison of an indexed, ordering-certified
-    * column against a literal (or a bare IsNotNull) that the stats PROVE
-    * for every row: zero nulls in the column (a comparison passes no
-    * nulls) and every row group's stored bounds inside the interval.
+    * column against a literal ([[StatsBridge.Comparison]]) or a bare
+    * IsNotNull that the stats PROVE for every row: every row group
+    * passes [[TopKPruning.allPass]] — zero nulls in the column (a
+    * comparison passes no nulls) and stored bounds inside the interval.
     * Truncated string minima stay sound (stored ≥ lo ⇒ real ≥ stored ≥
     * lo); stored maxima are verbatim by construction. Anything else —
     * an unindexed column, an uncertified type, an OR, a computed
     * operand — fails the certificate and the declarative plan stands. */
   private def allPassFilter(
       cond: Expression, idx: IndexedParquetFileIndex): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def conv(value: Any): Option[Any] =
-      if (value == null) None
-      else Some(value match {
-        case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-        case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-        case other => other
-      })
     // one O(index) fetch per referenced column, not per conjunct side
     val memo = scala.collection.mutable.HashMap
       .empty[String, Option[Seq[RowGroupStat]]]
-    def stats(ar: AttributeReference) =
-      if (!indexed(idx.statsIndex, ar)) None
-      else memo.getOrElseUpdate(ar.name, idx.statsIndex.rowGroupStats(ar.name))
-    def zeroNulls(ar: AttributeReference): Boolean =
-      stats(ar).exists(_.forall(_.nullCount.contains(0L)))
-    def bound(ar: AttributeReference, l: Literal, isLo: Boolean,
-        inclusive: Boolean): Boolean = {
-      val ord = graft.prune.TopKPruning.ordering(ar.dataType)
-        .getOrElse(return false)
-      val b = conv(l.value).getOrElse(return false)
-      zeroNulls(ar) && stats(ar).exists(_.forall { s =>
-        if (isLo) s.min.exists(v => if (inclusive) ord.gteq(v, b) else ord.gt(v, b))
-        else s.max.exists(v => if (inclusive) ord.lteq(v, b) else ord.lt(v, b))
-      })
-    }
+    def stats(a: Attribute) =
+      if (!StatsBridge.indexed(idx.statsIndex, a)) None
+      else memo.getOrElseUpdate(a.name, idx.statsIndex.rowGroupStats(a.name))
+    import StatsBridge.Comparison.stored
     StatsBridge.conjuncts(cond).forall {
-      case IsNotNull(ar: AttributeReference) => zeroNulls(ar)
-      case GreaterThan(ar: AttributeReference, l: Literal) =>
-        bound(ar, l, isLo = true, inclusive = false)
-      case GreaterThanOrEqual(ar: AttributeReference, l: Literal) =>
-        bound(ar, l, isLo = true, inclusive = true)
-      case LessThan(ar: AttributeReference, l: Literal) =>
-        bound(ar, l, isLo = false, inclusive = false)
-      case LessThanOrEqual(ar: AttributeReference, l: Literal) =>
-        bound(ar, l, isLo = false, inclusive = true)
-      case GreaterThan(l: Literal, ar: AttributeReference) =>
-        bound(ar, l, isLo = false, inclusive = false)
-      case GreaterThanOrEqual(l: Literal, ar: AttributeReference) =>
-        bound(ar, l, isLo = false, inclusive = true)
-      case LessThan(l: Literal, ar: AttributeReference) =>
-        bound(ar, l, isLo = true, inclusive = false)
-      case LessThanOrEqual(l: Literal, ar: AttributeReference) =>
-        bound(ar, l, isLo = true, inclusive = true)
-      case EqualTo(ar: AttributeReference, l: Literal) =>
-        bound(ar, l, isLo = true, inclusive = true) &&
-          bound(ar, l, isLo = false, inclusive = true)
-      case EqualTo(l: Literal, ar: AttributeReference) =>
-        bound(ar, l, isLo = true, inclusive = true) &&
-          bound(ar, l, isLo = false, inclusive = true)
+      case IsNotNull(a: AttributeReference) =>
+        stats(a).exists(_.forall(_.nullCount.contains(0L)))
+      // each conjunct's bounds on their own
+      case StatsBridge.Comparison(a, lo, hi) =>
+        TopKPruning.ordering(a.dataType).exists(ord =>
+          stats(a).exists(_.forall(TopKPruning.allPass(ord, _, stored(lo), stored(hi)))))
       case _ => false
     }
   }
@@ -220,9 +185,10 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     * the joint distribution unknowable from per-column stats); N
     * grouping columns (r13) certify the same way — the partial-null
     * rule, not the column count, is the certification boundary. Any
-    * other aggregate, DISTINCT, or an agg filter disqualifies. Consistency with a scan holds because the
-    * relation's listing IS the catalog (see COUNT(*) note above). Kill
-    * switch: `spark.graft.groupByAggPushdown=false`. */
+    * other aggregate, DISTINCT, or an agg filter disqualifies.
+    * Consistency with a scan holds because the relation's listing IS the
+    * catalog (see COUNT(*) note above). Kill switch:
+    * `spark.graft.groupByAggPushdown=false`. */
   private def groupByRewrite(
       agg: Aggregate, idx: IndexedParquetFileIndex,
       cond: Option[Expression]): Option[LogicalPlan] = {
@@ -278,7 +244,8 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       if (exprs.isEmpty) return None
       val keys: Seq[GKey] = exprs.map {
         case a: AttributeReference
-            if indexed(idx.statsIndex, a) && ordered(a.dataType) =>
+            if StatsBridge.indexed(idx.statsIndex, a) &&
+              TopKPruning.ordering(a.dataType).isDefined =>
           GKey(a, graft.index.RawConstKey(a.dataType), a)
         case e => constKeyOf(idx.statsIndex, resolvedExpr(e)) match {
           case Some((ar, ck)) => GKey(ar, ck, e)
@@ -441,11 +408,11 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       if (otherAggCols.isEmpty) Map.empty
       else {
         otherAggCols.map { a =>
-          if (!indexed(idx.statsIndex, a) || !StatsBridge.verbatimExact(a.dataType))
+          if (!StatsBridge.indexed(idx.statsIndex, a) || !StatsBridge.verbatimExact(a.dataType))
             return None
           // the verbatim-exact gate admits only types with a certified total
           // order (integrals/date/ts as longs, decimal by value)
-          val ord = graft.prune.TopKPruning.ordering(a.dataType)
+          val ord = TopKPruning.ordering(a.dataType)
             .getOrElse(return None)
           val os = idx.statsIndex.rowGroupStats(a.name).getOrElse(return None)
           val acc = scala.collection.mutable.HashMap
@@ -509,7 +476,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       if (sumAggCols.isEmpty) Map.empty
       else {
         sumAggCols.map { a =>
-          if (!indexed(idx.statsIndex, a) ||
+          if (!StatsBridge.indexed(idx.statsIndex, a) ||
               !graft.index.SumShadow.supported(a.dataType)) return None
           val os = idx.statsIndex.rowGroupStats(a.name).getOrElse(return None)
           val acc = scala.collection.mutable.HashMap.empty[Key, (Long, Long)]
@@ -535,7 +502,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       if (cntAggCols.isEmpty) Map.empty
       else {
         cntAggCols.map { a =>
-          if (!indexed(idx.statsIndex, a)) return None
+          if (!StatsBridge.indexed(idx.statsIndex, a)) return None
           val os = idx.statsIndex.rowGroupStats(a.name).getOrElse(return None)
           val acc = scala.collection.mutable.HashMap.empty[Key, Long]
           os.foreach { s =>
@@ -565,7 +532,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     // None (abort the fold) when a DEFINED key value doesn't bridge —
     // an .orNull here would render an unbridgeable value as SQL NULL
     def keyCell(i: Int, key: Key): Option[Any] = key(i) match {
-      case Some(raw) => internal(raw, gs(i).keyType)
+      case Some(raw) => StatsBridge.internal(raw, gs(i).keyType)
       case None => Some(null)
     }
     def compileAgg(ae: AggregateExpression): Option[CellFn] =
@@ -597,11 +564,11 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
             case Min(a: AttributeReference) if otherExtremes.contains(a.name) =>
               val m = otherExtremes(a.name)
               Some((key, _) => Some(m.getOrElse(key, (None, None))._1
-                .flatMap(internal(_, a.dataType)).orNull))
+                .flatMap(StatsBridge.internal(_, a.dataType)).orNull))
             case Max(a: AttributeReference) if otherExtremes.contains(a.name) =>
               val m = otherExtremes(a.name)
               Some((key, _) => Some(m.getOrElse(key, (None, None))._2
-                .flatMap(internal(_, a.dataType)).orNull))
+                .flatMap(StatsBridge.internal(_, a.dataType)).orNull))
             // MIN/MAX of an image over an OTHER column: the image of the
             // group's raw extreme (r13)
             case Min(e) if imageAgg(e).exists(t => otherExtremes.contains(t._1.name)) =>
@@ -609,13 +576,13 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
               val m = otherExtremes(a.name)
               Some((key, _) => Some(m.getOrElse(key, (None, None))._1
                 .flatMap(v => scala.util.Try(img(v)).toOption)
-                .flatMap(internal(_, img.resultType)).orNull))
+                .flatMap(StatsBridge.internal(_, img.resultType)).orNull))
             case Max(e) if imageAgg(e).exists(t => otherExtremes.contains(t._1.name)) =>
               val (a, img) = imageAgg(e).get
               val m = otherExtremes(a.name)
               Some((key, _) => Some(m.getOrElse(key, (None, None))._2
                 .flatMap(v => scala.util.Try(img(v)).toOption)
-                .flatMap(internal(_, img.resultType)).orNull))
+                .flatMap(StatsBridge.internal(_, img.resultType)).orNull))
             case su: Sum => su.child match {
               case a: AttributeReference if otherSums.contains(a.name) =>
                 val m = otherSums(a.name)
@@ -868,13 +835,15 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
   private def aggValue(index: StatsIndex, ae: AggregateExpression): Option[Any] =
     if (ae.isDistinct || ae.filter.nonEmpty) None
     else ae.aggregateFunction match {
-        case Min(a: AttributeReference) if indexed(index, a) && ordered(a.dataType) =>
-          index.minIndexedValue(a.name).flatMap(internal(_, a.dataType))
-        case Max(a: AttributeReference) if indexed(index, a) && ordered(a.dataType) =>
-          index.maxIndexedValue(a.name).flatMap(internal(_, a.dataType))
+        case Min(a: AttributeReference)
+            if StatsBridge.indexed(index, a) && TopKPruning.ordering(a.dataType).isDefined =>
+          index.minIndexedValue(a.name).flatMap(StatsBridge.internal(_, a.dataType))
+        case Max(a: AttributeReference)
+            if StatsBridge.indexed(index, a) && TopKPruning.ordering(a.dataType).isDefined =>
+          index.maxIndexedValue(a.name).flatMap(StatsBridge.internal(_, a.dataType))
         case Count(Seq(l: Literal)) if l.value != null =>
           index.totalRowCount()
-        case Count(Seq(a: AttributeReference)) if indexed(index, a) =>
+        case Count(Seq(a: AttributeReference)) if StatsBridge.indexed(index, a) =>
           index.nonNullCount(a.name)
         // MIN/MAX of a MONOTONE IMAGE of an indexed column (r13): the
         // image of the certified raw extreme IS the image's extreme
@@ -884,11 +853,11 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
         case Min(e) if imageOf(index, e).isDefined =>
           val (a, img) = imageOf(index, e).get
           index.minIndexedValue(a.name).flatMap(v =>
-            scala.util.Try(img(v)).toOption.flatMap(internal(_, img.resultType)))
+            scala.util.Try(img(v)).toOption.flatMap(StatsBridge.internal(_, img.resultType)))
         case Max(e) if imageOf(index, e).isDefined =>
           val (a, img) = imageOf(index, e).get
           index.maxIndexedValue(a.name).flatMap(v =>
-            scala.util.Try(img(v)).toOption.flatMap(internal(_, img.resultType)))
+            scala.util.Try(img(v)).toOption.flatMap(StatsBridge.internal(_, img.resultType)))
         case Count(Seq(e)) if imageOf(index, e).isDefined =>
           index.nonNullCount(imageOf(index, e).get._1.name)
         // MIN/MAX of a DETERMINED calendar part (r13): when every row
@@ -917,7 +886,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
         // non-null rows ⇒ SQL NULL
         case su: Sum => su.child match {
           case a: AttributeReference
-              if indexed(index, a) && graft.index.SumShadow.supported(a.dataType) =>
+              if StatsBridge.indexed(index, a) && graft.index.SumShadow.supported(a.dataType) =>
             index.totalSum(a.name).flatMap { case (sv, nn) =>
               if (nn > 0) ledgerSum(su.dataType, a.dataType, sv) else Some(null)
             }
@@ -927,7 +896,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
         // tally, rendered through Average's own evaluateExpression
         case av: Average => av.child match {
           case a: AttributeReference
-              if indexed(index, a) && graft.index.SumShadow.supported(a.dataType) =>
+              if StatsBridge.indexed(index, a) && graft.index.SumShadow.supported(a.dataType) =>
             index.totalSum(a.name).flatMap { case (sv, nn) =>
               avgFromLedger(av, a.dataType, sv, nn)
             }
@@ -993,7 +962,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       val legOpt: Option[(AttributeReference, graft.index.RgConstKey)] =
         e match {
           case a: AttributeReference
-              if indexed(index, a) && StatsBridge.verbatimExact(a.dataType) =>
+              if StatsBridge.indexed(index, a) && StatsBridge.verbatimExact(a.dataType) =>
             Some((a, graft.index.RawConstKey(a.dataType)))
           case other => constKeyOf(index, other)
         }
@@ -1027,7 +996,8 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
     * partial nulls, eval failure). */
   private def rowGroupKeepSet(index: StatsIndex, live: Seq[Expression])
       : Option[(scala.collection.Set[(String, Int)], Long, Int)] = {
-    val gate = (a: AttributeReference) => indexed(index, a) && ordered(a.dataType)
+    val gate = (a: AttributeReference) =>
+      StatsBridge.indexed(index, a) && TopKPruning.ordering(a.dataType).isDefined
     val compiled = live.map(cj => PartPrune.compile(cj, gate, gate).getOrElse(return None))
     val cols = compiled.flatMap(_.members.map(_.attr.name)).distinct
     if (cols.isEmpty) return None
@@ -1070,13 +1040,13 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       rowGroupKeepSet(index, live).getOrElse(return None)
     // tallies over the kept set — each needs full, aligned coverage
     def keptStats(a: AttributeReference): Option[Seq[RowGroupStat]] =
-      if (!indexed(index, a)) None
+      if (!StatsBridge.indexed(index, a)) None
       else index.rowGroupStats(a.name)
         .map(_.filter(s => keptSet.contains((s.fileName, s.rowGroup))))
         .filter(_.size == keptSet.size)
     def extreme(a: AttributeReference, wantMin: Boolean): Option[Any] = {
       if (!StatsBridge.verbatimExact(a.dataType)) return None
-      val ord = graft.prune.TopKPruning.ordering(a.dataType)
+      val ord = TopKPruning.ordering(a.dataType)
         .getOrElse(return None)
       val ss = keptStats(a).getOrElse(return None)
       var cur: Option[Any] = None
@@ -1102,10 +1072,10 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
           case Some(i) => scala.util.Try(i(v)).toOption.getOrElse(return None)
           case None => v
         }
-        internal(mapped, dt)
+        StatsBridge.internal(mapped, dt)
       }
     def keptSum(a: AttributeReference): Option[(Long, Long)] = {
-      if (!indexed(index, a) || !graft.index.SumShadow.supported(a.dataType))
+      if (!StatsBridge.indexed(index, a) || !graft.index.SumShadow.supported(a.dataType))
         return None
       val ss = keptStats(a).getOrElse(return None)
       var sv = 0L; var nn = 0L
@@ -1130,7 +1100,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
       if (ae.isDistinct || ae.filter.nonEmpty) None
       else ae.aggregateFunction match {
         case Count(Seq(l: Literal)) if l.value != null => Some(keptRows)
-        case Count(Seq(a: AttributeReference)) if indexed(index, a) =>
+        case Count(Seq(a: AttributeReference)) if StatsBridge.indexed(index, a) =>
           countCol(a)
         case Min(a: AttributeReference) =>
           extreme(a, wantMin = true).flatMap(render(_, None, a.dataType))
@@ -1193,7 +1163,7 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
   private def imageOf(index: StatsIndex, e: Expression)
       : Option[(AttributeReference, graft.index.KeyImage)] =
     graft.index.KeyImage.fromDataExpr(e,
-      ar => indexed(index, ar) && ordered(ar.dataType))
+      ar => StatsBridge.indexed(index, ar) && TopKPruning.ordering(ar.dataType).isDefined)
 
   /** A row-group CONSTANCY key over an indexed column: a monotone image
     * or a determined calendar part — the shared recognizer for every
@@ -1203,30 +1173,5 @@ final case class StatsAggPushdown(session: SparkSession) extends Rule[LogicalPla
   private def constKeyOf(index: StatsIndex, e: Expression)
       : Option[(AttributeReference, graft.index.RgConstKey)] =
     graft.index.KeyImage.constKeyOf(e,
-      ar => indexed(index, ar) && ordered(ar.dataType))
-
-  private def indexed(index: StatsIndex, a: AttributeReference): Boolean =
-    index.indexedSchema.fields.exists(f => f.name == a.name && f.dataType == a.dataType)
-
-  /** Types whose footer min/max comparator provably matches Spark's total
-    * order. Float/double are excluded: historical parquet writers have
-    * NaN / signed-zero comparator hazards (stats may claim 0.0 where the
-    * data holds -0.0, or omit NaN), so an FP extreme from footers is not
-    * certified exact even when present. COUNT is type-independent. */
-  private def ordered(dt: DataType): Boolean = dt match {
-    case StringType | ByteType | ShortType | IntegerType | LongType |
-        DateType | TimestampType | TimestampNTZType => true
-    // r13: DECIMAL footer stats use signed (value) comparators — no FP
-    // hazard — and the catalog stores them losslessly at DECIMAL(31,s)
-    case _: DecimalType => true
-    case _ => false
-  }
-
-  /** Catalog JDBC value → Catalyst internal value. The catalog already
-    * stores timestamps as Long micros and dates as Int days (Catalyst
-    * internals); strings arrive as java.lang.String and numerics as their
-    * boxed JDBC classes (SMALLINT widens byte/short to Integer). Types
-    * without a certified bridge return None ⇒ no rewrite. */
-  private def internal(v: Any, dt: DataType): Option[Any] =
-    graft.index.StatsBridge.internal(v, dt)
+      ar => StatsBridge.indexed(index, ar) && TopKPruning.ordering(ar.dataType).isDefined)
 }

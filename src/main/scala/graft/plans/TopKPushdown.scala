@@ -1,12 +1,12 @@
 package graft.plans
 
+import graft.index.StatsBridge
 import graft.prune.TopKPruning
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IntegerLiteral, IsNotNull, LessThan, LessThanOrEqual, Literal, NullsFirst, Or, SortOrder, TruncTimestamp}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Descending, Expression, In, InSet, IntegerLiteral, IsNotNull, Literal, NullsFirst, Or, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.types.{DataType, DateType, DecimalType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
 /** Automatic top-k pruning — the optimizer face of
   * [[graft.prune.TopKPruning]]: a user writes plain
@@ -40,9 +40,12 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, StringType, 
   *
   * Every shape, single key or lexicographic, filtered or not, goes
   * through the lex pruners ([[TopKPruning.pruneLexN]],
-  * [[TopKPruning.pruneDisjunctiveLex]]), whose one-key case is the
-  * single-key walk. The rewrite is [[IndexedRelation.substitute]], shared
-  * with [[PartPruneScan]] and [[JoinPruneRule]]: the relation is replaced
+  * [[TopKPruning.pruneDisjunctiveLex]]), faces of the ONE N-key walk
+  * whose one-key case is the single-key walk; the catalog answers
+  * through its two lex fast paths only. Filter conjuncts are read by the
+  * shared comparison recognizer ([[StatsBridge.Comparison]]). The
+  * rewrite is [[IndexedRelation.substitute]], shared with
+  * [[PartPruneScan]] and [[JoinPruneRule]]: the relation is replaced
   * IN PLACE (any surrounding Filter/Project structure survives, so the
   * filter is still re-applied above the scan — the Inexact contract) by
   * the pruned [[RowGroupScan]] under exprId-preserving aliases, and the
@@ -227,9 +230,7 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
   private def indexedAs(
       ar: AttributeReference, child: LogicalPlan,
       idx: graft.index.StatsIndex): Boolean =
-    child.outputSet.contains(ar) &&
-      idx.indexedSchema.fields.exists(f =>
-        f.name == ar.name && f.dataType == ar.dataType)
+    child.outputSet.contains(ar) && StatsBridge.indexed(idx, ar)
 
   /** A datepart SortOrder — `year(leg)` / `month(leg)` / `day(leg)` over
     * an indexed date leg — as (attr, leg cast image, field 0=year
@@ -272,7 +273,7 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
           Some((ar, Some(graft.index.CastDateImage)))
         case ar: AttributeReference
             if ar.dataType == TimestampType && indexedAs(ar, child, idx) =>
-          fixedOffsetSeconds(c.timeZoneId)
+          graft.index.KeyImage.fixedOffsetSeconds(c.timeZoneId)
             .map(z => (ar, Some(graft.index.KeyImage.castDate(z))))
         case _ => None
       }
@@ -303,11 +304,6 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** See [[graft.index.KeyImage.fixedOffsetSeconds]] — kept as a local
-    * alias for the datepart-run recognizer's date legs. */
-  private def fixedOffsetSeconds(tzOpt: Option[String]): Option[Int] =
-    graft.index.KeyImage.fixedOffsetSeconds(tzOpt)
-
   /** `cond` as a DISJUNCTION of per-column bound sets
     * ([[TopKPruning.Disjunct]]): the top-level conjuncts may contain AT
     * MOST ONE disjunctive member — an `Or` tree, an `In`, or an `InSet`
@@ -321,25 +317,14 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
     * within a disjunct. `IsNotNull` on the sort column is implied and
     * ignored; on another column it is recorded as a bound-less entry
     * (all-pass then requires a certified zero null count). Literal
-    * values are bridged from Catalyst internal encoding to the
-    * catalog's storage encoding (identical for integrals / date days /
-    * timestamp micros; UTF8String → String; Decimal → BigDecimal). */
+    * values are bridged to the catalog's storage encoding by
+    * [[StatsBridge.storage]]. */
   private def parseDisjuncts(cond: Expression, a: AttributeReference)
       : Option[Seq[TopKPruning.Disjunct]] = {
     def branches(e: Expression): Seq[Expression] = e match {
       case Or(l, r) => branches(l) ++ branches(r)
       case x => Seq(x)
     }
-    // Catalyst internal value → catalog storage encoding
-    def conv(value: Any): Option[Any] =
-      if (value == null) None
-      else Some(value match {
-        case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-        case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-        case other => other
-      })
-    def v(l: Literal): Option[Any] = conv(l.value)
-
     type BMap = scala.collection.mutable.LinkedHashMap[
       String, (Option[(Any, Boolean)], Option[(Any, Boolean)])]
     // fold plain comparison conjuncts into per-column bounds on top of a
@@ -347,40 +332,16 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
     // independently); None if a side is re-bound or a conjunct is foreign
     def absorb(base: BMap, es: Seq[Expression]): Option[BMap] = {
       val m = base.clone()
-      def setLo(ar: AttributeReference, b: (Any, Boolean)): Boolean = {
-        val (lo, hi) = m.getOrElse(ar.name, (None, None))
-        if (lo.isDefined) false else { m(ar.name) = (Some(b), hi); true }
-      }
-      def setHi(ar: AttributeReference, b: (Any, Boolean)): Boolean = {
-        val (lo, hi) = m.getOrElse(ar.name, (None, None))
-        if (hi.isDefined) false else { m(ar.name) = (lo, Some(b)); true }
-      }
       es.foreach {
         case IsNotNull(ar: AttributeReference) =>
           if (ar.exprId != a.exprId && !m.contains(ar.name))
             m(ar.name) = (None, None) // record: rows must be non-null
-        case GreaterThan(ar: AttributeReference, l: Literal) =>
-          if (!v(l).exists(b => setLo(ar, (b, false)))) return None
-        case GreaterThanOrEqual(ar: AttributeReference, l: Literal) =>
-          if (!v(l).exists(b => setLo(ar, (b, true)))) return None
-        case LessThan(ar: AttributeReference, l: Literal) =>
-          if (!v(l).exists(b => setHi(ar, (b, false)))) return None
-        case LessThanOrEqual(ar: AttributeReference, l: Literal) =>
-          if (!v(l).exists(b => setHi(ar, (b, true)))) return None
-        case GreaterThan(l: Literal, ar: AttributeReference) =>
-          if (!v(l).exists(b => setHi(ar, (b, false)))) return None
-        case GreaterThanOrEqual(l: Literal, ar: AttributeReference) =>
-          if (!v(l).exists(b => setHi(ar, (b, true)))) return None
-        case LessThan(l: Literal, ar: AttributeReference) =>
-          if (!v(l).exists(b => setLo(ar, (b, false)))) return None
-        case LessThanOrEqual(l: Literal, ar: AttributeReference) =>
-          if (!v(l).exists(b => setLo(ar, (b, true)))) return None
-        case EqualTo(ar: AttributeReference, l: Literal) =>
-          if (!v(l).exists(b => setLo(ar, (b, true)) && setHi(ar, (b, true))))
+        case StatsBridge.Comparison(ar, lo, hi) =>
+          val (curLo, curHi) = m.getOrElse(ar.name, (None, None))
+          if ((lo.isDefined && curLo.isDefined) || (hi.isDefined && curHi.isDefined))
             return None
-        case EqualTo(l: Literal, ar: AttributeReference) =>
-          if (!v(l).exists(b => setLo(ar, (b, true)) && setHi(ar, (b, true))))
-            return None
+          m(ar.name) = (StatsBridge.Comparison.stored(lo).orElse(curLo),
+            StatsBridge.Comparison.stored(hi).orElse(curHi))
         case _ => return None // a conjunct the certificate cannot absorb
       }
       Some(m)
@@ -392,7 +353,7 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
       else { m(ar.name) = (Some((value, true)), Some((value, true))); Some(m) }
     }
 
-    val conj = graft.index.StatsBridge.conjuncts(cond)
+    val conj = StatsBridge.conjuncts(cond)
     val (disjunctive, plain) = conj.partition {
       case _: Or                         => true
       case In(_: AttributeReference, _)  => true
@@ -406,19 +367,18 @@ final case class TopKPushdown(session: SparkSession) extends Rule[LogicalPlan] {
       case Some(In(ar: AttributeReference, list)) =>
         if (list.isEmpty) return None
         list.map {
-          case l: Literal =>
-            val value = v(l).getOrElse(return None)
-            withEq(shared, ar, value).getOrElse(return None)
+          case l: Literal if l.value != null =>
+            withEq(shared, ar, StatsBridge.storage(l.value)).getOrElse(return None)
           case _ => return None
         }
       case Some(InSet(ar: AttributeReference, set)) =>
         if (set.isEmpty) return None
         set.toSeq.map { raw =>
-          val value = conv(raw).getOrElse(return None)
-          withEq(shared, ar, value).getOrElse(return None)
+          if (raw == null) return None
+          withEq(shared, ar, StatsBridge.storage(raw)).getOrElse(return None)
         }
       case Some(or: Or) =>
-        branches(or).map(b => absorb(shared, graft.index.StatsBridge.conjuncts(b)).getOrElse(return None))
+        branches(or).map(b => absorb(shared, StatsBridge.conjuncts(b)).getOrElse(return None))
       case _ => return None
     }
     val result = maps.map { m =>

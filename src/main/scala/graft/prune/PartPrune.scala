@@ -211,8 +211,8 @@ object PartPrune {
     * renderable-image-only conjuncts stay with the stats-space rewrite. */
   private def scanCompile(index: StatsIndex, cj: Expression): Option[Compiled] =
     compile(cj,
-      a => indexed(index, a) && StatsBridge.verbatimExact(a.dataType),
-      a => indexed(index, a) && timeOrdered(a.dataType))
+      a => StatsBridge.indexed(index, a) && StatsBridge.verbatimExact(a.dataType),
+      a => StatsBridge.indexed(index, a) && timeOrdered(a.dataType))
       .filter(_.members.exists(_.key match {
         case _: DeterminedConstKey | _: PiecewiseZoneConstKey | _: PiecewiseCmpKey => true
         case ImageConstKey(img) => img.derbySql.isEmpty
@@ -280,10 +280,6 @@ object PartPrune {
       case _ => None
     }
   }
-
-  private def indexed(index: StatsIndex, a: AttributeReference): Boolean =
-    index.indexedSchema.fields.exists(f =>
-      f.name == a.name && f.dataType == a.dataType)
 
   private def timeOrdered(dt: DataType): Boolean = dt match {
     case DateType | TimestampType | TimestampNTZType => true

@@ -31,13 +31,22 @@ import org.apache.spark.sql.types._
   *
   * If the guarantees never cover k rows (tiny table, uncertified stats),
   * the full plan set comes back unchanged — over-scan, never wrong.
+  *
+  * ONE walk: every face below — [[prune]], [[pruneFiltered]],
+  * [[pruneComposite]], [[pruneDisjunctive]], [[pruneLex2]],
+  * [[pruneLexN]], [[pruneDisjunctiveLex]] — is one call into the N-key
+  * body, whose one-key case is the argument above. The catalog is reached
+  * only through its two lex fast paths
+  * ([[StatsIndex.topKSurvivorsLexN]],
+  * [[StatsIndex.topKSurvivorsDisjunctiveLexN]]), the in-store face of
+  * that same walk; the body is the reference and the fallback.
   */
 object TopKPruning {
 
   /** Orderings certified for catalog storage encodings (the seam
-    * documented on [[StatsIndex.minIndexedValue]]): integrals, date days
-    * and timestamp micros compare as long; float/double as double;
-    * decimals as BigDecimal; strings by Unicode CODE POINT — the order of
+    * documented on [[StatsIndex.minIndexedValue]]) — also the aggregate
+    * folds' certified-order gate: integrals, date days and timestamp
+    * micros compare as long; decimals as BigDecimal; strings by Unicode CODE POINT — the order of
     * their UTF-8 bytes, which is what Spark's UTF8String sort uses (Java's
     * String.compareTo is UTF-16 code-UNIT order and disagrees above
     * U+E000, so it would mis-prune). */
@@ -48,7 +57,7 @@ object TopKPruning {
     // float/double are NOT certified: parquet FP footer stats carry NaN /
     // signed-zero comparator hazards (a group's stored max can be 5.0
     // while it holds NaN, which Spark sorts greatest) — pruning on them
-    // could drop the true top row. Same exclusion as StatsAggPushdown.
+    // could drop the true top row.
     case FloatType | DoubleType => None
     case _: DecimalType =>
       Some(Ordering.comparatorToOrdering(
@@ -92,8 +101,8 @@ object TopKPruning {
     * case of [[pruneDisjunctive]]. A row group contributes its
     * non-null-in-`c` row count iff EVERY conjunct is certified ALL-PASS
     * for it — sort-column bounds as in [[pruneFiltered]]; other-column
-    * bounds need that column's stored min ≥ lo, stored max ≤ hi AND a
-    * certified null count of 0 (a null row fails any comparison, and a
+    * bounds need [[allPass]] (stored bounds inside the interval AND a
+    * certified null count of 0: a null row fails any comparison, and a
     * bare IsNotNull). On a layout where the filter columns aren't
     * clustered no group certifies and the declarative plan stands. */
   def pruneComposite(
@@ -120,20 +129,21 @@ object TopKPruning {
 
   /** DISJUNCTIVE filtered top-k pruning — `WHERE <OR of conjunct sets>
     * ORDER BY c LIMIT k`, e.g. the per-source-IN-latest-k shape
-    * `WHERE src IN ('web','app') ORDER BY ts DESC LIMIT k`. The
-    * [[pruneComposite]] certificate generalizes per DISJUNCT: a row
-    * group contributes its non-null-in-`c` row count to the threshold
-    * iff it is certified ALL-PASS for SOME disjunct — every row passing
-    * that disjunct passes the whole OR, so the counted rows all survive
-    * the filter and the accumulated threshold stays sound. Survivors are
-    * `statsPlans` (the filter's own stats pruning, which handles the OR
-    * conservatively on its own) minus groups whose best sort value is
-    * strictly worse than the threshold. Sort-column nulls may win only
-    * under `nullsFirst` AND some disjunct placing no bound on the sort
-    * column (a comparison rejects nulls, so a sort-bounded disjunct
-    * cannot pass them); certified all-null groups are pruned otherwise.
-    * Degrades to `statsPlans` unchanged whenever no per-disjunct
-    * certification covers k — over-scan, never wrong. */
+    * `WHERE src IN ('web','app') ORDER BY ts DESC LIMIT k`: the one-key
+    * case of [[pruneDisjunctiveLex]]. The [[pruneComposite]] certificate
+    * generalizes per DISJUNCT: a row group contributes its
+    * non-null-in-`c` row count to the threshold iff it is certified
+    * ALL-PASS for SOME disjunct — every row passing that disjunct passes
+    * the whole OR, so the counted rows all survive the filter and the
+    * accumulated threshold stays sound. Survivors are `statsPlans` (the
+    * filter's own stats pruning, which handles the OR conservatively on
+    * its own) minus groups whose best sort value is strictly worse than
+    * the threshold. Sort-column nulls may win only under `nullsFirst` AND
+    * some disjunct placing no bound on the sort column (a comparison
+    * rejects nulls, so a sort-bounded disjunct cannot pass them);
+    * certified all-null groups are pruned otherwise. Degrades to
+    * `statsPlans` unchanged whenever no per-disjunct certification covers
+    * k — over-scan, never wrong. */
   def pruneDisjunctive(
       index: StatsIndex,
       colName: String,
@@ -141,84 +151,62 @@ object TopKPruning {
       descending: Boolean,
       nullsFirst: Boolean,
       disjuncts: Seq[Disjunct],
-      statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] = {
-    require(k > 0, s"top-k needs k > 0, got $k")
-    if (disjuncts.isEmpty) return statsPlans
-    if (statsPlans.isEmpty) return statsPlans
-    val dt = index.indexedSchema.fields.find(_.name == colName)
-      .getOrElse(return statsPlans).dataType
-    val ord = ordering(dt).getOrElse(return statsPlans)
-    // catalog-side fast path: the per-disjunct-unioned threshold +
-    // survivor filter inside the store
-    index.topKSurvivorsDisjunctive(
-        colName, k, descending, nullsFirst, disjuncts) match {
-      case Some(survivors) => return FileScanPlan.intersect(statsPlans, survivors)
-      case None => () // fall through to the planner-side reference path
-    }
-    val sortStats = index.rowGroupStats(colName).getOrElse(return statsPlans)
-    val colsNeeded = disjuncts.flatMap(_.others.map(_.col)).distinct
-    val otherData = colsNeeded.map { c =>
-      val odt = index.indexedSchema.fields.find(_.name == c)
-        .getOrElse(return statsPlans).dataType
-      val oord = ordering(odt).getOrElse(return statsPlans)
-      val stats = index.rowGroupStats(c).getOrElse(return statsPlans)
-      c -> (oord, stats.map(s => (s.fileName, s.rowGroup) -> s).toMap)
-    }.toMap
-    def allPass(d: Disjunct, file: String, rg: Int): Boolean =
-      d.others.forall { ob =>
-        val (o, m) = otherData(ob.col)
-        m.get((file, rg)).exists { s =>
-          s.nullCount.contains(0L) &&
-            ob.lo.forall { case (b, inc) =>
-              s.min.exists(v => if (inc) o.gteq(v, b) else o.gt(v, b)) } &&
-            ob.hi.forall { case (b, inc) =>
-              s.max.exists(v => if (inc) o.lteq(v, b) else o.lt(v, b)) }
-        }
-      }
-    def insideSort(d: Disjunct, s: RowGroupStat): Boolean =
-      s.min.isDefined && s.max.isDefined && s.nullCount.isDefined &&
-        d.sortLo.forall { case (b, inc) =>
-          if (inc) ord.gteq(s.min.get, b) else ord.gt(s.min.get, b) } &&
-        d.sortHi.forall { case (b, inc) =>
-          if (inc) ord.lteq(s.max.get, b) else ord.lt(s.max.get, b) }
-    def guarantee(s: RowGroupStat): Option[Any] = if (descending) s.min else s.max
-    def best(s: RowGroupStat): Option[Any] = if (descending) s.max else s.min
-    val better: (Any, Any) => Boolean = if (descending) ord.gteq else ord.lteq
+      statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] =
+    pruneDisjunctiveLex(index, Seq(SortKeySpec(colName, descending, nullsFirst)),
+      k, disjuncts, statsPlans)
 
-    val certified = sortStats
-      .filter(s => disjuncts.exists(d =>
-        insideSort(d, s) && allPass(d, s.fileName, s.rowGroup)))
-      .sortBy(s => guarantee(s).get)(if (descending) ord.reverse else ord)
-    var covered = 0L
-    var threshold: Option[Any] = None
-    val it = certified.iterator
-    while (covered < k && it.hasNext) {
-      val s = it.next()
-      covered += s.rowCount - s.nullCount.get
-      if (covered >= k) threshold = guarantee(s)
-    }
-    // a sort-column null passes the OR only through a disjunct that puts
-    // no bound on the sort column
-    val nullMayPass = disjuncts.exists(d => d.sortLo.isEmpty && d.sortHi.isEmpty)
-    threshold match {
-      case None => statsPlans
-      case Some(t) =>
-        val pruned = sortStats.filter { s =>
-          val mayNullWin =
-            nullsFirst && nullMayPass && !s.nullCount.contains(0L)
-          val allNullGroup = s.nullCount.contains(s.rowCount)
-          if (mayNullWin) false
-          else if (allNullGroup) true
-          else best(s) match {
-            case Some(b) => !better(b, t)
-            case None    => false
-          }
-        }.map(s => (s.fileName, s.rowGroup)).toSet
-        statsPlans.flatMap { p =>
-          val rgs = p.scanRowGroups.filterNot(rg => pruned((p.fileName, rg)))
-          if (rgs.isEmpty) None else Some(p.copy(scanRowGroups = rgs))
-        }
-    }
+  /** The per-row-group ALL-PASS test for one column's `(lo, hi)` interval
+    * (`(value, inclusive)`, catalog storage encoding): a certified zero
+    * null count (a null fails any comparison) and stored bounds inside
+    * the interval ([[inBounds]]). Serves the filtered top-k certificate
+    * and the aggregate fold's vacuous-filter check
+    * ([[graft.plans.StatsAggPushdown]]). */
+  private[graft] def allPass(ord: Ordering[Any], s: RowGroupStat,
+      lo: Option[(Any, Boolean)], hi: Option[(Any, Boolean)]): Boolean =
+    s.nullCount.contains(0L) && inBounds(ord, s, lo, hi)
+
+  /** The stored bounds sit inside `(lo, hi)`: stored min ≥ lo (a
+    * truncated string minimum is a lower bound, so `stored ≥ lo ⇒ real ≥
+    * lo` stays sound) and stored max ≤ hi (maxima are verbatim; over-long
+    * ones are stored as unknown and fail). An absent side always holds. */
+  private def inBounds(ord: Ordering[Any], s: RowGroupStat,
+      lo: Option[(Any, Boolean)], hi: Option[(Any, Boolean)]): Boolean =
+    lo.forall { case (b, inc) =>
+      s.min.exists(v => if (inc) ord.gteq(v, b) else ord.gt(v, b)) } &&
+      hi.forall { case (b, inc) =>
+        s.max.exists(v => if (inc) ord.lteq(v, b) else ord.lt(v, b)) }
+
+  /** Per-query memo over a [[StatsIndex]]: the planner-fallback prefix
+    * recursion intersects every shorter prefix, re-reading the same
+    * per-column stats (and file listing) at every depth without this —
+    * O(N²) whole-index fetches for an N-key order. It forwards the reads
+    * the N-key body makes (the two lex fast paths included) and never
+    * rebuilds a ledger. */
+  private final class MemoStatsIndex(u: StatsIndex) extends StatsIndex {
+    private val statsMemo =
+      scala.collection.mutable.HashMap.empty[String, Option[Seq[RowGroupStat]]]
+    private lazy val allMemo = u.allFiles()
+    override def rowGroupStats(c: String): Option[Seq[RowGroupStat]] =
+      statsMemo.getOrElseUpdate(c, u.rowGroupStats(c))
+    override def allFiles(): Seq[FileScanPlan] = allMemo
+    def initialize(s: org.apache.spark.sql.types.StructType): Unit = u.initialize(s)
+    def addFile(st: graft.index.FileStats): Unit = u.addFile(st)
+    def retainOnly(f: Set[String]): Unit = u.retainOnly(f)
+    def removeFiles(f: Set[String]): Unit = u.removeFiles(f)
+    def getFiles(p: org.apache.spark.sql.catalyst.expressions.Expression) =
+      u.getFiles(p)
+    def indexedSchema: org.apache.spark.sql.types.StructType = u.indexedSchema
+    override def topKSurvivorsLexN(keys: Seq[SortKeySpec], k: Long) =
+      u.topKSurvivorsLexN(keys, k)
+    override def topKSurvivorsDisjunctiveLexN(
+        keys: Seq[SortKeySpec], ds: Seq[Disjunct], k: Long) =
+      u.topKSurvivorsDisjunctiveLexN(keys, ds, k)
+    def close(): Unit = u.close()
+  }
+
+  private def memo(index: StatsIndex): StatsIndex = index match {
+    case m: MemoStatsIndex => m
+    case other => new MemoStatsIndex(other)
   }
 
   /** N-KEY lexicographic top-k pruning — `ORDER BY k1 [DESC], k2, …
@@ -253,58 +241,10 @@ object TopKPruning {
     * recursive descent: strictly worse at a level prunes, a tie descends
     * (certified all-null keys lose their tie under nulls-last; possible
     * nulls win it under nulls-first). The result is INTERSECTED with the
-    * (N−1)-prefix pruning — recursively, down to [[prune]] — so each
-    * added key can only narrow the plan set. Degrades to the longest
+    * (N−1)-prefix pruning — recursively, down to the one-key walk — so
+    * each added key can only narrow the plan set. Degrades to the longest
     * usable prefix when a deeper key's ordering is uncertified or its
     * stats are unavailable. */
-  /** Per-query memo over a [[StatsIndex]]: the planner-fallback prefix
-    * recursion intersects every shorter prefix, re-reading the same
-    * per-column stats (and file listing) at every depth without this —
-    * O(N²) whole-index fetches for an N-key order. Every other read
-    * delegates, fast paths included; it never rebuilds a ledger. */
-  private final class MemoStatsIndex(u: StatsIndex) extends StatsIndex {
-    private val statsMemo =
-      scala.collection.mutable.HashMap.empty[String, Option[Seq[RowGroupStat]]]
-    private lazy val allMemo = u.allFiles()
-    override def rowGroupStats(c: String): Option[Seq[RowGroupStat]] =
-      statsMemo.getOrElseUpdate(c, u.rowGroupStats(c))
-    override def allFiles(): Seq[FileScanPlan] = allMemo
-    def initialize(s: org.apache.spark.sql.types.StructType): Unit = u.initialize(s)
-    def addFile(st: graft.index.FileStats): Unit = u.addFile(st)
-    def retainOnly(f: Set[String]): Unit = u.retainOnly(f)
-    def removeFiles(f: Set[String]): Unit = u.removeFiles(f)
-    def getFiles(p: org.apache.spark.sql.catalyst.expressions.Expression) =
-      u.getFiles(p)
-    def indexedSchema: org.apache.spark.sql.types.StructType = u.indexedSchema
-    override def topKSurvivors(c: String, k: Long, d: Boolean, nf: Boolean,
-        lo: Option[(Any, Boolean)], hi: Option[(Any, Boolean)]) =
-      u.topKSurvivors(c, k, d, nf, lo, hi)
-    override def topKSurvivorsComposite(c: String, k: Long, d: Boolean,
-        nf: Boolean, lo: Option[(Any, Boolean)], hi: Option[(Any, Boolean)],
-        others: Seq[OtherColBounds]) =
-      u.topKSurvivorsComposite(c, k, d, nf, lo, hi, others)
-    override def topKSurvivorsDisjunctive(c: String, k: Long, d: Boolean,
-        nf: Boolean, ds: Seq[Disjunct]) =
-      u.topKSurvivorsDisjunctive(c, k, d, nf, ds)
-    override def topKSurvivorsLexN(keys: Seq[SortKeySpec], k: Long) =
-      u.topKSurvivorsLexN(keys, k)
-    override def topKSurvivorsDisjunctiveLexN(
-        keys: Seq[SortKeySpec], ds: Seq[Disjunct], k: Long) =
-      u.topKSurvivorsDisjunctiveLexN(keys, ds, k)
-    override def bloomCols: Set[String] = u.bloomCols
-    override def minIndexedValue(c: String): Option[Any] = u.minIndexedValue(c)
-    override def maxIndexedValue(c: String): Option[Any] = u.maxIndexedValue(c)
-    override def totalRowCount(): Option[Long] = u.totalRowCount()
-    override def nonNullCount(c: String): Option[Long] = u.nonNullCount(c)
-    override def totalSum(c: String): Option[(Long, Long)] = u.totalSum(c)
-    def close(): Unit = u.close()
-  }
-
-  private def memo(index: StatsIndex): StatsIndex = index match {
-    case m: MemoStatsIndex => m
-    case other => new MemoStatsIndex(other)
-  }
-
   def pruneLexN(
       index: StatsIndex, keys: Seq[SortKeySpec], k: Long): Seq[FileScanPlan] =
     pruneLexImpl(memo(index), keys, k, None)
@@ -313,49 +253,47 @@ object TopKPruning {
     * disjunctive/composite filter certificate with the tuple threshold:
     * `WHERE <OR of conjunct sets> ORDER BY k1, k2, … LIMIT k`. Only row
     * groups certified ALL-PASS for SOME disjunct (sort interval on the
-    * stored bounds + every other filter column all-pass — exactly
-    * [[pruneDisjunctive]]'s certificate) contribute walk candidates,
-    * but each contributes its full TUPLE guarantee (with the nulls-last
-    * split and the FreqShadow dominant slice), so groups tied on the
-    * leading sort key inside the filter window are separated by the
-    * deeper keys. Survivors come from `statsPlans` via the recursive
-    * tie descent; sort-column nulls may win only under nulls-first AND
-    * a disjunct placing no sort bound. The result intersects the
-    * (N−1)-prefix filtered pruning recursively down to
-    * [[pruneDisjunctive]], so each added key only narrows. */
+    * stored bounds + every other filter column [[allPass]]) contribute
+    * walk candidates, but each contributes its full TUPLE guarantee (with
+    * the nulls-last split and the FreqShadow dominant slice), so groups
+    * tied on the leading sort key inside the filter window are separated
+    * by the deeper keys. Survivors come from `statsPlans` via the
+    * recursive tie descent; sort-column nulls may win only under
+    * nulls-first AND a disjunct placing no sort bound. The result
+    * intersects the (N−1)-prefix filtered pruning recursively down to
+    * the one-key walk ([[pruneDisjunctive]]), so each added key only
+    * narrows. No disjunct, or no stats plan, leaves `statsPlans`. */
   def pruneDisjunctiveLex(
       index: StatsIndex, keys: Seq[SortKeySpec], k: Long,
       disjuncts: Seq[Disjunct],
       statsPlans: Seq[FileScanPlan]): Seq[FileScanPlan] =
-    if (disjuncts.isEmpty) statsPlans
+    if (disjuncts.isEmpty || statsPlans.isEmpty) statsPlans
     else pruneLexImpl(memo(index), keys, k, Some((disjuncts, statsPlans)))
 
+  /** The ONE planner-side top-k walk: every face above — one key or N,
+    * plain or image, filtered or not — lands here, and the catalog is
+    * reached only through its two lex fast paths. At N = 1 the tuple is
+    * the plain guarantee bound, the deeper-key split and the dominant
+    * slice vanish, and the tie descent bottoms out at "ties keep". */
   private def pruneLexImpl(
       index: StatsIndex, keys: Seq[SortKeySpec], k: Long,
       filter: Option[(Seq[Disjunct], Seq[FileScanPlan])]): Seq[FileScanPlan] = {
     require(keys.nonEmpty, "lexicographic top-k needs at least one sort key")
     require(k > 0, s"top-k needs k > 0, got $k")
     val head = keys.head
+    val n = keys.size
+    // the universe: the filter's stats plans, else every live plan
     lazy val universe: Seq[FileScanPlan] =
       filter.map(_._2).getOrElse(index.allFiles())
-    // a plain single key delegates to the reference single-key algorithms;
-    // an IMAGE single key runs the generic body at n = 1 (those algorithms
-    // know nothing of computed keys)
-    if (keys.sizeIs == 1 && head.image.isEmpty)
-      return filter match {
-        case Some((ds, sp)) =>
-          pruneDisjunctive(index, head.col, k, head.desc, head.nullsFirst, ds, sp)
-        case None => prune(index, head.col, k, head.desc, head.nullsFirst)
-      }
-    val n = keys.size
+    // what every result narrows and every degrade returns: the (N−1)-prefix
+    // pruning (itself inside the universe), the universe at one key. Once
+    // a shorter prefix is catalog-served, no whole-catalog listing is needed.
     lazy val shorterPlans =
       if (n == 1) universe
       else filter match {
         case Some((ds, sp)) => pruneDisjunctiveLex(index, keys.init, k, ds, sp)
         case None           => pruneLexN(index, keys.init, k)
       }
-    def intersectShorter(deeper: Seq[FileScanPlan]): Seq[FileScanPlan] =
-      FileScanPlan.intersect(deeper, shorterPlans)
     // orderings per key (an IMAGE key orders by its result type, and its
     // declared input type must match the indexed column's — else the
     // derived stats would be nonsense); an uncertified key truncates to
@@ -383,12 +321,16 @@ object TopKPruning {
     }
     // catalog-side fast path: tuple-threshold walk + survivor filter
     // inside the store, O(survivors) transfer instead of N O(index)
-    // rowGroupStats fetches
+    // rowGroupStats fetches. Its survivors are live plans already: an
+    // unfiltered one-key answer stands as is (never a whole-catalog
+    // allFiles to intersect with)
     (filter match {
       case Some((ds, _)) => index.topKSurvivorsDisjunctiveLexN(keys, ds, k)
       case None          => index.topKSurvivorsLexN(keys, k)
     }) match {
-      case Some(plans) => return intersectShorter(FileScanPlan.intersect(plans, universe))
+      case Some(plans) =>
+        return if (n == 1 && filter.isEmpty) plans
+        else FileScanPlan.intersect(shorterPlans, plans)
       case None => () // fall through to the planner-side reference path
     }
     // computed keys: per-group stats DERIVED through the monotone image
@@ -415,9 +357,9 @@ object TopKPruning {
     def bestOf(i: Int, st: RowGroupStat): Option[Any] =
       if (keys(i).desc) st.max else st.min
 
-    // filter certificate (pruneDisjunctive's): for SOME disjunct, the
-    // sort interval holds on the stored bounds AND every other filter
-    // column certifies all-pass. Unfiltered mode certifies every group.
+    // filter certificate: for SOME disjunct, the sort interval holds on
+    // the stored bounds AND every other filter column is [[allPass]].
+    // Unfiltered mode certifies every group.
     val certify: RowGroupStat => Boolean = filter match {
       case None => _ => true
       case Some((ds, _)) =>
@@ -435,25 +377,14 @@ object TopKPruning {
           val stats = index.rowGroupStats(c).getOrElse(return shorterPlans)
           c -> ((oord, stats.map(s => (s.fileName, s.rowGroup) -> s).toMap))
         }.toMap
-        val ord0 = ords(0)
-        def insideSort(d: Disjunct, s: RowGroupStat): Boolean =
-          s.min.isDefined && s.max.isDefined && s.nullCount.isDefined &&
-            d.sortLo.forall { case (b, inc) =>
-              if (inc) ord0.gteq(s.min.get, b) else ord0.gt(s.min.get, b) } &&
-            d.sortHi.forall { case (b, inc) =>
-              if (inc) ord0.lteq(s.max.get, b) else ord0.lt(s.max.get, b) }
-        def allPass(d: Disjunct, file: String, rg: Int): Boolean =
-          d.others.forall { ob =>
-            val (o, m) = otherData(ob.col)
-            m.get((file, rg)).exists { s =>
-              s.nullCount.contains(0L) &&
-                ob.lo.forall { case (b, inc) =>
-                  s.min.exists(v => if (inc) o.gteq(v, b) else o.gt(v, b)) } &&
-                ob.hi.forall { case (b, inc) =>
-                  s.max.exists(v => if (inc) o.lteq(v, b) else o.lt(v, b)) }
-            }
+        s => s.min.isDefined && s.max.isDefined && s.nullCount.isDefined &&
+          ds.exists { d =>
+            inBounds(ords(0), s, d.sortLo, d.sortHi) &&
+              d.others.forall { ob =>
+                val (o, m) = otherData(ob.col)
+                m.get((s.fileName, s.rowGroup)).exists(allPass(o, _, ob.lo, ob.hi))
+              }
           }
-        s => ds.exists(d => insideSort(d, s) && allPass(d, s.fileName, s.rowGroup))
     }
     // sort-column nulls can win only when nulls sort first AND (for a
     // filtered query) some disjunct places no sort bound
@@ -474,8 +405,8 @@ object TopKPruning {
     // a better value than they hold
     val headIsString = index.indexedSchema.fields
       .find(_.name == head.col).exists(_.dataType == StringType)
-    // (n >= 2: single-key walks — reachable here only via an image head —
-    // carry no frequency candidates, matching the catalog's lexWalk gate)
+    // (n >= 2: single-key walks carry no frequency candidates, matching
+    // the catalog's lexWalk gate)
     def freqUsable(s: RowGroupStat): Boolean =
       n >= 2 && (!headIsString || head.desc || s.minExact.contains(true))
     val cand = scala.collection.mutable.ArrayBuffer.empty[(Tup, Long)]
@@ -580,11 +511,10 @@ object TopKPruning {
     }
     val prunedSet = statsHead.filterNot(keep)
       .map(s => (s.fileName, s.rowGroup)).toSet
-    val lexPlans = universe.flatMap { p =>
+    shorterPlans.flatMap { p =>
       val rgs = p.scanRowGroups.filterNot(rg => prunedSet((p.fileName, rg)))
       if (rgs.isEmpty) None else Some(p.copy(scanRowGroups = rgs))
     }
-    intersectShorter(lexPlans)
   }
 
   /** Two-key convenience face of [[pruneLexN]] (the r9 surface; specs
@@ -616,10 +546,11 @@ object TopKPruning {
   }
 
   /** Scan plans for `ORDER BY colName [DESC] LIMIT k`, pruned to the row
-    * groups that might hold a top-k row. `nullsFirst` must match the
-    * query's null ordering; the default mirrors Spark's
-    * (ASC ⇒ NULLS FIRST, DESC ⇒ NULLS LAST). Degrades to `allFiles()`
-    * whenever the catalog cannot certify a threshold. */
+    * groups that might hold a top-k row: the one-key case of
+    * [[pruneLexN]]. `nullsFirst` must match the query's null ordering;
+    * the default mirrors Spark's (ASC ⇒ NULLS FIRST, DESC ⇒ NULLS LAST).
+    * Degrades to `allFiles()` whenever the catalog cannot certify a
+    * threshold. */
   def prune(
       index: StatsIndex,
       colName: String,
@@ -632,62 +563,6 @@ object TopKPruning {
       colName: String,
       k: Long,
       descending: Boolean,
-      nullsFirst: Boolean): Seq[FileScanPlan] = {
-    require(k > 0, s"top-k needs k > 0, got $k")
-    // fetched only when the catalog fast path cannot answer
-    lazy val all = index.allFiles()
-    val dt = index.indexedSchema.fields.find(_.name == colName)
-      .getOrElse(return all).dataType
-    val ord = ordering(dt).getOrElse(return all)
-    // catalog-side fast path: threshold + survivor filter evaluated inside
-    // the store, O(survivors) transfer instead of rowGroupStats' O(index)
-    index.topKSurvivors(colName, k, descending, nullsFirst) match {
-      case Some(plans) => return plans
-      case None => () // not served/certified — planner-side reference path
-    }
-    val stats = index.rowGroupStats(colName).getOrElse(return all)
-
-    // guarantee bound: the value >= / <= which ALL of a group's non-null
-    // rows provably sit (DESC: its min; ASC: its max)
-    def guarantee(s: RowGroupStat): Option[Any] = if (descending) s.min else s.max
-    // contribution bound: the group's best possible row (DESC: its max)
-    def best(s: RowGroupStat): Option[Any] = if (descending) s.max else s.min
-    val better: (Any, Any) => Boolean =
-      if (descending) ord.gteq else ord.lteq
-
-    val certified = stats
-      .filter(s => guarantee(s).isDefined && s.nullCount.isDefined)
-      .sortBy(s => guarantee(s).get)(if (descending) ord.reverse else ord)
-    var covered = 0L
-    var threshold: Option[Any] = None
-    val it = certified.iterator
-    while (covered < k && it.hasNext) {
-      val s = it.next()
-      covered += s.rowCount - s.nullCount.get
-      if (covered >= k) threshold = guarantee(s)
-    }
-    threshold match {
-      case None => all // guarantees never covered k — no pruning possible
-      case Some(t) =>
-        val pruned = stats.filter { s =>
-          val mayHoldNullWinner =
-            nullsFirst && !s.nullCount.contains(0L) // unknown or > 0
-          val allNullLoser =
-            !nullsFirst && s.nullCount.contains(s.rowCount)
-          if (mayHoldNullWinner) false
-          else if (allNullLoser) true
-          else best(s) match {
-            case Some(b) => !better(b, t) // strictly worse than k rows
-            case None    => false         // unknown bound — keep
-          }
-        }.map(s => (s.fileName, s.rowGroup)).toSet
-        // subtract the provably-useless groups from the live plans (never
-        // intersect with a keep-set: a group missing from the stats rows
-        // must default to scanned)
-        all.flatMap { p =>
-          val rgs = p.scanRowGroups.filterNot(rg => pruned((p.fileName, rg)))
-          if (rgs.isEmpty) None else Some(p.copy(scanRowGroups = rgs))
-        }
-    }
-  }
+      nullsFirst: Boolean): Seq[FileScanPlan] =
+    pruneLexN(index, Seq(SortKeySpec(colName, descending, nullsFirst)), k)
 }

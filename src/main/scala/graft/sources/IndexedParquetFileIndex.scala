@@ -4,7 +4,7 @@ import graft.index.{FileScanPlan, RowLevelIndex, StatsBridge, StatsIndex}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualNullSafe, EqualTo, Expression, In, InSet, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
@@ -208,30 +208,20 @@ final class IndexedParquetFileIndex(
     * stays on the catalog path. With multiple bounds on one column the
     * FIRST of each side is kept: a looser bound reads a posting superset,
     * and intersecting a superset is still sound (over-scan, never wrong).
-    * Null literals never bound (comparison with NULL is never TRUE). */
+    * Null literals never bound (comparison with NULL is never TRUE).
+    * Comparisons are read by [[StatsBridge.Comparison]]. */
   private def rangeBounds(conjuncts: Seq[Expression])
       : Seq[(String, (Any, Boolean), (Any, Boolean))] = {
-    def indexed(a: Attribute): Boolean = rowLevelIndexes.contains(a.name)
     def v(l: Literal): Any = CatalystTypeConverters.convertToScala(l.value, l.dataType)
     val lowers = scala.collection.mutable.LinkedHashMap.empty[String, (Any, Boolean)]
     val uppers = scala.collection.mutable.LinkedHashMap.empty[String, (Any, Boolean)]
-    def addLo(a: Attribute, l: Literal, inc: Boolean): Unit =
-      if (indexed(a) && l.value != null && !lowers.contains(a.name))
-        lowers(a.name) = (v(l), inc)
-    def addHi(a: Attribute, l: Literal, inc: Boolean): Unit =
-      if (indexed(a) && l.value != null && !uppers.contains(a.name))
-        uppers(a.name) = (v(l), inc)
     conjuncts.foreach {
-      case GreaterThan(a: Attribute, l: Literal)        => addLo(a, l, inc = false)
-      case GreaterThanOrEqual(a: Attribute, l: Literal) => addLo(a, l, inc = true)
-      case LessThan(a: Attribute, l: Literal)           => addHi(a, l, inc = false)
-      case LessThanOrEqual(a: Attribute, l: Literal)    => addHi(a, l, inc = true)
-      // literal-first mirrors: l < a ⇔ a > l, etc.
-      case GreaterThan(l: Literal, a: Attribute)        => addHi(a, l, inc = false)
-      case GreaterThanOrEqual(l: Literal, a: Attribute) => addHi(a, l, inc = true)
-      case LessThan(l: Literal, a: Attribute)           => addLo(a, l, inc = false)
-      case LessThanOrEqual(l: Literal, a: Attribute)    => addLo(a, l, inc = true)
-      case _                                            => ()
+      // an equality bounds both sides: the point path answers it
+      case StatsBridge.Comparison(a, lo, hi)
+          if rowLevelIndexes.contains(a.name) && (lo.isEmpty || hi.isEmpty) =>
+        lo.foreach { case (l, inc) => lowers.getOrElseUpdate(a.name, (v(l), inc)) }
+        hi.foreach { case (l, inc) => uppers.getOrElseUpdate(a.name, (v(l), inc)) }
+      case _ => ()
     }
     lowers.keys.toSeq.filter(uppers.contains)
       .map(c => (c, lowers(c), uppers(c)))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
   * totals from the catalog's O(1) counts: neither a filtered `listFiles`
   * nor a fired top-k rewrite fetches every plan of the catalog to count
   * it. Fixture: one file, 4000 rows in 500-row row groups (8 groups),
-  * `id` ascending. */
+  * `id` ascending, `g = id % 7`, both indexed. */
 class PruneRecordSpec extends SparkSpec {
 
   /** Delegates to the catalog and counts `allFiles()` calls. */
@@ -39,7 +39,7 @@ class PruneRecordSpec extends SparkSpec {
       .coalesce(1)
       .write.option("parquet.block.row.count.limit", "500")
       .mode("overwrite").parquet(dir)
-    val (index, schema) = IndexedParquet.buildIndex(spark, dir, Seq("id"), s"$base/statsdb")
+    val (index, schema) = IndexedParquet.buildIndex(spark, dir, Seq("id", "g"), s"$base/statsdb")
     val counting = new CountingIndex(index)
     val (df, fi) = IndexedParquet.read(spark, dir, counting, schema)
     (index, counting, df, fi)
@@ -69,6 +69,20 @@ class PruneRecordSpec extends SparkSpec {
     assert(counting.allFilesCalls === 0)
     val exec = fi.lastExecution.getOrElse(fail("the top-k rewrite recorded nothing"))
     assert(exec.route === Seq("topk(id)"))
+    assert((exec.totalFiles.toLong, exec.totalRowGroups.toLong) === ((nf, ng)))
+    assert(exec.scannedRowGroups === 1)
+  }
+
+  test("a fired multi-key top-k fetches no allFiles and records catalogCounts totals") {
+    val (index, counting, df, fi) = fixture
+    val (nf, ng) = index.catalogCounts().get
+    fi.lastExecution = None
+    counting.allFilesCalls = 0
+    val rows = df.orderBy(col("id").desc, col("g")).limit(3).collect()
+    assert(rows.map(_.getLong(0)).toSeq === Seq(3999L, 3998L, 3997L))
+    assert(counting.allFilesCalls === 0)
+    val exec = fi.lastExecution.getOrElse(fail("the top-k rewrite recorded nothing"))
+    assert(exec.route === Seq("topk-lex2(id,g)"))
     assert((exec.totalFiles.toLong, exec.totalRowGroups.toLong) === ((nf, ng)))
     assert(exec.scannedRowGroups === 1)
   }

@@ -246,6 +246,19 @@ class RoutingSpec extends SparkSpec {
     assert(exec.route === Seq("rowlevel-range(l_orderkey)"))
   }
 
+  test("literal-first bounds route as a posting-table range read") {
+    val dir = sf("sf0.001")
+    // `a <= k && k <= b`: the lower bound in its literal-first mirror
+    val pred = lit(1000L) <= col("l_orderkey") && col("l_orderkey") <= lit(1100L)
+    def shape(d: org.apache.spark.sql.DataFrame) = d.filter(pred)
+      .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
+      .orderBy("l_returnflag").collect().toSeq
+    val got = shape(graft.operators.Indexed.lineitemRouted(spark, dir))
+    val exec = graft.operators.Indexed.lastRoutedExecution(spark, dir).get
+    assert(exec.route === Seq("rowlevel-range(l_orderkey)"))
+    assert(got === shape(spark.read.parquet(s"$dir/lineitem.parquet")))
+  }
+
   test("extra conjuncts intersect: routing composes with stats pruning") {
     val (df, fi) = routed()
     val pred = col("key") === 4242L && col("seq") < 100

@@ -61,6 +61,15 @@ class StatsAggPushdownSpec extends SparkSpec {
     assert(r.getLong(5) === 2000L - 667L) // 667 nulls: i%3==0 for 0..1999
   }
 
+  test("a literal-first bound at the column minimum keeps the global fold") {
+    // `0 <= k` is the mirror of `k >= 0`: vacuous on k's 0..1999 stats
+    def shape(d: DataFrame) = d.filter(lit(0L) <= col("k"))
+      .agg(min(col("k")).as("mn"), max(col("k")).as("mx"), count(lit(1)).as("n"))
+    val agg = shape(indexed)
+    assert(folded(agg), agg.queryExecution.optimizedPlan.toString)
+    assert(agg.collect().head === shape(plain).collect().head)
+  }
+
   // value-aligned grouping fixture: g = i/500 is constant within every
   // 50-row group (boundaries align), null every 7th row so the NULL
   // group and mixed null/value groups are genuinely exercised

@@ -186,6 +186,22 @@ class TopKPruningSpec extends SparkSpec {
       s"kept ${exec.scannedRowGroups} of ${exec.totalRowGroups}")
   }
 
+  test("a literal-first sort-column bound takes the filtered top-k path") {
+    val dir = sf("sf0.001")
+    val df = graft.operators.Indexed.lineitemIndexed(spark, dir)
+    val ord = Seq(col("l_orderkey"), col("l_linenumber"))
+    // `100 <= l_orderkey` is the mirror of `l_orderkey >= 100`
+    val pred = lit(100L) <= col("l_orderkey")
+    val got = df.filter(pred).orderBy(ord: _*).limit(5)
+      .select("l_orderkey", "l_linenumber").collect()
+    val exec = graft.operators.Indexed.lastExecution(spark, dir).get
+    assert(exec.route === Seq("topk-filtered(l_orderkey)"), s"${exec.route}")
+    val want = spark.read.parquet(s"$dir/lineitem.parquet")
+      .filter(pred).orderBy(ord: _*).limit(5)
+      .select("l_orderkey", "l_linenumber").collect()
+    assert(got === want)
+  }
+
   test("an OTHER-column filter on an UNCLUSTERED layout leaves the declarative plan") {
     val dir = sf("sf0.001")
     val df = graft.operators.Indexed.lineitemIndexed(spark, dir)
